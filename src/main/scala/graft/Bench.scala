@@ -629,7 +629,7 @@ object Bench {
     // sf1_probe block) still lands in ./bench.json and in the committed
     // bench_history.jsonl, and the verbose line is printed FIRST so a
     // full log keeps both. Measurement methodology is unchanged — this
-    // is output framing only (OPTIMIZATION_r19.md "bench line fix").
+    // is output framing only.
     val slim =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,""" +
         s""""total_min":$totalMin,"calib":$calibJson,"calib_mt":$calibMtJson,""" +

@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificIn
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{And => FAnd, EqualTo => FEq, Filter => SourceFilter, GreaterThan => FGt, GreaterThanOrEqual => FGe, In => FIn, LessThan => FLt, LessThanOrEqual => FLe, Or => FOr}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -285,7 +284,8 @@ object HeaderAggReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** Data scan: record-aligned partitions over every section. */
+/** Data scan: record-aligned splits over every section, packed into
+  * core-sized tasks. */
 class PointCloudScan(
     kind: FormatKind,
     resolved: ResolvedPointCloud,
@@ -344,6 +344,7 @@ class PointCloudScan(
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     require(provider != null, "streaming requires the owning provider")
+    streaming = true
     // filters claimed as pushed MUST be applied by the streaming readers
     // too — this scan (with its pushedFilters) is what Spark plans from;
     // the full conjunct set rides along for COPC planning-time pruning
@@ -391,73 +392,39 @@ class PointCloudScan(
       else java.util.OptionalLong.empty()
   }
 
-  /** XYZ token layout = the full (possibly user-supplied) table schema
-    * minus the generated id columns — positions in the text line, which
-    * pruning must not disturb. */
-  private def xyzTokenSchema: StructType =
-    StructType(tableSchema.fields.filterNot(f =>
-      f.name == PointCloudUtil.FidCol || f.name == PointCloudUtil.PidCol))
-
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
     s"graft ${kind.name} scan, ${resolved.sections.size} section(s), " +
+      (if (streaming) "" else {
+        val tasks = planInputPartitions()
+        s"${tasks.map(_.asInstanceOf[PackedPartition].splits.length).sum} split(s) " +
+          s"in ${tasks.length} task(s), "
+      }) +
       s"columns [${schema.fieldNames.mkString(",")}]" +
       (if (pushedFilters.nonEmpty) s", PushedFilters: [${pushedFilters.mkString(", ")}]" else "") +
       (if (limit >= 0) s", PushedLimit: $limit" else "") +
       (if (copcMaxLevel >= 0) s", PushedMaxLevel: $copcMaxLevel" else "")
 
-  /** Split each section into runs of whole records sized by
-    * `spark.sql.files.maxPartitionBytes` (replaces the reference's
-    * Hadoop-InputFormat split alignment, FixedLengthBinarySection
-    * InputFormat.scala:81-92). XYZ text sections (unknown count) get one
-    * partition per file. */
+  /** Set once this scan becomes a stream: its description then describes
+    * no batch plan (each micro-batch plans its own files). */
+  @volatile private var streaming = false
+
+  /** The last plan with the section set it was made from: Spark renders
+    * [[description]] for every explain string of a query (SQL execution
+    * events included), and it must not re-plan each time. A runtime
+    * filter swaps the section set, which invalidates the plan. */
+  @volatile private var lastPlan: (Seq[SectionWithFid], Array[InputPartition]) = null
+
+  /** The sections' splits packed into core-sized tasks ([[SplitPlanner]]). */
   override def planInputPartitions(): Array[InputPartition] = {
-    val maxBytes = SQLConf.get.filesMaxPartitionBytes
-    // one rendered schema string per SECTION, shared by all its splits:
-    // StructType.json allocates a fresh String per call, and distinct
-    // instances defeat Java serialization's identity-based back-refs, so
-    // a task that carries many splits (coalesce/union) would otherwise
-    // serialize one full copy per split (observed as >1 MiB tasks)
-    val xyzSchemaJson = if (kind == FormatKind.Xyz) xyzTokenSchema.json else null
-    val all: Array[InputPartition] = sections.flatMap { sf =>
-      val s = sf.section
-      if (kind == FormatKind.Xyz) {
-        Seq(XyzPartition(s.location, sf.fid, xyzSchemaJson))
-      } else sf.laz match {
-        case Some(lz) =>
-          // COPC chunk skipping: octree bounds vs the pushed x/y/z box
-          // (exactness preserved by the record predicate on whatever
-          // still decodes) + the declared copc.maxlevel preview bound
-          LazPlanning.partitions(s, sf.fid, lz, maxBytes,
-            CopcPrune.keepMask(lz, planFilters, copcMaxLevel))
-        case None =>
-          val perPartition = math.max(1L, maxBytes / math.max(1, s.stride))
-          val schemaJson = s.schema.json
-          (0L until s.count by perPartition).map { start =>
-            val n = math.min(perPartition, s.count - start)
-            BinaryPartition(s.location, s.offset, start, n, s.stride,
-              s.littleEndian, sf.fid, schemaJson)
-          }
-      }
-    }.toArray
-    if (limit < 0) all
+    val ss = sections
+    val last = lastPlan
+    if (last != null && (last._1 eq ss)) last._2
     else {
-      // pushed limit (only without pushed filters): keep the leading
-      // partitions covering exactly `limit` records — LIMIT 10 over a
-      // thousand files plans one partition of 10 records, not a scan
-      var remaining = limit.toLong
-      all.iterator.takeWhile(_ => remaining > 0).map {
-        case b: BinaryPartition =>
-          val take = math.min(b.numRecords, remaining)
-          remaining -= take
-          b.copy(numRecords = take)
-        case lp: LazPartition =>
-          val take = math.min(lp.numRecords, remaining)
-          remaining -= take
-          lp.truncatedTo(take)
-        case other => other
-      }.toArray
+      val tasks = SplitPlanner.plan(kind, ss, tableSchema, planFilters, copcMaxLevel, limit)
+      lastPlan = (ss, tasks)
+      tasks
     }
   }
 
@@ -771,8 +738,8 @@ private[graft] object CopcPrune {
 private[graft] object LazPlanning {
   def partitions(s: graft.pointcloud.Section, fid: Int,
       lz: graft.pointcloud.las.laz.LazInfo, maxBytes: Long,
-      keep: Array[Boolean] = null): Seq[LazPartition] = {
-    val schemaJson = s.schema.json
+      keep: Array[Boolean] = null, sectionSchemaJson: String = null): Seq[LazPartition] = {
+    val schemaJson = if (sectionSchemaJson != null) sectionSchemaJson else s.schema.json
     val out = Seq.newBuilder[LazPartition]
     var i = 0
     var off = lz.firstChunkOffset
@@ -820,50 +787,55 @@ class PointCloudReaderFactory(
     pushedFilters: Array[SourceFilter] = Array.empty)
   extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val readSchema = DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
+  // parsed once per task, not once per split of a packed task
+  @transient private lazy val readSchema =
+    DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
+  @transient private lazy val tableSchema =
+    DataType.fromJson(tableSchemaJson).asInstanceOf[StructType]
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
+      case PackedPartition(splits) => new PackedReader(splits, createReader)
       case p: BinaryPartition => new BinarySectionReader(p, readSchema, predicate(p))
       case p: LazPartition => new LazSectionReader(p, readSchema, lazPredicate(p))
       case p: XyzPartition => new XyzReader(p, readSchema)
     }
-  }
 
   /** Fixed-stride binary sections decode vectorized (ColumnarBatch) —
     * raw and LAZ alike (a decoded chunk IS a run of fixed-stride
-    * records); XYZ text stays row-oriented. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.isInstanceOf[BinaryPartition] || partition.isInstanceOf[LazPartition]
+    * records); XYZ text stays row-oriented. A scan plans one kind of
+    * split only, so a packed task is columnar iff its first split is. */
+  override def supportColumnarReads(partition: InputPartition): Boolean = partition match {
+    case PackedPartition(splits) => supportColumnarReads(splits.head)
+    case _ => partition.isInstanceOf[BinaryPartition] || partition.isInstanceOf[LazPartition]
+  }
 
   override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val readSchema = DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
+      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     partition match {
+      case PackedPartition(splits) => new PackedReader(splits, createColumnarReader)
       case p: BinaryPartition => new BinarySectionColumnarReader(p, readSchema, predicate(p))
       case p: LazPartition => new LazSectionColumnarReader(p, readSchema, lazPredicate(p))
     }
-  }
 
-  /** Pushed-filter evaluator compiled against this partition's section
+  /** Pushed-filter evaluator compiled against this split's section
     * schema (sections differ across merged files); null when nothing was
     * pushed. */
   private def predicate(p: BinaryPartition): RecordPredicate =
     if (pushedFilters.isEmpty) null
-    else new RecordPredicate(pushedFilters,
-      DataType.fromJson(tableSchemaJson).asInstanceOf[StructType],
+    else new RecordPredicate(pushedFilters, tableSchema,
       Section(p.location, p.sectionOffset, p.numRecords, p.littleEndian,
         DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType], p.stride),
       p.fid)
 
-  /** Same, over a LAZ partition's DECODED records (a decoded chunk is a
+  /** Same, over a LAZ split's DECODED records (a decoded chunk is a
     * run of ordinary fixed-stride LAS records). The batch builder keeps
     * filters residual for compressed tables, but the STREAMING path may
     * claim filters as pushed before any .laz file lands — the readers
     * must honor them or claimed-pushed rows leak unfiltered. */
   private def lazPredicate(p: LazPartition): RecordPredicate =
     if (pushedFilters.isEmpty) null
-    else new RecordPredicate(pushedFilters,
-      DataType.fromJson(tableSchemaJson).asInstanceOf[StructType],
+    else new RecordPredicate(pushedFilters, tableSchema,
       Section(p.location, 0, p.numRecords, littleEndian = true,
         DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType], p.stride),
       p.fid)

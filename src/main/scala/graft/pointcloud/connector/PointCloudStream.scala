@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -40,7 +39,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * after it — rotate whole directories, not random files, to keep the
   * tail short.
   * Headers are read per batch on the driver (exactly like the batch
-  * path); partitions are the same record-aligned binary partitions.
+  * path), and [[SplitPlanner]] cuts and packs each batch's splits
+  * exactly as it does for a batch scan.
   *
   * A file enters the offset only once its header parses AND the file is
   * at least as long as the header promises (offset + count × stride): a
@@ -245,21 +245,13 @@ class PointCloudMicroBatchStream(
 
   override def stop(): Unit = ()
 
-  /** XYZ token layout: the table schema minus the generated id columns
-    * (same as the batch scan's xyzTokenSchema) — rendered once, shared by
-    * every XYZ partition. */
-  private lazy val xyzSchemaJson: String =
-    StructType(tableSchema.fields.filterNot(f =>
-      f.name == PointCloudUtil.FidCol || f.name == PointCloudUtil.PidCol)).json
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     // the list is append-only, so "already processed" is an index
     // comparison: everything below start's TOTAL was in start (whether
     // the name survives in its tail or was compacted into its base)
     val startTotal = start.asInstanceOf[FileListOffset].total
     val endOff = end.asInstanceOf[FileListOffset]
-    val maxBytes = SQLConf.get.filesMaxPartitionBytes
-    endOff.files.zipWithIndex.flatMap { case (path, i) =>
+    val sections = endOff.files.zipWithIndex.flatMap { case (path, i) =>
       // fid = GLOBAL index in the append-only offset list (base + tail
       // index): stable across batches, restarts, and compaction
       val fid = math.toIntExact(endOff.base + i)
@@ -267,64 +259,45 @@ class PointCloudMicroBatchStream(
       else try {
         // admitted this run → header already read at admission time;
         // replay after restart falls back to reading it here
-        val sections = synchronized(pendingSections.remove(path))
+        val fileSections = synchronized(pendingSections.remove(path))
           .getOrElse(provider.streamSections(path, options))
-        if (kind == FormatKind.Xyz) {
-          // text sections have no header count: one partition per file,
-          // exactly like the batch planner — the file is already the unit
-          // of streaming progress, so per-file granularity is natural here
-          sections.map(fs => XyzPartition(fs.section.location, fid, xyzSchemaJson))
-        } else sections.filter { fs =>
-          // header file-skip against the declared box: a whole file
-          // outside it plans ZERO partitions (it is still admitted into
-          // the offset list — progress bookkeeping is not planning)
-          planFilters.isEmpty || SectionSkip.mayMatch(
-            SectionWithFid(fs.section, fid, fs.lasStats, fs.laz), planFilters)
-        }.flatMap { fs =>
-          val section = fs.section
-          fs.laz match {
-            case Some(lz) =>
-              // same COPC chunk skipping as the batch planner, from the
-              // full conjunct set (bbox subscription + anything claimed);
-              // the readers evaluate pushedFilters exactly on whatever
-              // still decodes, so pruning only removes provably-empty IO
-              // a declared preview over a file without a COPC octree
-              // index must FAIL the stream (bbox precedent: silent
-              // over-delivery is worse) — thrown as the marker the
-              // catch below re-throws past the skip-unreadable path
-              if (copcMaxLevel >= 0 && lz.chunkLevels == null && lz.numChunks > 0)
-                throw new CopcPreviewUnhonorable(
-                  s"copc.maxLevel declared but $path carries no COPC " +
-                    "octree index, so the coarse preview cannot be " +
-                    "honored there; read it without the option instead")
-              val keep = CopcPrune.keepMask(lz, planFilters, copcMaxLevel)
-              if (keep != null) logInfo(s"COPC stream pruning $path: " +
-                s"${keep.count(k => !k)}/${lz.numChunks} chunks skipped " +
-                s"(${planFilters.length} conjuncts)")
-              LazPlanning.partitions(section, fid, lz, maxBytes, keep)
-            case None =>
-              if (copcMaxLevel >= 0 && section.count != 0)
-                throw new CopcPreviewUnhonorable(
-                  s"copc.maxLevel declared but $path is not compressed " +
-                    "COPC, so the coarse preview cannot be honored there")
-              val perPartition = math.max(1L, maxBytes / math.max(1, section.stride))
-              // render once per section: splits share the String instance so a
-              // multi-split task serializes one copy (see PointCloudScan)
-              val schemaJson = section.schema.json
-              (0L until section.count by perPartition).map { startRec =>
-                val n = math.min(perPartition, section.count - startRec)
-                BinaryPartition(section.location, section.offset, startRec, n,
-                  section.stride, section.littleEndian, fid, schemaJson)
-              }
+        // header file-skip against the declared box: a whole file outside
+        // it plans ZERO splits (it is still admitted into the offset list
+        // — progress bookkeeping is not planning)
+        val kept = fileSections
+          .map(fs => SectionWithFid(fs.section, fid, fs.lasStats, fs.laz))
+          .filter(sf => kind == FormatKind.Xyz || planFilters.isEmpty ||
+            SectionSkip.mayMatch(sf, planFilters))
+        // a declared preview over a file without a COPC octree index must
+        // FAIL the stream (bbox precedent: silent over-delivery is worse)
+        // — thrown as the marker the catch below re-throws past the
+        // skip-unreadable path
+        if (copcMaxLevel >= 0) kept.foreach { sf =>
+          sf.laz match {
+            case Some(lz) if lz.chunkLevels == null && lz.numChunks > 0 =>
+              throw new CopcPreviewUnhonorable(
+                s"copc.maxLevel declared but $path carries no COPC " +
+                  "octree index, so the coarse preview cannot be " +
+                  "honored there; read it without the option instead")
+            case None if sf.section.count != 0 =>
+              throw new CopcPreviewUnhonorable(
+                s"copc.maxLevel declared but $path is not compressed " +
+                  "COPC, so the coarse preview cannot be honored there")
+            case _ =>
           }
         }
+        kept
       } catch {
         case e: CopcPreviewUnhonorable => throw e // a contract breach, not a bad file
         case e: Exception =>
           logWarning(s"Skipping unreadable ${kind.name} file $path: ${e.getMessage}")
           Nil
       }
-    }.toArray
+    }
+    // the batch planner: the same splits (COPC chunk skipping from the
+    // full conjunct set; the readers evaluate pushedFilters exactly on
+    // whatever still decodes) packed into the same core-sized tasks
+    SplitPlanner.plan(kind, sections, tableSchema, planFilters, copcMaxLevel)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -120,9 +120,9 @@ class CopcSpec extends SparkTestBase {
       .map(_.toSeq.toString).sorted.toSeq
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     try {
-      val nFull = spark.read.las(copcDir).rdd.getNumPartitions
+      val nFull = plannedSplits(spark.read.las(copcDir)).size
       val prunedDf = spark.read.las(copcDir).where($"x" >= 20000 && $"x" <= 40000)
-      assert(prunedDf.rdd.getNumPartitions < nFull,
+      assert(plannedSplits(prunedDf).size < nFull,
         "bbox read must plan fewer chunk partitions than the full scan")
       assert(prunedDf.collect().map(_.toSeq.toString).sorted.toSeq == all)
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
@@ -235,8 +235,8 @@ class CopcSpec extends SparkTestBase {
     // and it prunes at planning, not just at the reader
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     try {
-      val nFull = spark.read.las(dir).rdd.getNumPartitions
-      assert(got.rdd.getNumPartitions < nFull)
+      val nFull = plannedSplits(spark.read.las(dir)).size
+      assert(plannedSplits(got).size < nFull)
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     // malformed boxes fail fast with the offending token
     val err = intercept[Exception] {
@@ -415,9 +415,9 @@ class CopcSpec extends SparkTestBase {
     assert(info.gpsRange != null)
     val full = spark.read.las(dir)
     assert(full.count() == 16000)
-    val nFull = full.rdd.getNumPartitions
+    val nFull = plannedSplits(full).size
     val sliced = spark.read.las(dir).where($"time" >= 100000.0)
-    assert(sliced.rdd.getNumPartitions < nFull,
+    assert(plannedSplits(sliced).size < nFull,
       "a time-range predicate must skip the out-of-range file at planning")
     assert(sliced.count() == 8000)
     assert(sliced.agg(min($"time")).head().getDouble(0) == 100000.0)
@@ -463,8 +463,8 @@ class CopcSpec extends SparkTestBase {
     val batch = spark.read.format("las")
       .option("timerange", "100500,*").load(dir)
     assert(batch.count() == wantN)
-    assert(batch.rdd.getNumPartitions <
-      spark.read.las(dir).rdd.getNumPartitions)
+    assert(plannedSplits(batch).size <
+      plannedSplits(spark.read.las(dir)).size)
     // malformed windows fail fast
     val e1 = intercept[Exception] {
       spark.read.format("las").option("timerange", "9,1").load(dir).count()
@@ -525,12 +525,12 @@ class CopcSpec extends SparkTestBase {
     val (_, info, _) = lazInfoOf(dir)
     assert(info.gpsRange == null, "0/0 sentinel must not become a range")
     val full = spark.read.las(dir)
-    val nFull = full.rdd.getNumPartitions
+    val nFull = plannedSplits(full).size
     // nulls never match a range predicate: zero rows, but the FILE was
     // not skipped at planning (partition count unchanged — the pruning
     // had no gps evidence to act on)
     val sliced = spark.read.las(dir).where($"time" >= 1.0 && $"time" <= 2.0)
-    assert(sliced.rdd.getNumPartitions == nFull)
+    assert(plannedSplits(sliced).size == nFull)
     assert(sliced.count() == 0)
     assert(full.count() == 4000)
   }
@@ -618,9 +618,9 @@ class CopcSpec extends SparkTestBase {
     // bbox read over the union: pruned at planning, exact at the record
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     try {
-      val nFull = spark.read.las(dir).rdd.getNumPartitions
+      val nFull = plannedSplits(spark.read.las(dir)).size
       val pruned = spark.read.las(dir).where($"x" >= 10000 && $"x" <= 25000)
-      assert(pruned.rdd.getNumPartitions < nFull,
+      assert(plannedSplits(pruned).size < nFull,
         "bbox over the appended union must still prune chunk partitions")
       assert(pruned.count() ==
         pts.filter($"x" >= 10000 && $"x" <= 25000).count())
@@ -650,9 +650,9 @@ class CopcSpec extends SparkTestBase {
     // the compacted layout prunes at planning like any fresh writeCopc
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     try {
-      val nFull = spark.read.las(compact).rdd.getNumPartitions
+      val nFull = plannedSplits(spark.read.las(compact)).size
       val pruned = spark.read.las(compact).where($"x" >= 10000 && $"x" <= 25000)
-      assert(pruned.rdd.getNumPartitions < nFull)
+      assert(plannedSplits(pruned).size < nFull)
       assert(pruned.count() ==
         pts.filter($"x" >= 10000 && $"x" <= 25000).count())
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
@@ -688,9 +688,9 @@ class CopcSpec extends SparkTestBase {
     // split chunks still prune: a narrow x-box reads fewer partitions
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     try {
-      val nFull = spark.read.las(dir).rdd.getNumPartitions
+      val nFull = plannedSplits(spark.read.las(dir)).size
       val pruned = spark.read.las(dir).where($"x" >= 10000 && $"x" <= 25000)
-      assert(pruned.rdd.getNumPartitions < nFull)
+      assert(plannedSplits(pruned).size < nFull)
       assert(pruned.count() ==
         pts.filter($"x" >= 10000 && $"x" <= 25000).count())
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
@@ -884,9 +884,9 @@ class CopcSpec extends SparkTestBase {
     // chunk pruning still fires through the page graph
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
     try {
-      val nFull = spark.read.las(dir).rdd.getNumPartitions
+      val nFull = plannedSplits(spark.read.las(dir)).size
       val pruned = spark.read.las(dir).where($"x" >= 10000 && $"x" <= 25000)
-      assert(pruned.rdd.getNumPartitions < nFull,
+      assert(plannedSplits(pruned).size < nFull,
         "bbox pruning must bind through the paged hierarchy")
       assert(pruned.count() ==
         pts.filter($"x" >= 10000 && $"x" <= 25000).count())

@@ -197,10 +197,10 @@ class PointCloudSpec extends SparkTestBase {
     pts(0).coalesce(1).writeLas(dir1)      // x in [0, 999]
     pts(10000).coalesce(1).writeLas(dir2)  // x in [10000, 10999]
     val both = spark.read.las(dir1, dir2)
-    val all = both.rdd.getNumPartitions
+    val all = plannedSplits(both).size
     val filtered = both.filter($"x" > 5000)
     // only the second file's section survives planning
-    assert(filtered.rdd.getNumPartitions < all, s"$all not pruned")
+    assert(plannedSplits(filtered).size < all, s"$all not pruned")
     assert(filtered.count() == 1000)
     // filters stay post-scan: a predicate inside the surviving range
     assert(both.filter($"x" > 10500).count() == 499)
@@ -260,15 +260,25 @@ class PointCloudSpec extends SparkTestBase {
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try {
       spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-      val scan = spark.read.las(dir).queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.head.scan.asInstanceOf[graft.pointcloud.connector.PointCloudScan]
-      val parts = scan.planInputPartitions().collect {
+      val parts = plannedSplits(spark.read.las(dir)).collect {
         case p: graft.pointcloud.connector.BinaryPartition => p
       }
       assert(parts.length > 1)
       assert(parts.forall(_.sectionSchemaJson eq parts.head.sectionSchemaJson))
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    // equal schemas of DIFFERENT sections intern to one String too, so a
+    // task packing 25 tiles serializes the schema once, not 25 times
+    val tilesDir = tmpDir("schemashare-tiles")
+    samplePoints.repartition(25).writeLas(tilesDir)
+    val tasks = plannedTasks(spark.read.las(tilesDir)).map {
+      case p: graft.pointcloud.connector.PackedPartition => p
+    }
+    val splits = tasks.flatMap(_.splits).map {
+      case p: graft.pointcloud.connector.BinaryPartition => p
+    }
+    assert(splits.map(_.fid).distinct.size == 25)
+    assert(tasks.size == 4 && tasks.forall(_.splits.length > 1), tasks.map(_.splits.length))
+    assert(splits.forall(_.sectionSchemaJson eq splits.head.sectionSchemaJson))
   }
 
   test("record-level pushdown compares in the exposed (widened) domain") {
@@ -430,10 +440,13 @@ class PointCloudSpec extends SparkTestBase {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }.head.scan.asInstanceOf[graft.pointcloud.connector.PointCloudScan]
     assert(scan.filterAttributes().map(_.describe()).toSeq == Seq("fid"))
-    val before = scan.planInputPartitions().length
+    def splits = scan.planInputPartitions().toSeq.flatMap {
+      case p: graft.pointcloud.connector.PackedPartition => p.splits.toSeq
+    }
+    val before = splits.length
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("fid", Array(0))))
-    val after = scan.planInputPartitions().length
+    val after = splits.length
     assert(after > 0 && after < before, s"$after vs $before")
     // e2e: joining against a one-file manifest stays correct
     val manifest = Seq(0).toDF("f")
