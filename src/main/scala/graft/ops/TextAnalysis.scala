@@ -33,10 +33,6 @@ object TextAnalysis {
     * this struct instead of re-splitting the text per metric. */
   def tokenStats(text: Column): Column = exprs.token_stats(text, Stopwords)
 
-  /** Whitespace token count (the fast path; a BPE-ish subword estimate is
-    * `bpeTokenEstimate`). */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** BPE-ish token estimate: words are roughly ceil(len/4) subword units
     * — the standard chars/4 heuristic, summed per word so whitespace
     * never counts. Kept as the cheap screening path; real counts are
@@ -60,18 +56,6 @@ object TextAnalysis {
     * strict null on any out-of-vocab id — see
     * [[graft.functions.BpeUtil.decode]]). */
   def bpeDecode(ids: Column): Column = graft.functions.bpe.bpe_decode(ids)
-
-  def stopwordCount(text: Column): Column =
-    exprs.count_in_set(tokens(text), Stopwords)
-
-  def stopwordRatio(text: Column): Column =
-    stopwordCount(text).cast("double") / tokenCount(text)
-
-  /** Mean word length — short-word soup and run-on garbage both drift
-    * away from natural-text values. */
-  def meanWordLength(text: Column): Column =
-    aggregate(tokens(text), lit(0L), (acc, w) => acc + length(w))
-      .cast("double") / tokenCount(text)
 
   /** Composite quality score in [0,1]:
     * 0.5·min(tokens/100,1) + 0.3·min(stopword_ratio·5,1) + 0.2·lenScore

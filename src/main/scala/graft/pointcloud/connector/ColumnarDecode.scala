@@ -92,13 +92,13 @@ class BinarySectionColumnarReader(p: BinaryPartition, readSchema: StructType,
   * state chains point to point), then column-filled through the SAME
   * [[ColumnarFiller]] kernel as the raw reader, so the scan side of a
   * `.laz` table also feeds whole-stage codegen via ColumnarToRow
-  * instead of per-row decode dispatch. */
-class LazSectionColumnarReader(p: LazPartition, readSchema: StructType,
-    predicate: RecordPredicate = null)
+  * instead of per-row decode dispatch. `chunkDecoder` is the task's,
+  * and decodes only the layers holding the read and predicate columns
+  * ([[LazLayers]]). */
+class LazSectionColumnarReader(p: LazPartition, sectionSchema: StructType,
+    readSchema: StructType, predicate: RecordPredicate,
+    chunkDecoder: graft.pointcloud.las.laz.LazChunkDecoder)
   extends PartitionReader[ColumnarBatch] {
-
-  private val sectionSchema = DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
-  private val chunkDecoder = new graft.pointcloud.las.laz.LazChunkDecoder(p.format, p.stride)
 
   private val path = new Path(p.location)
   private val in = path.getFileSystem(LocalIo.conf).open(path)
@@ -124,10 +124,7 @@ class LazSectionColumnarReader(p: LazPartition, readSchema: StructType,
         if (chunkIdx >= p.chunkOffsets.length) return false
         count = p.chunkCounts(chunkIdx)
       } while (count == 0)
-      val compressed = new Array[Byte](p.chunkBytes(chunkIdx).toInt)
-      in.seek(p.chunkOffsets(chunkIdx))
-      in.readFully(compressed)
-      val records = chunkDecoder.decode(compressed, count.toInt)
+      val records = LazDecoders.readChunk(in, chunkDecoder, p, chunkIdx)
       val buf = ByteBuffer.wrap(records).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       val firstPid = p.startRecord + recordsBefore
       if (predicate == null) {

@@ -402,9 +402,15 @@ class PointCloudScan(
           s"in ${tasks.length} task(s), "
       }) +
       s"columns [${schema.fieldNames.mkString(",")}]" +
+      lazLayers.fold("")(", " + _) +
       (if (pushedFilters.nonEmpty) s", PushedFilters: [${pushedFilters.mkString(", ")}]" else "") +
       (if (limit >= 0) s", PushedLimit: $limit" else "") +
       (if (copcMaxLevel >= 0) s", PushedMaxLevel: $copcMaxLevel" else "")
+
+  /** The decoded LAZ layers, for [[description]] (rendered once per
+    * explain string, so computed once). */
+  private lazy val lazLayers =
+    LazLayers.describe(resolved.sections, LazLayers.columns(schema, pushedFilters))
 
   /** Set once this scan becomes a stream: its description then describes
     * no batch plan (each micro-batch plans its own files). */
@@ -792,14 +798,29 @@ class PointCloudReaderFactory(
     DataType.fromJson(readSchemaJson).asInstanceOf[StructType]
   @transient private lazy val tableSchema =
     DataType.fromJson(tableSchemaJson).asInstanceOf[StructType]
+  @transient private lazy val lazColumns = LazLayers.columns(readSchema, pushedFilters)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    taskReader(partition, rowReader)
+
+  /** A task's reader: every split of the task shares one [[LazDecoders]]. */
+  private def taskReader[T](partition: InputPartition,
+      open: (InputPartition, LazDecoders) => PartitionReader[T]): PartitionReader[T] = {
+    val decoders = new LazDecoders(lazColumns)
     partition match {
-      case PackedPartition(splits) => new PackedReader(splits, createReader)
-      case p: BinaryPartition => new BinarySectionReader(p, readSchema, predicate(p))
-      case p: LazPartition => new LazSectionReader(p, readSchema, lazPredicate(p))
-      case p: XyzPartition => new XyzReader(p, readSchema)
+      case PackedPartition(splits) => new PackedReader(splits, open(_, decoders))
+      case p => open(p, decoders)
     }
+  }
+
+  private def rowReader(partition: InputPartition,
+      decoders: LazDecoders): PartitionReader[InternalRow] = partition match {
+    case p: BinaryPartition => new BinarySectionReader(p, readSchema, predicate(p))
+    case p: LazPartition =>
+      val schema = sectionSchema(p)
+      new LazSectionReader(p, schema, readSchema, lazPredicate(p, schema), decoders(p, schema))
+    case p: XyzPartition => new XyzReader(p, readSchema)
+  }
 
   /** Fixed-stride binary sections decode vectorized (ColumnarBatch) —
     * raw and LAZ alike (a decoded chunk IS a run of fixed-stride
@@ -812,11 +833,19 @@ class PointCloudReaderFactory(
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case PackedPartition(splits) => new PackedReader(splits, createColumnarReader)
-      case p: BinaryPartition => new BinarySectionColumnarReader(p, readSchema, predicate(p))
-      case p: LazPartition => new LazSectionColumnarReader(p, readSchema, lazPredicate(p))
-    }
+    taskReader(partition, columnarReader)
+
+  private def columnarReader(partition: InputPartition, decoders: LazDecoders)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = partition match {
+    case p: BinaryPartition => new BinarySectionColumnarReader(p, readSchema, predicate(p))
+    case p: LazPartition =>
+      val schema = sectionSchema(p)
+      new LazSectionColumnarReader(p, schema, readSchema, lazPredicate(p, schema),
+        decoders(p, schema))
+  }
+
+  private def sectionSchema(p: LazPartition): StructType =
+    DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
 
   /** Pushed-filter evaluator compiled against this split's section
     * schema (sections differ across merged files); null when nothing was
@@ -833,11 +862,10 @@ class PointCloudReaderFactory(
     * filters residual for compressed tables, but the STREAMING path may
     * claim filters as pushed before any .laz file lands — the readers
     * must honor them or claimed-pushed rows leak unfiltered. */
-  private def lazPredicate(p: LazPartition): RecordPredicate =
+  private def lazPredicate(p: LazPartition, sectionSchema: StructType): RecordPredicate =
     if (pushedFilters.isEmpty) null
     else new RecordPredicate(pushedFilters, tableSchema,
-      Section(p.location, 0, p.numRecords, littleEndian = true,
-        DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType], p.stride),
+      Section(p.location, 0, p.numRecords, littleEndian = true, sectionSchema, p.stride),
       p.fid)
 }
 
@@ -899,16 +927,17 @@ class BinarySectionReader(p: BinaryPartition, readSchema: StructType,
   * uncompressed reader uses — schema casts, fid/pid synthesis and column
   * pruning are shared, so a .laz scan differs from .las only in the
   * decode step. Sequential within a chunk by construction (prediction
-  * state chains point to point); parallel ACROSS chunks/partitions. */
-class LazSectionReader(p: LazPartition, readSchema: StructType,
-    predicate: RecordPredicate = null)
+  * state chains point to point); parallel ACROSS chunks/partitions.
+  * `chunkDecoder` is the task's, and decodes only the layers holding
+  * the read and predicate columns ([[LazLayers]]). */
+class LazSectionReader(p: LazPartition, sectionSchema: StructType, readSchema: StructType,
+    predicate: RecordPredicate,
+    chunkDecoder: graft.pointcloud.las.laz.LazChunkDecoder)
   extends PartitionReader[InternalRow] {
 
-  private val sectionSchema = DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
   private val section = Section(p.location, 0, p.numRecords,
     littleEndian = true, sectionSchema, p.stride)
   private val decoder = new RecordDecoder(section, readSchema, p.fid)
-  private val chunkDecoder = new graft.pointcloud.las.laz.LazChunkDecoder(p.format, p.stride)
 
   private val path = new Path(p.location)
   private val in = path.getFileSystem(LocalIo.conf).open(path)
@@ -927,10 +956,7 @@ class LazSectionReader(p: LazPartition, readSchema: StructType,
         if (chunkIdx >= p.chunkOffsets.length) return false
         val count = p.chunkCounts(chunkIdx)
         if (count > 0) {
-          val compressed = new Array[Byte](p.chunkBytes(chunkIdx).toInt)
-          in.seek(p.chunkOffsets(chunkIdx))
-          in.readFully(compressed)
-          val records = chunkDecoder.decode(compressed, count.toInt)
+          val records = LazDecoders.readChunk(in, chunkDecoder, p, chunkIdx)
           buf = ByteBuffer.wrap(records).order(java.nio.ByteOrder.LITTLE_ENDIAN)
           idxInChunk = 0
           countInChunk = count.toInt

@@ -226,22 +226,67 @@ object Laz {
     format >= 0 && format <= 10
 }
 
-/** Chunk decoder with reusable codec state (init resets per chunk):
-  * `stride` beyond the format's base record decodes as an opaque
-  * BYTE/BYTE14 item (the ExtraBytes tail); formats 6-8 dispatch to the
-  * layered scheme. One instance per reader task; not thread-safe. */
-final class LazChunkDecoder(format: Byte, val stride: Int) {
-  private val items = LazFile.itemsFor(format,
-    stride - graft.pointcloud.las.LasHeader.recordLength(format))
+/** Chunk decoder with reusable codec state (init resets per chunk) and
+  * grow-only buffers: `stride` beyond the format's base record decodes
+  * as an opaque BYTE/BYTE14 item (the ExtraBytes tail); formats 6-10
+  * dispatch to the layered scheme. `layers` (see
+  * [[LazChunkDecoder.layersFor]]; null = all) selects the layers of a
+  * layered chunk to entropy-decode; the record bytes of a skipped
+  * layer's fields are stale after decode. One instance per reader task,
+  * shared by every split of the task that needs the same layers; not
+  * thread-safe. */
+final class LazChunkDecoder(format: Byte, val stride: Int, layers: Array[Boolean] = null) {
+  private val items = LazChunkDecoder.items(format, stride)
   private val layered = format >= 6
-  private val codecs = if (layered) null else LazFile.codecsFor(items)
-  private val codecs14 = if (layered) LazFile.codecsLayeredFor(items) else null
   require(items.map(_.size).sum == stride,
     s"LAZ items do not tile a $stride-byte format-$format record")
-  /** Decode `count` points from one compressed chunk into raw records. */
-  def decode(chunk: Array[Byte], count: Int): Array[Byte] =
-    if (layered) LazFile.decodeChunkLayered(codecs14, chunk, count, stride)
-    else LazFile.decodeChunk(codecs, chunk, count, stride)
+  private val codecs = if (layered) null else LazFile.codecsFor(items)
+  private val codecs14 = if (layered) LazFile.codecsLayeredFor(items, layers) else null
+
+  private var compressed = new Array[Byte](0)
+  private var records = new Array[Byte](0)
+
+  /** A buffer of at least `n` bytes to read one compressed chunk into,
+    * reused across chunks (it grows, never shrinks). */
+  def chunkBuffer(n: Int): Array[Byte] = {
+    if (compressed.length < n) compressed = new Array[Byte](n)
+    compressed
+  }
+
+  /** Decode `count` points from the first `len` bytes of `chunk` into
+    * raw records. The result is this decoder's records buffer: its first
+    * `count * stride` bytes hold the chunk until the next decode. */
+  def decode(chunk: Array[Byte], len: Int, count: Int): Array[Byte] = {
+    val n = count.toLong * stride
+    require(n <= Int.MaxValue, s"$count x $stride-byte records overflow the records buffer")
+    if (records.length < n) records = new Array[Byte](n.toInt)
+    if (layered) LazFile.decodeChunkLayered(codecs14, chunk, len, count, stride, records)
+    else LazFile.decodeChunk(codecs, chunk, len, count, stride, records)
+    records
+  }
+
+  /** Decode `count` points from one whole compressed chunk. */
+  def decode(chunk: Array[Byte], count: Int): Array[Byte] = decode(chunk, chunk.length, count)
+}
+
+object LazChunkDecoder {
+  private def items(format: Byte, stride: Int) = LazFile.itemsFor(format,
+    stride - graft.pointcloud.las.LasHeader.recordLength(format))
+
+  /** The layers of a (format, stride) chunk that a reader of the record
+    * bytes `needed` must decode, one flag per layer in chunk order. A
+    * pointwise format (0-5) codes one stream, so its one flag is set. */
+  def layersFor(format: Byte, stride: Int, needed: Int => Boolean): Array[Boolean] =
+    if (format < 6) Array(true) else LazFile.layersNeeded(items(format, stride), needed)
+
+  /** The names of a (format, stride) chunk's layers, in chunk order:
+    * `xy`, `z`, `classification`, `flags`, `intensity`, `angle`, `user`,
+    * `source`, `gps`, then `rgb`, `nir`, `wavepacket` and one `extraN`
+    * per ExtraBytes byte, as the format carries them. A pointwise format
+    * has one layer, `pointwise`. */
+  def layerNames(format: Byte, stride: Int): Array[String] =
+    if (format < 6) Array("pointwise")
+    else items(format, stride).toArray.flatMap(LazFile.itemLayers(_)._2)
 }
 
 /** Chunk encoder with reusable codec state; one per writer task. */

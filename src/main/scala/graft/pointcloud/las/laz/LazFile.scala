@@ -85,16 +85,64 @@ private[las] object LazFile {
         "this reader implements POINT10, GPSTIME11, RGB12, WAVEPACKET13 and BYTE")
   }.toArray
 
-  def codecsLayeredFor(items: Seq[LazItem]): Array[LazLayeredCodec] = items.map {
-    case LazItem(LazItemCodec.TypePoint14, 30, _) => new Point14Codec
-    case LazItem(LazItemCodec.TypeRgb14, 6, _) => new Rgb14Codec(withNir = false)
-    case LazItem(LazItemCodec.TypeRgbNir14, 8, _) => new Rgb14Codec(withNir = true)
-    case LazItem(LazItemCodec.TypeWavepacket14, 29, _) => new WavePacket14Codec
-    case LazItem(LazItemCodec.TypeByte14, n, _) if n > 0 => new Bytes14Codec(n)
+  /** Layered codecs for `items`. `layers` (one flag per layer of the
+    * chunk, in chunk order; null = all) selects what a decoder reads. */
+  def codecsLayeredFor(items: Seq[LazItem],
+      layers: Array[Boolean] = null): Array[LazLayeredCodec] = {
+    var first = 0 // first layer of the next item
+    items.map { it =>
+      val (_, names, codec) = layered(it)
+      val on =
+        if (layers == null) Array.fill(names.length)(true)
+        else layers.slice(first, first + names.length)
+      first += names.length
+      codec(on)
+    }.toArray
+  }
+
+  /** A layered item's layers: the layer coding each of its bytes, and
+    * each layer's name. */
+  def itemLayers(item: LazItem): (Array[Int], Array[String]) = {
+    val (byteLayer, names, _) = layered(item)
+    (byteLayer, names)
+  }
+
+  private def layered(item: LazItem)
+      : (Array[Int], Array[String], Array[Boolean] => LazLayeredCodec) = item match {
+    case LazItem(LazItemCodec.TypePoint14, 30, _) =>
+      (Point14Codec.ByteLayer, Point14Codec.LayerNames, new Point14Codec(_))
+    case LazItem(LazItemCodec.TypeRgb14, 6, _) =>
+      (Array.fill(6)(0), Array("rgb"), new Rgb14Codec(withNir = false, _))
+    case LazItem(LazItemCodec.TypeRgbNir14, 8, _) =>
+      (Array.fill(6)(0) ++ Array(1, 1), Array("rgb", "nir"), new Rgb14Codec(withNir = true, _))
+    case LazItem(LazItemCodec.TypeWavepacket14, 29, _) =>
+      (Array.fill(29)(0), Array("wavepacket"), new WavePacket14Codec(_))
+    case LazItem(LazItemCodec.TypeByte14, n, _) if n > 0 =>
+      (Array.tabulate(n)(identity), Array.tabulate(n)(i => s"extra$i"), new Bytes14Codec(n, _))
     case it => throw new IllegalArgumentException(
       s"unsupported layered LAZ item type ${it.itemType} (size ${it.size}) — " +
         "this reader implements POINT14, RGB14, RGBNIR14, WAVEPACKET14 and BYTE14")
-  }.toArray
+  }
+
+  /** The layers a reader of the record bytes `needed` must decode: one
+    * flag per layer of a layered chunk, in chunk order. A layer is needed
+    * when it codes a needed byte; the POINT14 XY layer always is, since
+    * every other layer's context derives from it. */
+  def layersNeeded(items: Seq[LazItem], needed: Int => Boolean): Array[Boolean] = {
+    var off = 0
+    items.flatMap { it =>
+      val (byteLayer, names) = itemLayers(it)
+      val on = new Array[Boolean](names.length)
+      var b = 0
+      while (b < byteLayer.length) {
+        if (needed(off + b)) on(byteLayer(b)) = true
+        b += 1
+      }
+      if (it.itemType == LazItemCodec.TypePoint14) on(Point14Codec.LXy) = true
+      off += it.size
+      on
+    }.toArray
+  }
 
   /** Serialize the LAZ VLR payload (34 + 6·items bytes, little-endian). */
   def vlrPayload(vlr: LazVlr): Array[Byte] = {
@@ -316,15 +364,20 @@ private[las] object LazFile {
     out
   }
 
-  /** Decode one LAYERED chunk of `count` points into a records array. */
-  def decodeChunkLayered(codecs: Array[LazLayeredCodec], chunk: Array[Byte],
-      count: Int, stride: Int): Array[Byte] = {
+  /** Decode one LAYERED chunk of `count` points, held in the first
+    * `len` bytes of `chunk`, into the first `count * stride` bytes of
+    * `out`. Only the layers the codecs select are entropy-decoded; the
+    * bytes of a skipped layer's fields are left stale. */
+  def decodeChunkLayered(codecs: Array[LazLayeredCodec], chunk: Array[Byte], len: Int,
+      count: Int, stride: Int, out: Array[Byte]): Unit = {
     require(count > 0, "decodeChunkLayered needs at least one point")
     require(codecs.map(_.size).sum == stride,
       s"item sizes ${codecs.map(_.size).mkString("+")} must tile the $stride-byte record")
+    require(len <= chunk.length && out.length.toLong >= count.toLong * stride,
+      s"buffers too small for a $len-byte chunk of $count $stride-byte records")
     val totalLayers = codecs.map(_.numLayers).sum
-    require(chunk.length >= stride + 4 + 4 * totalLayers,
-      s"layered chunk of ${chunk.length} bytes holds no raw point + layer directory")
+    require(len >= stride + 4 + 4 * totalLayers,
+      s"layered chunk of $len bytes holds no raw point + layer directory")
     val buf = ByteBuffer.wrap(chunk).order(ByteOrder.LITTLE_ENDIAN)
     val declared = buf.getInt(stride)
     require(declared == count,
@@ -344,51 +397,58 @@ private[las] object LazFile {
     while (li < totalLayers) {
       starts(li) = posL.toInt
       posL += sizes(li)
-      require(posL <= chunk.length,
-        s"layer sizes overrun the chunk ($posL > ${chunk.length})")
+      require(posL <= len, s"layer sizes overrun the chunk ($posL > $len)")
       ends(li) = posL.toInt
       li += 1
     }
-    val out = new Array[Byte](count * stride)
     System.arraycopy(chunk, 0, out, 0, stride)
     val ctx = new ChannelCtx
-    var itemOff = 0
+    // an item none of whose layers is selected is not read at all
+    val active = codecs.indices.filter(i => codecs(i).layers.exists(identity)).toArray
+    val activeOff = active.map(i => codecs.iterator.take(i).map(_.size).sum)
     li = 0
+    var itemOff = 0
     codecs.foreach { c =>
-      val ds = Array.tabulate(c.numLayers)(k =>
-        new ArithmeticDecoder(chunk, starts(li + k), ends(li + k)))
-      c.initRead(ds, out, itemOff, ctx)
+      if (c.layers.exists(identity)) {
+        val ds = Array.tabulate(c.numLayers)(k =>
+          if (c.layers(k)) new ArithmeticDecoder(chunk, starts(li + k), ends(li + k))
+          else null)
+        c.initRead(ds, out, itemOff, ctx)
+      }
       li += c.numLayers
       itemOff += c.size
     }
     var i = 1
     while (i < count) {
-      var p = i * stride
-      codecs.foreach { c => c.read(out, p, ctx); p += c.size }
+      val p = i * stride
+      var a = 0
+      while (a < active.length) {
+        codecs(active(a)).read(out, p + activeOff(a), ctx)
+        a += 1
+      }
       i += 1
     }
-    out
   }
 
-  /** Decode one chunk of `count` points from `chunk` into a records
-    * array (`count * stride` bytes). */
-  def decodeChunk(codecs: Array[LazItemCodec], chunk: Array[Byte],
-      count: Int, stride: Int): Array[Byte] = {
+  /** Decode one chunk of `count` points, held in the first `len` bytes
+    * of `chunk`, into the first `count * stride` bytes of `out`. */
+  def decodeChunk(codecs: Array[LazItemCodec], chunk: Array[Byte], len: Int,
+      count: Int, stride: Int, out: Array[Byte]): Unit = {
     require(count > 0, "decodeChunk needs at least one point")
     require(codecs.map(_.size).sum == stride,
       s"item sizes ${codecs.map(_.size).mkString("+")} must tile the $stride-byte record")
-    require(chunk.length >= stride, s"chunk of ${chunk.length} bytes holds no raw first point")
-    val out = new Array[Byte](count * stride)
+    require(len <= chunk.length && out.length.toLong >= count.toLong * stride,
+      s"buffers too small for a $len-byte chunk of $count $stride-byte records")
+    require(len >= stride, s"chunk of $len bytes holds no raw first point")
     System.arraycopy(chunk, 0, out, 0, stride)
     var itemOff = 0
     codecs.foreach { c => c.init(out, itemOff); itemOff += c.size }
-    val dec = new ArithmeticDecoder(chunk, stride, chunk.length)
+    val dec = new ArithmeticDecoder(chunk, stride, len)
     var i = 1
     while (i < count) {
       var p = i * stride
       codecs.foreach { c => c.read(dec, out, p); p += c.size }
       i += 1
     }
-    out
   }
 }

@@ -13,6 +13,22 @@ package graft.pointcloud.las.laz
   * `[raw first point][u32 point count][u32 size per layer][layer bytes]`
   * (see [[LazFile.encodeChunkLayered]]).
   *
+  * Selective decode (LASzip 1.4's selective decompression). A reader
+  * that needs only some fields entropy-decodes only the layers holding
+  * them and skips the other bitstreams unread. This is sound because of
+  * one dependency rule, which every codec here keeps:
+  *  - the POINT14 XY layer (changed bits, scanner channel, return
+  *    number and count, x, y) depends on nothing but itself, and it is
+  *    always decoded;
+  *  - every other layer's context reads only XY-layer state (channel,
+  *    returns, the x/y corrector classes, whether GPS time changed) and
+  *    that layer's own history, including when a channel first seen
+  *    mid-chunk seeds from the previous channel's last point.
+  * So the state of a skipped layer is never read, and it is never
+  * allocated or reset either. The record bytes of a skipped layer's
+  * fields hold stale values after decode; a reader must not read them.
+  * Each codec's `ByteLayer` table maps its item bytes to its layers.
+  *
   * Verification note (the package-wide position, LazEntropy.scala:12-18):
   * the container ships no `.laz` fixture and no external LASzip binary,
   * so the layered scheme is verified by self-round-trip plus frozen
@@ -88,6 +104,9 @@ private[las] sealed trait LazLayeredCodec {
   def size: Int
   /** Number of layers this item contributes to the chunk. */
   def numLayers: Int
+  /** Per layer: decoded (true) or skipped. An encoder codes every layer;
+    * `initRead` receives a null decoder for each skipped one. */
+  def layers: Array[Boolean]
   /** Start an encode chunk: seed state from the raw first point. */
   def initWrite(first: Array[Byte], off: Int, ctx: ChannelCtx): Unit
   /** Encode the next point's item (also updates state). */
@@ -106,31 +125,36 @@ private[las] sealed trait LazLayeredCodec {
   * flags|scanner channel|scan direction|edge byte; classification u8;
   * user u8; scan angle i16; point source u16; GPS time f64). Nine layers:
   * channel/returns/XY, Z, classification, flags, intensity, scan angle,
-  * user data, point source, GPS time. */
-private[las] final class Point14Codec extends LazLayeredCodec {
+  * user data, point source, GPS time. `layers` selects the layers a
+  * decoder reads (the XY layer always); an encoder codes all nine. */
+private[las] final class Point14Codec(override val layers: Array[Boolean])
+  extends LazLayeredCodec {
   import LazItemCodec._
+  import Point14Codec._
 
   override def size: Int = 30
-  override def numLayers: Int = 9
+  override def numLayers: Int = NumLayers
+  require(layers.length == NumLayers && layers(LXy),
+    "POINT14 needs a flag per layer and always codes its XY layer")
 
-  // layer indices
-  private final val LXy = 0
-  private final val LZ = 1
-  private final val LCls = 2
-  private final val LFlags = 3
-  private final val LInt = 4
-  private final val LAngle = 5
-  private final val LUser = 6
-  private final val LPsid = 7
-  private final val LGps = 8
+  private val zOn = layers(LZ)
+  private val clsOn = layers(LCls)
+  private val flagsOn = layers(LFlags)
+  private val intOn = layers(LInt)
+  private val angleOn = layers(LAngle)
+  private val userOn = layers(LUser)
+  private val psidOn = layers(LPsid)
+  private val gpsOn = layers(LGps)
 
   /** Everything one scanner channel predicts from. Lazy model arrays are
     * allocated on first use — creation order is identical on both sides,
-    * so encoder and decoder stay in lockstep. */
+    * so encoder and decoder stay in lockstep. A skipped layer's state is
+    * never allocated. */
   private final class Ctx {
     var unused = true
     val lastItem = new Array[Byte](30)
     var lastGpsChange = false
+    // XY layer
     val mChanged = Array.fill(8)(new SymbolModel(128))
     val mScannerChannel = new SymbolModel(3)
     val mNumReturns = new Array[SymbolModel](16)
@@ -138,18 +162,19 @@ private[las] final class Point14Codec extends LazLayeredCodec {
     val mRetGpsSame = new SymbolModel(13)
     val icDx = new IntegerCompressor(32, 2)
     val icDy = new IntegerCompressor(32, 22)
-    val icZ = new IntegerCompressor(32, 20)
     val medX = Array.fill(12)(new StreamingMedian5)
     val medY = Array.fill(12)(new StreamingMedian5)
+    // the other layers
+    val icZ = if (zOn) new IntegerCompressor(32, 20) else null
     val lastZ = new Array[Int](8)
     val mClassification = new Array[SymbolModel](64)
     val mFlags = new Array[SymbolModel](64)
-    val icIntensity = new IntegerCompressor(16, 4)
+    val icIntensity = if (intOn) new IntegerCompressor(16, 4) else null
     val lastIntensity = new Array[Int](8)
-    val icScanAngle = new IntegerCompressor(16, 2)
+    val icScanAngle = if (angleOn) new IntegerCompressor(16, 2) else null
     val mUserData = new Array[SymbolModel](64)
-    val icPointSource = new IntegerCompressor(16, 1)
-    val gps = new GpsTimeState
+    val icPointSource = if (psidOn) new IntegerCompressor(16, 1) else null
+    val gps = if (gpsOn) new GpsTimeState else null
 
     /** Seed from `item` (the chunk's raw first point, or — on a channel
       * first seen mid-chunk — the last point of the channel written
@@ -162,25 +187,39 @@ private[las] final class Point14Codec extends LazLayeredCodec {
       java.util.Arrays.fill(mNumReturns.asInstanceOf[Array[AnyRef]], null)
       java.util.Arrays.fill(mRetNumber.asInstanceOf[Array[AnyRef]], null)
       mRetGpsSame.reset()
-      icDx.reset(); icDy.reset(); icZ.reset()
+      icDx.reset(); icDy.reset()
       medX.foreach(_.reset()); medY.foreach(_.reset())
-      java.util.Arrays.fill(lastZ, i32(item, off + 8))
-      java.util.Arrays.fill(mClassification.asInstanceOf[Array[AnyRef]], null)
-      java.util.Arrays.fill(mFlags.asInstanceOf[Array[AnyRef]], null)
-      icIntensity.reset()
-      java.util.Arrays.fill(lastIntensity, u16(item, off + 12))
-      icScanAngle.reset()
-      java.util.Arrays.fill(mUserData.asInstanceOf[Array[AnyRef]], null)
-      icPointSource.reset()
-      gps.seed(i64(item, off + 22))
+      if (zOn) {
+        icZ.reset()
+        java.util.Arrays.fill(lastZ, i32(item, off + 8))
+      }
+      if (clsOn) java.util.Arrays.fill(mClassification.asInstanceOf[Array[AnyRef]], null)
+      if (flagsOn) java.util.Arrays.fill(mFlags.asInstanceOf[Array[AnyRef]], null)
+      if (intOn) {
+        icIntensity.reset()
+        java.util.Arrays.fill(lastIntensity, u16(item, off + 12))
+      }
+      if (angleOn) icScanAngle.reset()
+      if (userOn) java.util.Arrays.fill(mUserData.asInstanceOf[Array[AnyRef]], null)
+      if (psidOn) icPointSource.reset()
+      if (gpsOn) gps.seed(i64(item, off + 22))
       unused = false
     }
   }
 
-  private val ctxs = Array.fill(4)(new Ctx)
+  /** Per scanner channel, built on the channel's first use: most chunks
+    * carry one channel, and a context is the bulk of a codec's memory. */
+  private val ctxs = new Array[Ctx](4)
   private var cc = 0
 
-  private val encs = Array.fill(numLayers)(new ArithmeticEncoder)
+  private def channel(i: Int): Ctx = {
+    if (ctxs(i) == null) ctxs(i) = new Ctx
+    ctxs(i)
+  }
+  private def unused(i: Int): Boolean = ctxs(i) == null || ctxs(i).unused
+  private def retire(): Unit = ctxs.foreach(c => if (c != null) c.unused = true)
+
+  private lazy val encs = Array.fill(numLayers)(new ArithmeticEncoder)
   private var decs: Array[ArithmeticDecoder] = null
 
   private def lazySym(arr: Array[SymbolModel], i: Int, symbols: Int): SymbolModel = {
@@ -197,10 +236,11 @@ private[las] final class Point14Codec extends LazLayeredCodec {
   }
 
   override def initWrite(first: Array[Byte], off: Int, ctx: ChannelCtx): Unit = {
+    require(layers.forall(identity), "a POINT14 encoder codes every layer")
     encs.foreach(_.reset())
-    ctxs.foreach(_.unused = true)
+    retire()
     cc = (first(off + 15) >>> 4) & 3
-    ctxs(cc).seed(first, off)
+    channel(cc).seed(first, off)
     ctx.value = cc
   }
 
@@ -212,7 +252,7 @@ private[las] final class Point14Codec extends LazLayeredCodec {
     val channelChange = sc != cc
     // a channel first seen mid-chunk seeds from the point written just
     // before it (the old channel's last), mirroring the read side
-    if (channelChange && ctxs(sc).unused) ctxs(sc).seed(old.lastItem, 0)
+    if (channelChange && unused(sc)) channel(sc).seed(old.lastItem, 0)
     val c = ctxs(sc)
     val tl = c.lastItem
 
@@ -318,12 +358,15 @@ private[las] final class Point14Codec extends LazLayeredCodec {
   override def initRead(layerDecs: Array[ArithmeticDecoder], first: Array[Byte],
       off: Int, ctx: ChannelCtx): Unit = {
     decs = layerDecs
-    ctxs.foreach(_.unused = true)
+    retire()
     cc = (first(off + 15) >>> 4) & 3
-    ctxs(cc).seed(first, off)
+    channel(cc).seed(first, off)
     ctx.value = cc
   }
 
+  /** Decode the next point. Every field of a skipped layer keeps the
+    * value it was seeded with; the XY layer and the change bits are
+    * always read, since every other layer's context derives from them. */
   override def read(out: Array[Byte], off: Int, ctx: ChannelCtx): Unit = {
     val old = ctxs(cc)
     val lpr = lprOf(old)
@@ -331,7 +374,7 @@ private[las] final class Point14Codec extends LazLayeredCodec {
     if ((changed & 64) != 0) {
       val diff = decs(LXy).decodeSymbol(old.mScannerChannel)
       val sc = (cc + diff + 1) & 3
-      if (ctxs(sc).unused) ctxs(sc).seed(old.lastItem, 0)
+      if (unused(sc)) channel(sc).seed(old.lastItem, 0)
       cc = sc
       // mirror of the write side: sibling codecs must decode this
       // point's RGB/extras through the NEW channel's context
@@ -374,35 +417,44 @@ private[las] final class Point14Codec extends LazLayeredCodec {
     putI32(tl, 4, i32(tl, 4) + dy)
     c.medY((m << 1) | gtc).add(dy)
 
-    val kxy = (c.icDx.getK + c.icDy.getK) / 2
-    val z = c.icZ.decompress(decs(LZ), c.lastZ(l),
-      (if (n == 1) 1 else 0) + (if (kxy < 18) kxy & ~1 else 18))
-    putI32(tl, 8, z)
-    c.lastZ(l) = z
+    if (zOn) {
+      val kxy = (c.icDx.getK + c.icDy.getK) / 2
+      val z = c.icZ.decompress(decs(LZ), c.lastZ(l),
+        (if (n == 1) 1 else 0) + (if (kxy < 18) kxy & ~1 else 18))
+      putI32(tl, 8, z)
+      c.lastZ(l) = z
+    }
 
-    val ccc = (((tl(16) & 0x1F) << 1) + (if (cpr == 3) 1 else 0))
-    tl(16) = decs(LCls).decodeSymbol(lazySym(c.mClassification, ccc, 256)).toByte
+    if (clsOn) {
+      val ccc = (((tl(16) & 0x1F) << 1) + (if (cpr == 3) 1 else 0))
+      tl(16) = decs(LCls).decodeSymbol(lazySym(c.mClassification, ccc, 256)).toByte
+    }
 
-    val lastFlagSym = ((tl(15) >>> 6) & 1) << 4 |
-      (((tl(15) >>> 7) & 1) << 5) | (tl(15) & 0xF)
-    val flagSym = decs(LFlags).decodeSymbol(lazySym(c.mFlags, lastFlagSym, 64))
-    tl(15) = ((flagSym & 0xF) | (cc << 4) |
-      (((flagSym >>> 4) & 1) << 6) | (((flagSym >>> 5) & 1) << 7)).toByte
+    if (flagsOn) {
+      val lastFlagSym = ((tl(15) >>> 6) & 1) << 4 |
+        (((tl(15) >>> 7) & 1) << 5) | (tl(15) & 0xF)
+      val flagSym = decs(LFlags).decodeSymbol(lazySym(c.mFlags, lastFlagSym, 64))
+      tl(15) = ((flagSym & 0xF) | (cc << 4) |
+        (((flagSym >>> 4) & 1) << 6) | (((flagSym >>> 5) & 1) << 7)).toByte
+    }
 
-    val intensity = c.icIntensity.decompress(decs(LInt),
-      c.lastIntensity((cpr << 1) | gtc), cpr)
-    c.lastIntensity((cpr << 1) | gtc) = intensity
-    putU16(tl, 12, intensity)
+    if (intOn) {
+      val intensity = c.icIntensity.decompress(decs(LInt),
+        c.lastIntensity((cpr << 1) | gtc), cpr)
+      c.lastIntensity((cpr << 1) | gtc) = intensity
+      putU16(tl, 12, intensity)
+    }
 
-    if (angleChange)
+    if (angleOn && angleChange)
       putU16(tl, 18, c.icScanAngle.decompress(decs(LAngle), u16(tl, 18), gtc))
 
-    tl(17) = decs(LUser).decodeSymbol(lazySym(c.mUserData, (tl(17) & 0xFF) / 4, 256)).toByte
+    if (userOn)
+      tl(17) = decs(LUser).decodeSymbol(lazySym(c.mUserData, (tl(17) & 0xFF) / 4, 256)).toByte
 
-    if (psChange)
+    if (psidOn && psChange)
       putU16(tl, 20, c.icPointSource.decompress(decs(LPsid), u16(tl, 20), 0))
 
-    if (gpsChange) {
+    if (gpsOn && gpsChange) {
       c.gps.readTime(decs(LGps))
       putI64(tl, 22, c.gps.current)
     }
@@ -412,15 +464,45 @@ private[las] final class Point14Codec extends LazLayeredCodec {
   }
 }
 
+private[las] object Point14Codec {
+  final val NumLayers = 9
+  // layer indices, in chunk order
+  final val LXy = 0
+  final val LZ = 1
+  final val LCls = 2
+  final val LFlags = 3
+  final val LInt = 4
+  final val LAngle = 5
+  final val LUser = 6
+  final val LPsid = 7
+  final val LGps = 8
+
+  val LayerNames: Array[String] = Array("xy", "z", "classification", "flags",
+    "intensity", "angle", "user", "source", "gps")
+
+  /** The layer that codes each byte of the 30-byte record. Return number
+    * and count (byte 14) ride in the XY layer; the flags byte's scanner
+    * channel bits do too, but its other bits are the flags layer's. */
+  val ByteLayer: Array[Int] =
+    Array.fill(8)(LXy) ++ Array.fill(4)(LZ) ++ Array.fill(2)(LInt) ++
+      Array(LXy, LFlags, LCls, LUser) ++ Array.fill(2)(LAngle) ++
+      Array.fill(2)(LPsid) ++ Array.fill(8)(LGps)
+}
+
 /** RGB14 / RGBNIR14: the u16 r/g/b triple of formats 7/8 (+u16 NIR on
   * format 8). The triple reuses the RGB byte-delta scheme ([[RgbState]]),
   * per scanner-channel context; NIR codes its two bytes through a 2-bit
   * change mask + per-byte delta models, in its own layer. */
-private[las] final class Rgb14Codec(withNir: Boolean) extends LazLayeredCodec {
+private[las] final class Rgb14Codec(withNir: Boolean, override val layers: Array[Boolean])
+  extends LazLayeredCodec {
   import LazItemCodec._
 
   override def size: Int = if (withNir) 8 else 6
   override def numLayers: Int = if (withNir) 2 else 1
+  require(layers.length == numLayers, s"RGB14 needs a flag per layer")
+
+  private val rgbOn = layers(0)
+  private val nirOn = withNir && layers(1)
 
   private final class Ctx {
     var unused = true
@@ -430,8 +512,8 @@ private[las] final class Rgb14Codec(withNir: Boolean) extends LazLayeredCodec {
     var lastNir = 0
 
     def seed(r: Int, g: Int, b: Int, nir: Int): Unit = {
-      rgb.seed(r, g, b)
-      if (withNir) {
+      if (rgbOn) rgb.seed(r, g, b)
+      if (nirOn) {
         mNirUsed.reset(); mNirDiff.foreach(_.reset())
         lastNir = nir
       }
@@ -441,7 +523,7 @@ private[las] final class Rgb14Codec(withNir: Boolean) extends LazLayeredCodec {
 
   private val ctxs = Array.fill(4)(new Ctx)
   private var cc = 0
-  private val encs = Array.fill(numLayers)(new ArithmeticEncoder)
+  private lazy val encs = Array.fill(numLayers)(new ArithmeticEncoder)
   private var decs: Array[ArithmeticDecoder] = null
 
   private def seedFrom(item: Array[Byte], off: Int, c: Ctx): Unit =
@@ -496,11 +578,13 @@ private[las] final class Rgb14Codec(withNir: Boolean) extends LazLayeredCodec {
 
   override def read(out: Array[Byte], off: Int, ctx: ChannelCtx): Unit = {
     val c = switchTo(ctx)
-    c.rgb.readRgb(decs(0))
-    putU16(out, off, c.rgb.lastRgb(0))
-    putU16(out, off + 2, c.rgb.lastRgb(1))
-    putU16(out, off + 4, c.rgb.lastRgb(2))
-    if (withNir) {
+    if (rgbOn) {
+      c.rgb.readRgb(decs(0))
+      putU16(out, off, c.rgb.lastRgb(0))
+      putU16(out, off + 2, c.rgb.lastRgb(1))
+      putU16(out, off + 4, c.rgb.lastRgb(2))
+    }
+    if (nirOn) {
       val sym = decs(1).decodeSymbol(c.mNirUsed)
       val ll = c.lastNir & 0xFF; val lh = c.lastNir >>> 8
       val nl = if ((sym & 1) != 0) (decs(1).decodeSymbol(c.mNirDiff(0)) + ll) & 0xFF else ll
@@ -514,8 +598,10 @@ private[las] final class Rgb14Codec(withNir: Boolean) extends LazLayeredCodec {
 /** BYTE14: `n` opaque extra bytes per record — one LAYER per byte
   * position, each position delta-coded through a per-channel-context
   * 256-symbol model. */
-private[las] final class Bytes14Codec(n: Int) extends LazLayeredCodec {
+private[las] final class Bytes14Codec(n: Int, override val layers: Array[Boolean])
+  extends LazLayeredCodec {
   require(n > 0, s"BYTE14 item needs a positive size, got $n")
+  require(layers.length == n, s"BYTE14 needs a flag per layer")
 
   override def size: Int = n
   override def numLayers: Int = n
@@ -525,7 +611,8 @@ private[las] final class Bytes14Codec(n: Int) extends LazLayeredCodec {
     val models = Array.fill(n)(new SymbolModel(256))
     val lastBytes = new Array[Byte](n)
     def seed(src: Array[Byte], off: Int): Unit = {
-      models.foreach(_.reset())
+      var i = 0
+      while (i < n) { if (layers(i)) models(i).reset(); i += 1 }
       System.arraycopy(src, off, lastBytes, 0, n)
       unused = false
     }
@@ -533,7 +620,7 @@ private[las] final class Bytes14Codec(n: Int) extends LazLayeredCodec {
 
   private val ctxs = Array.fill(4)(new Ctx)
   private var cc = 0
-  private val encs = Array.fill(n)(new ArithmeticEncoder)
+  private lazy val encs = Array.fill(n)(new ArithmeticEncoder)
   private var decs: Array[ArithmeticDecoder] = null
 
   private def switchTo(ctx: ChannelCtx): Ctx = {
@@ -577,8 +664,10 @@ private[las] final class Bytes14Codec(n: Int) extends LazLayeredCodec {
     val c = switchTo(ctx)
     var i = 0
     while (i < n) {
-      c.lastBytes(i) = ((decs(i).decodeSymbol(c.models(i)) + c.lastBytes(i)) & 0xFF).toByte
-      out(off + i) = c.lastBytes(i)
+      if (layers(i)) {
+        c.lastBytes(i) = ((decs(i).decodeSymbol(c.models(i)) + c.lastBytes(i)) & 0xFF).toByte
+        out(off + i) = c.lastBytes(i)
+      }
       i += 1
     }
   }
@@ -588,7 +677,8 @@ private[las] final class Bytes14Codec(n: Int) extends LazLayeredCodec {
   * the layered scheme — one layer, [[WavePacketState]] per
   * scanner-channel context (seeded on first use from the channel last
   * written, like every layered item). */
-private[las] final class WavePacket14Codec extends LazLayeredCodec {
+private[las] final class WavePacket14Codec(override val layers: Array[Boolean])
+  extends LazLayeredCodec {
   override def size: Int = 29
   override def numLayers: Int = 1
 
@@ -603,7 +693,7 @@ private[las] final class WavePacket14Codec extends LazLayeredCodec {
 
   private val ctxs = Array.fill(4)(new Ctx)
   private var cc = 0
-  private val enc = new ArithmeticEncoder
+  private lazy val enc = new ArithmeticEncoder
   private var decs: Array[ArithmeticDecoder] = null
 
   private def switchTo(ctx: ChannelCtx): Ctx = {

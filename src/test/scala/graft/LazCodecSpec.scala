@@ -7,6 +7,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * back bit-exactly, across all model/state branches. */
 class LazCodecSpec extends AnyFunSuite {
 
+  /** Decode a whole pointwise chunk into a fresh records array. */
+  private def decodeAll(codecs: Array[LazItemCodec], chunk: Array[Byte], count: Int,
+      stride: Int): Array[Byte] = {
+    val out = new Array[Byte](count * stride)
+    LazFile.decodeChunk(codecs, chunk, chunk.length, count, stride, out)
+    out
+  }
+
+  /** Decode a whole layered chunk into a fresh records array. */
+  private def decodeAllLayered(codecs: Array[LazLayeredCodec], chunk: Array[Byte], count: Int,
+      stride: Int): Array[Byte] = {
+    val out = new Array[Byte](count * stride)
+    LazFile.decodeChunkLayered(codecs, chunk, chunk.length, count, stride, out)
+    out
+  }
+
   test("arithmetic coder: interleaved bit/symbol/raw-bit streams round-trip") {
     val rnd = new scala.util.Random(42)
     // a mixed script of (kind, value) ops, decoded with identically
@@ -158,7 +174,7 @@ class LazCodecSpec extends AnyFunSuite {
     val chunk = LazFile.encodeChunk(Array(new Point10Codec), records, 0, pts.length, 20)
     assert(chunk.length < records.length,
       s"scan-shaped points must compress (raw ${records.length}, laz ${chunk.length})")
-    val back = LazFile.decodeChunk(Array(new Point10Codec), chunk, pts.length, 20)
+    val back = decodeAll(Array(new Point10Codec), chunk, pts.length, 20)
     assert(java.util.Arrays.equals(back, records))
   }
 
@@ -183,7 +199,7 @@ class LazCodecSpec extends AnyFunSuite {
     val codecsE: Array[LazItemCodec] = Array(new Point10Codec, new GpsTime11Codec)
     val chunk = LazFile.encodeChunk(codecsE, records, 0, pts.length, 28)
     val codecsD: Array[LazItemCodec] = Array(new Point10Codec, new GpsTime11Codec)
-    val back = LazFile.decodeChunk(codecsD, chunk, pts.length, 28)
+    val back = decodeAll(codecsD, chunk, pts.length, 28)
     assert(java.util.Arrays.equals(back, records))
     assert(chunk.length < records.length)
   }
@@ -203,7 +219,7 @@ class LazCodecSpec extends AnyFunSuite {
       val records = new Array[Byte](count * stride)
       rnd.nextBytes(records)
       val chunk = LazFile.encodeChunk(LazFile.codecsFor(items), records, 0, count, stride)
-      val back = LazFile.decodeChunk(LazFile.codecsFor(items), chunk, count, stride)
+      val back = decodeAll(LazFile.codecsFor(items), chunk, count, stride)
       assert(java.util.Arrays.equals(back, records),
         s"trial $trial: format $format extra $extra count $count failed round trip")
     }
@@ -224,14 +240,15 @@ class LazCodecSpec extends AnyFunSuite {
     b
   }
 
-  test("POINT14 layered chunk: multi-channel scan-shaped points round-trip bit-exactly") {
-    val rnd = new scala.util.Random(17)
+  /** Scan-shaped format-6 records from two interleaved scanner channels. */
+  private def scanShaped14(count: Int, seed: Int): Array[Byte] = {
+    val rnd = new scala.util.Random(seed)
     // two interleaved scanner channels with distinct trajectories and
     // time bases — the per-channel contexts must keep them apart
     val st = Array.tabulate(2)(ch =>
       Array(100000 + ch * 500000, 2000000 - ch * 100000, 50 + ch * 10))
     val ts = Array(123456.789, 900000.125)
-    val pts = Array.tabulate(5000) { i =>
+    val pts = Array.tabulate(count) { i =>
       val ch = if (rnd.nextInt(10) == 0) rnd.nextInt(2) else i % 2
       val s = st(ch)
       if (i % 97 == 0) { s(0) += rnd.nextInt(1 << 19) - (1 << 18); s(1) -= rnd.nextInt(1 << 17) }
@@ -245,13 +262,106 @@ class LazCodecSpec extends AnyFunSuite {
         rnd.nextInt(64), rnd.nextInt(6), rnd.nextInt(1 << 16) - 32768,
         17 + (if (rnd.nextInt(40) == 0) rnd.nextInt(3) else 0), ts(ch))
     }
-    val records = pts.flatten.toArray
+    pts.flatten
+  }
+
+  test("POINT14 layered chunk: multi-channel scan-shaped points round-trip bit-exactly") {
+    val records = scanShaped14(5000, 17)
+    val pts = records.grouped(30).toArray
     val items = LazFile.itemsFor(6)
     val chunk = LazFile.encodeChunkLayered(LazFile.codecsLayeredFor(items), records, 0, pts.length, 30)
     assert(chunk.length < records.length,
       s"scan-shaped 1.4 points must compress (raw ${records.length}, laz ${chunk.length})")
-    val back = LazFile.decodeChunkLayered(LazFile.codecsLayeredFor(items), chunk, pts.length, 30)
+    val back = decodeAllLayered(LazFile.codecsLayeredFor(items), chunk, pts.length, 30)
     assert(java.util.Arrays.equals(back, records))
+  }
+
+  /** Per record byte of a (format, stride) chunk: its layer's index. */
+  private def layerOfByte(format: Byte, stride: Int): Array[Int] = {
+    var first = 0
+    LazFile.itemsFor(format, stride - graft.pointcloud.las.LasHeader.recordLength(format))
+      .toArray.flatMap { it =>
+        val (byteLayer, names) = LazFile.itemLayers(it)
+        val global = byteLayer.map(_ + first)
+        first += names.length
+        global
+      }
+  }
+
+  test("selective layered decode: every decoded layer is bit-exact, for random layer sets") {
+    // random records switch among all four channels and hit every
+    // corrector class; scan-shaped ones exercise mid-chunk channel seeding
+    // on realistic predictions. For each, decode random field subsets and
+    // require every byte of every decoded layer to match the source.
+    val rnd = new scala.util.Random(77)
+    for (trial <- 0 until 40) {
+      val format = Seq(6, 7, 8, 9, 10)(trial % 5).toByte
+      val extra = Seq(0, 5)((trial / 5) % 2)
+      val stride = LazFile.itemsFor(format, extra).map(_.size).sum
+      val count = 1 + rnd.nextInt(800)
+      val records =
+        if (format == 6 && extra == 0 && trial % 2 == 0) scanShaped14(count, trial)
+        else { val b = new Array[Byte](count * stride); rnd.nextBytes(b); b }
+      val chunk = new LazChunkEncoder(format, stride).encode(records, 0, count)
+      val all = new LazChunkDecoder(format, stride).decode(chunk, count)
+      assert(java.util.Arrays.equals(all, 0, count * stride, records, 0, count * stride))
+      val layerOf = layerOfByte(format, stride)
+      for (subset <- 0 until 6) {
+        val needed = Array.fill(stride)(rnd.nextInt(6) == 0)
+        val layers = LazChunkDecoder.layersFor(format, stride, needed)
+        assert(layers(0), "the XY layer is always decoded")
+        assert(needed.indices.forall(b => !needed(b) || layers(layerOf(b))))
+        val dec = new LazChunkDecoder(format, stride, layers)
+        val back = dec.decode(chunk, count)
+        for (i <- 0 until count; b <- 0 until stride if layers(layerOf(b)))
+          assert(back(i * stride + b) == records(i * stride + b),
+            s"trial $trial subset $subset: format $format record $i byte $b " +
+              s"(layer ${LazChunkDecoder.layerNames(format, stride)(layerOf(b))})")
+      }
+    }
+  }
+
+  test("the layer table follows the POINT14 fields; pointwise formats have one stream") {
+    val names = LazChunkDecoder.layerNames(6, 30)
+    def decoded(bytes: Range*): Seq[String] = {
+      val on = LazChunkDecoder.layersFor(6, 30, b => bytes.exists(_.contains(b)))
+      names.zip(on).collect { case (n, true) => n }.toSeq
+    }
+    assert(decoded(0 until 4) == Seq("xy")) // x
+    assert(decoded(14 until 15) == Seq("xy")) // return
+    assert(decoded(8 until 12) == Seq("xy", "z"))
+    assert(decoded(15 until 16) == Seq("xy", "flags"))
+    assert(decoded(22 until 30, 12 until 14) == Seq("xy", "intensity", "gps"))
+    assert(decoded(16 until 18, 18 until 22) ==
+      Seq("xy", "classification", "angle", "user", "source"))
+    assert(LazChunkDecoder.layerNames(8, 38 + 2).toSeq.takeRight(4) ==
+      Seq("rgb", "nir", "extra0", "extra1"))
+    assert(LazChunkDecoder.layerNames(1, 28).toSeq == Seq("pointwise"))
+    assert(LazChunkDecoder.layersFor(1, 28, _ => false).toSeq == Seq(true))
+  }
+
+  test("one decoder reused across chunks of any size decodes each like a fresh one") {
+    // the decoder's chunk and record buffers only grow, so a small chunk
+    // after a large one must still decode exactly its own records
+    val rnd = new scala.util.Random(9)
+    for ((format, stride) <- Seq((1.toByte, 28), (6.toByte, 30), (8.toByte, 41))) {
+      val enc = new LazChunkEncoder(format, stride)
+      val chunks = Seq(3000, 40, 1, 700).map { count =>
+        val records =
+          if (format == 6) scanShaped14(count, count)
+          else { val b = new Array[Byte](count * stride); rnd.nextBytes(b); b }
+        (records, enc.encode(records, 0, count), count)
+      }
+      val shared = new LazChunkDecoder(format, stride)
+      chunks.foreach { case (records, chunk, count) =>
+        // padded like a reused read buffer: only the first len bytes count
+        val padded = java.util.Arrays.copyOf(chunk, chunk.length + 64)
+        java.util.Arrays.fill(padded, chunk.length, padded.length, 0x5A.toByte)
+        val back = shared.decode(padded, chunk.length, count)
+        assert(java.util.Arrays.equals(back, 0, count * stride, records, 0, count * stride),
+          s"format $format: $count-point chunk after reuse")
+      }
+    }
   }
 
   test("layered randomized property: formats 6-10 x extras x counts round-trip bit-exactly") {
@@ -267,7 +377,7 @@ class LazCodecSpec extends AnyFunSuite {
       val records = new Array[Byte](count * stride)
       rnd.nextBytes(records)
       val chunk = LazFile.encodeChunkLayered(LazFile.codecsLayeredFor(items), records, 0, count, stride)
-      val back = LazFile.decodeChunkLayered(LazFile.codecsLayeredFor(items), chunk, count, stride)
+      val back = decodeAllLayered(LazFile.codecsLayeredFor(items), chunk, count, stride)
       assert(java.util.Arrays.equals(back, records),
         s"trial $trial: format $format extra $extra count $count failed round trip")
     }
