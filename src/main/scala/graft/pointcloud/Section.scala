@@ -2,6 +2,7 @@ package graft.pointcloud
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import graft.pointcloud.connector.PointCloudUtil
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.types._
@@ -128,13 +129,12 @@ private[pointcloud] object FieldDecoder {
 /** Decodes records of one [[Section]] into a reused mutable row shaped as
   * `readSchema` (the pruned projection of the merged multi-file schema,
   * possibly including the synthesized fid/pid columns).
+  *
+  * The reference decoder, record at a time: no scan runs it. Scans decode
+  * through the connector's ColumnarFiller, which ColumnarFillerSpec
+  * checks against this class cell for cell.
   */
-final class RecordDecoder(
-    section: Section,
-    readSchema: StructType,
-    fid: Int,
-    fidCol: String = PointCloudOptions.DefaultFidCol,
-    pidCol: String = PointCloudOptions.DefaultPidCol) {
+final class RecordDecoder(section: Section, readSchema: StructType, fid: Int) {
 
   import FieldDecoder._
 
@@ -142,8 +142,8 @@ final class RecordDecoder(
 
   private val decoders: Array[FieldDecoder] =
     readSchema.fields.zipWithIndex.map { case (f, ord) =>
-      if (f.name == fidCol) new FidField(ord, fid)
-      else if (f.name == pidCol) new PidField(ord)
+      if (f.name == PointCloudUtil.FidCol) new FidField(ord, fid)
+      else if (f.name == PointCloudUtil.PidCol) new PidField(ord)
       else {
         val i = section.fieldIndex(f.name)
         if (i < 0) new AbsentField(ord)
@@ -230,10 +230,4 @@ final class RecordEncoder(
     }
     bytes
   }
-}
-
-/** Shared option names for the point-cloud connectors. */
-object PointCloudOptions {
-  val DefaultFidCol = "fid"
-  val DefaultPidCol = "pid"
 }

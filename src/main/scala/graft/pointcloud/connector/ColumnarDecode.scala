@@ -5,6 +5,7 @@ import java.nio.ByteBuffer
 import graft.pointcloud.Section
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
@@ -17,7 +18,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * path.
   */
 class BinarySectionColumnarReader(p: BinaryPartition, readSchema: StructType,
-    predicate: RecordPredicate = null)
+    predicate: RecordPredicate)
   extends PartitionReader[ColumnarBatch] {
 
   private val sectionSchema = DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
@@ -41,42 +42,17 @@ class BinarySectionColumnarReader(p: BinaryPartition, readSchema: StructType,
 
   private var nextIdx = 0L // next record index within the partition
 
-  // pushed-filter selection: indices of matching records within the chunk
-  private val sel: Array[Int] = if (predicate == null) null else new Array[Int](batchSize)
-
   override def next(): Boolean = {
-    while (true) {
-      if (nextIdx >= p.numRecords) return false
+    while (nextIdx < p.numRecords) {
       val n = math.min(batchSize.toLong, p.numRecords - nextIdx).toInt
       in.readFully(chunk, 0, n * p.stride)
-      val firstPid = p.startRecord + nextIdx
-      if (predicate == null) {
-        filler.fill(buf, vectors, n, firstPid)
-        batch.setNumRows(n)
-        nextIdx += n
-        return true
-      } else {
-        // evaluate on the raw bytes first, then decode only the survivors
-        // (ColumnarBatch has no selection vector, so compact while filling)
-        var m = 0
-        var i = 0
-        while (i < n) {
-          if (predicate.matches(buf, i * p.stride, firstPid + i)) {
-            sel(m) = i; m += 1
-          }
-          i += 1
-        }
-        nextIdx += n
-        if (m > 0) {
-          filler.fillSelected(buf, vectors, sel, m, firstPid)
-          batch.setNumRows(m)
-          return true
-        }
-        // whole chunk filtered out — read the next one instead of
-        // surfacing an empty batch
-      }
+      val m = filler.fill(buf, vectors, n, p.startRecord + nextIdx, predicate)
+      nextIdx += n
+      // a chunk the predicate empties is skipped, not surfaced as an
+      // empty batch
+      if (m > 0) { batch.setNumRows(m); return true }
     }
-    false // unreachable
+    false
   }
 
   override def get(): ColumnarBatch = batch
@@ -110,46 +86,26 @@ class LazSectionColumnarReader(p: LazPartition, sectionSchema: StructType,
   private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
 
   private val filler = new ColumnarFiller(sectionSchema, readSchema, p.stride, p.fid)
-  private val sel: Array[Int] = if (predicate == null) null else new Array[Int](batchSize)
 
   private var chunkIdx = -1
   private var recordsBefore = 0L
 
   override def next(): Boolean = {
-    while (true) {
-      var count = 0L
-      do {
-        if (chunkIdx >= 0) recordsBefore += p.chunkCounts(chunkIdx)
-        chunkIdx += 1
-        if (chunkIdx >= p.chunkOffsets.length) return false
-        count = p.chunkCounts(chunkIdx)
-      } while (count == 0)
-      val records = LazDecoders.readChunk(in, chunkDecoder, p, chunkIdx)
-      val buf = ByteBuffer.wrap(records).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      val firstPid = p.startRecord + recordsBefore
-      if (predicate == null) {
-        filler.fill(buf, vectors, count.toInt, firstPid)
-        batch.setNumRows(count.toInt)
-        return true
-      } else {
-        // claimed-pushed filters run on the decoded record bytes, and
-        // only the survivors column-fill (same compaction contract as
-        // the raw columnar reader)
-        var m = 0
-        var i = 0
-        while (i < count.toInt) {
-          if (predicate.matches(buf, i * p.stride, firstPid + i)) { sel(m) = i; m += 1 }
-          i += 1
-        }
-        if (m > 0) {
-          filler.fillSelected(buf, vectors, sel, m, firstPid)
-          batch.setNumRows(m)
-          return true
-        }
-        // whole chunk filtered out — decode the next one
+    while (chunkIdx + 1 < p.chunkOffsets.length) {
+      if (chunkIdx >= 0) recordsBefore += p.chunkCounts(chunkIdx)
+      chunkIdx += 1
+      val count = p.chunkCounts(chunkIdx).toInt
+      if (count > 0) {
+        val records = LazDecoders.readChunk(in, chunkDecoder, p, chunkIdx)
+        val buf = ByteBuffer.wrap(records).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        // claimed-pushed filters run on the decoded record bytes
+        val m = filler.fill(buf, vectors, count, p.startRecord + recordsBefore, predicate)
+        // a chunk the predicate empties is skipped, not surfaced as an
+        // empty batch
+        if (m > 0) { batch.setNumRows(m); return true }
       }
     }
-    false // unreachable
+    false
   }
 
   override def get(): ColumnarBatch = batch
@@ -158,4 +114,28 @@ class LazSectionColumnarReader(p: LazPartition, sectionSchema: StructType,
     in.close()
     batch.close()
   }
+}
+
+/** The rows of a columnar reader's batches, for callers of the row-reader
+  * contract: Spark itself reads binary and LAZ splits columnar
+  * ([[PointCloudReaderFactory.supportColumnarReads]]). Each row is
+  * copied, because a batch row's `get` reads a null cell as zero. */
+private[connector] final class BatchRowReader(batches: PartitionReader[ColumnarBatch])
+  extends PartitionReader[InternalRow] {
+
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+  private var row: InternalRow = _
+
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    row = rows.next().copy()
+    true
+  }
+
+  override def get(): InternalRow = row
+
+  override def close(): Unit = batches.close()
 }

@@ -1,9 +1,8 @@
 package graft.pointcloud.connector
 
 import java.io.{BufferedReader, InputStreamReader}
-import java.nio.ByteBuffer
 
-import graft.pointcloud.{RecordDecoder, Section}
+import graft.pointcloud.Section
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
@@ -789,8 +788,8 @@ private[graft] object LazPlanning {
 
 class PointCloudReaderFactory(
     readSchemaJson: String,
-    tableSchemaJson: String = null,
-    pushedFilters: Array[SourceFilter] = Array.empty)
+    tableSchemaJson: String,
+    pushedFilters: Array[SourceFilter])
   extends PartitionReaderFactory {
 
   // parsed once per task, not once per split of a packed task
@@ -800,8 +799,12 @@ class PointCloudReaderFactory(
     DataType.fromJson(tableSchemaJson).asInstanceOf[StructType]
   @transient private lazy val lazColumns = LazLayers.columns(readSchema, pushedFilters)
 
+  /** XYZ text reads row by row. Binary and LAZ splits, which Spark reads
+    * through [[createColumnarReader]], serve this contract as the rows of
+    * those batches, so they too are decoded by [[ColumnarFiller]]. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    taskReader(partition, rowReader)
+    if (supportColumnarReads(partition)) new BatchRowReader(createColumnarReader(partition))
+    else taskReader(partition, { case (p: XyzPartition, _) => new XyzReader(p, readSchema) })
 
   /** A task's reader: every split of the task shares one [[LazDecoders]]. */
   private def taskReader[T](partition: InputPartition,
@@ -811,15 +814,6 @@ class PointCloudReaderFactory(
       case PackedPartition(splits) => new PackedReader(splits, open(_, decoders))
       case p => open(p, decoders)
     }
-  }
-
-  private def rowReader(partition: InputPartition,
-      decoders: LazDecoders): PartitionReader[InternalRow] = partition match {
-    case p: BinaryPartition => new BinarySectionReader(p, readSchema, predicate(p))
-    case p: LazPartition =>
-      val schema = sectionSchema(p)
-      new LazSectionReader(p, schema, readSchema, lazPredicate(p, schema), decoders(p, schema))
-    case p: XyzPartition => new XyzReader(p, readSchema)
   }
 
   /** Fixed-stride binary sections decode vectorized (ColumnarBatch) —
@@ -867,115 +861,6 @@ class PointCloudReaderFactory(
     else new RecordPredicate(pushedFilters, tableSchema,
       Section(p.location, 0, p.numRecords, littleEndian = true, sectionSchema, p.stride),
       p.fid)
-}
-
-/** Streams one partition's records through a reused chunk buffer and
-  * decodes them into a reused row — no per-record allocation. Pushed
-  * filters are evaluated on the raw record bytes; non-matching records
-  * are skipped before any decode. */
-class BinarySectionReader(p: BinaryPartition, readSchema: StructType,
-    predicate: RecordPredicate = null)
-  extends PartitionReader[InternalRow] {
-
-  private val sectionSchema = DataType.fromJson(p.sectionSchemaJson).asInstanceOf[StructType]
-  private val section = Section(p.location, p.sectionOffset, p.numRecords,
-    p.littleEndian, sectionSchema, p.stride)
-  private val decoder = new RecordDecoder(section, readSchema, p.fid)
-
-  private val path = new Path(p.location)
-  private val in = path.getFileSystem(LocalIo.conf).open(path)
-  in.seek(p.sectionOffset + p.startRecord * p.stride)
-
-  // chunked reads: ~4 MiB of whole records at a time
-  private val recordsPerChunk: Int =
-    math.max(1, math.min(p.numRecords, (4 << 20) / math.max(1, p.stride)).toInt)
-  private val chunk = new Array[Byte](recordsPerChunk * p.stride)
-  private val buf = ByteBuffer.wrap(chunk).order(section.order)
-
-  private var nextIdx = 0L          // next record index within this partition
-  private var chunkStart = 0L       // partition-record index of chunk[0]
-  private var chunkLen = 0          // records currently in chunk
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      if (nextIdx >= p.numRecords) return false
-      if (nextIdx - chunkStart >= chunkLen) {
-        val n = math.min(recordsPerChunk.toLong, p.numRecords - nextIdx).toInt
-        in.readFully(chunk, 0, n * p.stride)
-        chunkStart = nextIdx
-        chunkLen = n
-      }
-      val base = ((nextIdx - chunkStart) * p.stride).toInt
-      val pid = p.startRecord + nextIdx
-      nextIdx += 1
-      if (predicate == null || predicate.matches(buf, base, pid)) {
-        current = decoder.decode(buf, base, pid)
-        return true
-      }
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
-}
-
-/** Decodes a run of LAZ chunks: each chunk's compressed bytes are read
-  * whole (they are the IO unit the chunk table bounds), entropy-decoded
-  * into raw LAS record bytes, and handed to the SAME RecordDecoder the
-  * uncompressed reader uses — schema casts, fid/pid synthesis and column
-  * pruning are shared, so a .laz scan differs from .las only in the
-  * decode step. Sequential within a chunk by construction (prediction
-  * state chains point to point); parallel ACROSS chunks/partitions.
-  * `chunkDecoder` is the task's, and decodes only the layers holding
-  * the read and predicate columns ([[LazLayers]]). */
-class LazSectionReader(p: LazPartition, sectionSchema: StructType, readSchema: StructType,
-    predicate: RecordPredicate,
-    chunkDecoder: graft.pointcloud.las.laz.LazChunkDecoder)
-  extends PartitionReader[InternalRow] {
-
-  private val section = Section(p.location, 0, p.numRecords,
-    littleEndian = true, sectionSchema, p.stride)
-  private val decoder = new RecordDecoder(section, readSchema, p.fid)
-
-  private val path = new Path(p.location)
-  private val in = path.getFileSystem(LocalIo.conf).open(path)
-
-  private var chunkIdx = -1
-  private var buf: ByteBuffer = _
-  private var idxInChunk = 0
-  private var countInChunk = 0
-  private var pid = p.startRecord - 1
-  private var curBase = 0
-
-  override def next(): Boolean = {
-    while (true) {
-      while (idxInChunk >= countInChunk) {
-        chunkIdx += 1
-        if (chunkIdx >= p.chunkOffsets.length) return false
-        val count = p.chunkCounts(chunkIdx)
-        if (count > 0) {
-          val records = LazDecoders.readChunk(in, chunkDecoder, p, chunkIdx)
-          buf = ByteBuffer.wrap(records).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          idxInChunk = 0
-          countInChunk = count.toInt
-        }
-      }
-      curBase = idxInChunk * p.stride
-      idxInChunk += 1
-      pid += 1
-      // filters claimed as pushed are honored on the DECODED record
-      // bytes (the chunk must entropy-decode either way; what pushdown
-      // saves here is row materialization, not decode work)
-      if (predicate == null || predicate.matches(buf, curBase, pid)) return true
-    }
-    false // unreachable
-  }
-
-  override def get(): InternalRow = decoder.decode(buf, curBase, pid)
-
-  override def close(): Unit = in.close()
 }
 
 /** Tab-separated text reader: types parsed per the schema, missing

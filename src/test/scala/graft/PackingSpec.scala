@@ -89,7 +89,7 @@ class PackingSpec extends SparkTestBase {
         Seq("BinaryPartition", "LazPartition"))
       assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
       assert(rows(df) == want)
-      // the row path: the same task through createReader
+      // the row contract: the same task's batches, row by row, through createReader
       val scan = scanOf(df)
       val factory = scan.createReaderFactory()
       val schema = scan.readSchema()

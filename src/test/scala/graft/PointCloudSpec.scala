@@ -234,7 +234,7 @@ class PointCloudSpec extends SparkTestBase {
 
   test("row-based reader applies pushed filters (non-columnar path)") {
     // Spark picks the columnar reader for binary scans, so drive the
-    // row-based PartitionReader directly through the factory contract
+    // factory's row contract directly; it serves the columnar batches' rows
     val dir = tmpDir("rowpred")
     samplePoints.coalesce(1).writeLas(dir)
     val df = spark.read.las(dir).filter($"x" > 900)
@@ -391,9 +391,9 @@ class PointCloudSpec extends SparkTestBase {
   }
 
   test("selected decode path produces identical rows to the sequential path") {
-    // a tautologically-true pushed filter forces fillColumnSelected for
-    // every record; any drift between the two decode loops (cast chain,
-    // zero-extend, nodata) shows up as a row mismatch
+    // a tautologically-true pushed filter sends every record through the
+    // filler's selection; any drift between its selected and unselected
+    // reads (cast chain, zero-extend, nodata) shows up as a row mismatch
     val dir = tmpDir("selpath")
     samplePoints.writeLas(dir)
     val cols = Seq("x", "y", "z", "intensity", "flags", "classification")

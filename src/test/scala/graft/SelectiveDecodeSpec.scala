@@ -194,8 +194,9 @@ class SelectiveDecodeSpec extends SparkTestBase {
       }, "no task packs both a format-1 and a format-6 split")
       val plan = mixed.queryExecution.executedPlan.toString
       assert(plan.contains("LazLayers: [xy,z,classification,gps,pointwise]"), plan)
-      // both readers: the row reader and the columnar reader walk the
-      // same packed tasks through the same task-shared decoders
+      // both reader contracts: the row contract reads the rows of the
+      // columnar reader's batches, over the same packed tasks and
+      // task-shared decoders
       val factory = mixed.queryExecution.executedPlan
         .collect { case b: BatchScanExec => b.readerFactory }.head
       def sums(read: PackedPartition => Iterator[(Long, Long)]): (Long, Long) =
