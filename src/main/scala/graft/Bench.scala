@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints a JSON line {"metric":...,"queries":{name:sec,...}}, also
@@ -57,12 +56,13 @@ object Bench {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Per-table footer row counts + an MD5 over the physical parquet
-    * schemas (footer metadata only — no data IO). A missing/unreadable
-    * table records -1 and poisons the hash input rather than throwing:
-    * the fingerprint must never kill the bench. */
+    * schemas (footer metadata only — no data IO, on the shared
+    * metadata-read pool). A missing/unreadable table records -1 and
+    * poisons the hash input rather than throwing: the fingerprint must
+    * never kill the bench. */
   private def dataFingerprint(sfDir: String): (String, String) = {
     val conf = new org.apache.hadoop.conf.Configuration()
-    val parts = TableNames.map { t =>
+    val parts = Fs.readAll(TableNames) { t =>
       try {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(s"$sfDir/$t.parquet"), conf)
@@ -162,19 +162,9 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // fork-free local FS (chmod/readlink shell-outs dominate the
-      // micro-batch and task-commit floor without the native lib)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.NoForkLocalFs].getName)
-      .getOrCreate()
+    val spark = Session.start(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated name-prefix filter, for iterating on one
     // query family locally; the driver never sets it (full run). A set-
@@ -436,7 +426,7 @@ object Bench {
         // (dd10's candidate join spans all cores) — a contended box shows
         // up in calib_mt long before calib moves
         val pCalibPre = calibrateOnce()
-        val pCalibMtPre = calibrateMt(cpus.toInt)
+        val pCalibMtPre = calibrateMt(cpus)
         val pIoPre = calibrateIo(dir)
         // per-entry per-pass times survive into the artifact (the r15
         // lesson): a min can hide that BOTH passes of one entry were
@@ -469,7 +459,7 @@ object Bench {
           name -> (if (passes.isEmpty) 0.0 else passes.min)
         } finally spark.conf.set(mpbKey, prevMpb)
         val pCalibPost = calibrateOnce()
-        val pCalibMtPost = calibrateMt(cpus.toInt)
+        val pCalibMtPost = calibrateMt(cpus)
         val pIoPost = calibrateIo(dir)
         // eager teardown of the 10× corpus + its derived layouts: the
         // GRADED passes run next on this box, and a lingering multi-GB
@@ -542,7 +532,7 @@ object Bench {
     val calibMt = scala.collection.mutable.ArrayBuffer[Double]()
     val samples: Seq[Seq[(String, Double)]] = (0 until runs).map { k =>
       calib += calibrateOnce()
-      calibMt += calibrateMt(cpus.toInt)
+      calibMt += calibrateMt(cpus)
       val off = (k * names.size) / runs
       (names.drop(off) ++ names.take(off)).map { name =>
         val t0 = System.nanoTime()
@@ -614,9 +604,7 @@ object Bench {
     // onto stderr after our output, pushing the JSON line out of a
     // bounded log tail (r03's driver saw exactly that). Guarded so a
     // teardown failure can never eat the result line.
-    try org.apache.spark.sql.graftglue.Bridge.stopStateStores()
-    catch { case _: Throwable => }
-    try spark.stop()
+    try Session.stop(spark)
     catch { case _: Throwable => }
     // The driver captures only a bounded TAIL of stdout and parses the
     // JSON line out of it; the verbose line above grew past that window

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev-loop plan audit: print the formatted physical plan of one or more
   * SparkEntry queries (name prefixes, like Verify's filter arg).
   * `runMain graft.Explain <sfDir> <prefix>[,<prefix>...]` */
@@ -7,19 +6,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, prefixes) = args.take(2)
     val wanted = prefixes.split(",")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fork-free local FS (chmod/readlink shell-outs dominate the
-      // micro-batch and task-commit floor without the native lib)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.NoForkLocalFs].getName)
-      .getOrCreate()
+    val spark = Session.start(Session.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries
       .filter(kv => wanted.exists(kv._1.startsWith)).toSeq.sortBy(_._1)
@@ -28,7 +15,6 @@ object Explain {
         try fn(spark, sfDir).explain("formatted")
         catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
       }
-    org.apache.spark.sql.graftglue.Bridge.stopStateStores()
-    spark.stop()
+    Session.stop(spark)
   }
 }

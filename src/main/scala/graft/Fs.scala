@@ -2,6 +2,42 @@ package graft
 
 /** Tiny filesystem helpers shared by the query layer and tests. */
 object Fs {
+  /** Threads of the [[readAll]] pool. */
+  private final val ReadParallelism = 16
+
+  /** The JVM-wide metadata-read pool, created on first use and shared by
+    * every [[readAll]]: daemon threads (they never hold a JVM open) that
+    * retire after a minute idle, so building and shutting down a pool per
+    * call never costs more than the reads it runs. */
+  private lazy val readPool: java.util.concurrent.ExecutorService = {
+    val threads = new java.util.concurrent.atomic.AtomicInteger()
+    val pool = new java.util.concurrent.ThreadPoolExecutor(
+      ReadParallelism, ReadParallelism, 60L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-metadata-read-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** `items.map(read)` on the bounded metadata-read pool, results in
+    * `items` order. For per-file metadata (headers, footers): tiny IO,
+    * but ~1e5 files read by a serial driver loop are 1e5 sequential
+    * storage round trips (SURVEY O9). `read` handles its own per-item
+    * errors; one it lets escape is rethrown here. Never call it from
+    * inside a `read`: the outer reads could hold every pool thread
+    * while the inner ones wait in the queue. */
+  def readAll[A, B](items: Seq[A])(read: A => B): Seq[B] =
+    items.iterator.map { a =>
+      readPool.submit(new java.util.concurrent.Callable[B] { def call(): B = read(a) })
+    }.toVector.map { f =>
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
+
   /** A tmpfs base for ephemeral scratch (streaming checkpoints, serving
     * layouts) when the host has one with ample headroom — containers
     * commonly cap /dev/shm at 64 MB, and a filled tmpfs would fail jobs

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev-only profiling main (not part of the driver contract): runs the
@@ -13,18 +12,7 @@ object ProfStream {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // fork-free local FS (chmod/readlink shell-outs dominate the
-      // micro-batch and task-commit floor without the native lib)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.NoForkLocalFs].getName)
-      .getOrCreate()
+    val spark = Session.start(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // job-level decomposition: wall per job vs summed task time — the
     // gap between a query's total and Σ(job wall) is driver-side
@@ -80,6 +68,6 @@ object ProfStream {
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[prof] $n pass$pass total=$sec%.3f s rows=$cnt")
     }
-    spark.stop()
+    Session.stop(spark)
   }
 }

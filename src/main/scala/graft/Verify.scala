@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",")) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fork-free local FS (chmod/readlink shell-outs dominate the
-      // micro-batch and task-commit floor without the native lib)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.NoForkLocalFs].getName)
-      .getOrCreate()
+    val spark = Session.start(Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must stay VISIBLE: collect name → message and
@@ -64,7 +51,6 @@ object Verify {
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries FAILED: ${failed.keys.mkString(", ")}")
     }
-    org.apache.spark.sql.graftglue.Bridge.stopStateStores()
-    spark.stop()
+    Session.stop(spark)
   }
 }

@@ -676,7 +676,8 @@ object Clustering {
     * `(cell, None)` for a file whose id stats are missing/untyped
     * (that cell must stay unconditionally candidate); `None` overall
     * when the layout cannot be listed/footer-read at all — the caller
-    * then keeps the full-layout locate scan. */
+    * then keeps the full-layout locate scan. Footers are read on the
+    * shared metadata-read pool ([[graft.Fs.readAll]]). */
   private def fileIdStats(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Seq[(Long, Option[(Long, Long)])]] =
     try {
@@ -691,7 +692,7 @@ object Clustering {
             .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
             .map(f => (cell, f.getPath))
         }
-      Some(files.toSeq.map { case (cell, p) =>
+      Some(graft.Fs.readAll(files.toSeq) { case (cell, p) =>
         val range: Option[(Long, Long)] =
           try {
             val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)

@@ -194,19 +194,21 @@ final class RecordEncoder(
   private val bytes = new Array[Byte](recordLength)
   private val buffer = ByteBuffer.wrap(bytes).order(section.order)
 
-  // (input ordinal or -1, type tag, byte offset) per file field
-  private val plan: Array[(Int, Int, Int)] =
-    fileSchema.fields.zipWithIndex.map { case (f, i) =>
-      val in = inputSchema.fields.indexWhere(g => g.name == f.name && g.dataType == f.dataType)
-      (in, FieldDecoder.Tag.of(f.dataType), section.fieldOffsets(i))
-    }
+  // per file field: input ordinal or -1, type tag, byte offset — three
+  // primitive arrays, so the per-row loop boxes nothing
+  private val inputOrdinal: Array[Int] = fileSchema.fields.map(f =>
+    inputSchema.fields.indexWhere(g => g.name == f.name && g.dataType == f.dataType))
+  private val tags: Array[Int] = fileSchema.fields.map(f => FieldDecoder.Tag.of(f.dataType))
+  private val offsets: Array[Int] = section.fieldOffsets
 
   /** Encode `row` (shaped as `inputSchema`); returns an internally reused
     * byte array of exactly `recordLength` bytes. */
   def encode(row: InternalRow): Array[Byte] = {
     var i = 0
-    while (i < plan.length) {
-      val (in, tag, off) = plan(i)
+    while (i < tags.length) {
+      val in = inputOrdinal(i)
+      val tag = tags(i)
+      val off = offsets(i)
       import FieldDecoder.Tag
       if (in < 0 || row.isNullAt(in)) {
         // zero-fill: absent or null field

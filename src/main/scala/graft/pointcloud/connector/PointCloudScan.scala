@@ -304,18 +304,9 @@ class PointCloudScan(
   /** `copc.maxlevel`, parsed ONCE at scan construction so a malformed
     * value fails the query instead of degrading; and a declared preview
     * over a source that cannot honor it (any non-COPC file) is rejected
-    * outright — the [[BboxOption]] precedent: a silently over-delivering
-    * subscription (the FULL corpus where ~1/8 was declared) is worse
-    * than an error. */
+    * outright. */
   private val copcMaxLevel: Int = CopcPrune.maxLevelOption(options)
-  if (copcMaxLevel >= 0) resolved.sections.foreach { sf =>
-    // a zero-record section honors any preview trivially (empty task
-    // files are normal in a multi-task layout)
-    require(sf.section.count == 0 || sf.laz.exists(_.chunkLevels != null),
-      s"copc.maxLevel declared but ${sf.section.location} carries no COPC " +
-        "octree index, so the coarse preview cannot be honored there; " +
-        "read it without the option instead")
-  }
+  if (copcMaxLevel >= 0) resolved.sections.foreach(CopcPrune.requirePreviewHonorable)
 
   /** Sections surviving runtime (join-driven) filtering; starts as the
     * planning-time set. */
@@ -732,7 +723,28 @@ private[graft] object CopcPrune {
         require(v >= 0, s"copc.maxLevel must be >= 0, got $v")
         v
     }
+
+  /** The one rule for a declared `copc.maxlevel` preview, checked by the
+    * batch scan and the stream alike: a section with records but no COPC
+    * octree index cannot honor it, and the read fails (the [[BboxOption]]
+    * precedent: a silently over-delivering subscription, the FULL corpus
+    * where ~1/8 was declared, is worse than an error). A zero-record
+    * section honors any preview trivially (empty task files are normal
+    * in a multi-task layout). */
+  def requirePreviewHonorable(sf: SectionWithFid): Unit =
+    if (sf.section.count != 0 && !sf.laz.exists(_.chunkLevels != null))
+      throw new CopcPreviewUnhonorable(
+        s"copc.maxLevel declared but ${sf.section.location} carries no COPC " +
+          "octree index, so the coarse preview cannot be honored there; " +
+          "read it without the option instead")
 }
+
+/** A declared `copc.maxlevel` preview the source cannot honor. The
+  * streaming planner re-throws it past its skip-unreadable catch, so a
+  * contract breach fails the query instead of reading as a healthy
+  * empty stream. */
+private[connector] class CopcPreviewUnhonorable(msg: String)
+  extends IllegalArgumentException(msg)
 
 /** Shared LAZ split planning (batch scan + streaming source). A `keep`
   * mask (from [[CopcPrune]]) drops pruned chunks at planning: each

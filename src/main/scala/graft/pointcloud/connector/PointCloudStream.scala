@@ -269,23 +269,9 @@ class PointCloudMicroBatchStream(
           .filter(sf => kind == FormatKind.Xyz || planFilters.isEmpty ||
             SectionSkip.mayMatch(sf, planFilters))
         // a declared preview over a file without a COPC octree index must
-        // FAIL the stream (bbox precedent: silent over-delivery is worse)
-        // — thrown as the marker the catch below re-throws past the
-        // skip-unreadable path
-        if (copcMaxLevel >= 0) kept.foreach { sf =>
-          sf.laz match {
-            case Some(lz) if lz.chunkLevels == null && lz.numChunks > 0 =>
-              throw new CopcPreviewUnhonorable(
-                s"copc.maxLevel declared but $path carries no COPC " +
-                  "octree index, so the coarse preview cannot be " +
-                  "honored there; read it without the option instead")
-            case None if sf.section.count != 0 =>
-              throw new CopcPreviewUnhonorable(
-                s"copc.maxLevel declared but $path is not compressed " +
-                  "COPC, so the coarse preview cannot be honored there")
-            case _ =>
-          }
-        }
+        // FAIL the stream — thrown as the marker the catch below re-throws
+        // past the skip-unreadable path
+        if (copcMaxLevel >= 0) kept.foreach(CopcPrune.requirePreviewHonorable)
         kept
       } catch {
         case e: CopcPreviewUnhonorable => throw e // a contract breach, not a bad file
@@ -342,10 +328,3 @@ object PointCloudMicroBatchStream {
       }
   }
 }
-
-/** Marker for a declared `copc.maxlevel` preview the source cannot honor
-  * — re-thrown past the streaming planner's skip-unreadable catch, so a
-  * contract breach fails the query instead of reading as a healthy
-  * empty stream. */
-private[connector] class CopcPreviewUnhonorable(msg: String)
-  extends IllegalArgumentException(msg)

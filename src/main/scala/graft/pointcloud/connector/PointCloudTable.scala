@@ -18,31 +18,6 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-object PointCloudProvider {
-  /** Driver threads for parallel header reads during resolve. */
-  final val HeaderReadParallelism = 16
-  /** Per-path header memo bound (entries, not bytes; headers are tiny). */
-  final val HeaderCacheMaxEntries = 100000
-
-  /** The JVM-wide header-read pool, created on first use and shared by
-    * every resolve: daemon threads (they never hold a JVM open) that
-    * retire after a minute idle, so building and shutting down a pool per
-    * `load()` no longer costs more than the header parses it runs. */
-  private[connector] lazy val headerPool: java.util.concurrent.ExecutorService = {
-    val threads = new java.util.concurrent.atomic.AtomicInteger()
-    val pool = new java.util.concurrent.ThreadPoolExecutor(
-      HeaderReadParallelism, HeaderReadParallelism, 60L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-header-read-${threads.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
-}
-
 /** Which point-cloud format a table speaks. `extension` names the
   * default write suffix; `extensions` is everything the reader lists —
   * the LAS table reads `.las` and LASzip-compressed `.laz` side by side
@@ -112,35 +87,16 @@ abstract class PointCloudProvider extends TableProvider
     if (c != null && c._1 == key) return c._2
     val conf = LocalIo.conf
     val files = PointCloudUtil.expandPaths(PointCloudUtil.explicitPaths(options), kind, conf)
-    // Header reads are tiny metadata IO, but a 100 TB dataset is ~1e5
-    // files and a serial driver loop is 1e5 sequential storage round
-    // trips (SURVEY O9). Parse headers on the bounded shared pool — path order
-    // (and so fid numbering) is preserved by indexing the futures — and
-    // memoize per (path, element), so an incremental re-resolve (new
-    // files arriving in a watched directory) only reads the new headers.
-    val element = options.getOrDefault("element", "vertex")
-    val perFile: Seq[Seq[FileSection]] =
-      files.map { p =>
-        PointCloudProvider.headerPool.submit(new java.util.concurrent.Callable[Seq[FileSection]] {
-          override def call(): Seq[FileSection] = {
-            val ck = p + "\u0001" + element
-            val hit = headerCache.get(ck)
-            if (hit != null) hit
-            else {
-              try {
-                val r = readSections(p, options, conf)
-                if (headerCache.size() < PointCloudProvider.HeaderCacheMaxEntries)
-                  headerCache.put(ck, r)
-                r
-              } catch {
-                case e: Exception =>
-                  logWarning(s"Skipping unreadable ${kind.name} file $p: ${e.getMessage}")
-                  Nil
-              }
-            }
-          }
-        })
-      }.map(_.get())
+    // Headers parse on the shared metadata-read pool; results come back
+    // in path order, and so does fid numbering.
+    val perFile: Seq[Seq[FileSection]] = graft.Fs.readAll(files) { p =>
+      try readSections(p, options, conf)
+      catch {
+        case e: Exception =>
+          logWarning(s"Skipping unreadable ${kind.name} file $p: ${e.getMessage}")
+          Nil
+      }
+    }
     val secs = mutable.ArrayBuffer.empty[SectionWithFid]
     perFile.zipWithIndex.foreach { case (sections, fid) =>
       secs ++= sections.map(fs => SectionWithFid(fs.section, fid, fs.lasStats, fs.laz))
@@ -154,12 +110,6 @@ abstract class PointCloudProvider extends TableProvider
     cached = (key, r)
     r
   }
-
-  /** Per-(path, element) header memo. Stale only if a file is rewritten
-    * in place under the same path — the same contract as the resolve
-    * cache above (use a fresh provider/session to re-read). */
-  private val headerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[FileSection]]()
 
   /** Per-file header parse → sections (one for LAS, one per chosen element
     * for PLY; XYZ overrides with a pseudo-section). */

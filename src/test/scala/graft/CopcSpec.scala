@@ -347,6 +347,20 @@ class CopcSpec extends SparkTestBase {
       spark.read.format("las").option("copc.maxlevel", "1").load(lasDir).count()
     }
     assert(e1.getMessage.contains("octree index"))
+    // the stream checks the same rule and fails with the same message
+    val q = spark.readStream
+      .schema(spark.read.las(lasDir).schema)
+      .format("las").option("copc.maxlevel", "1").load(lasDir)
+      .writeStream.format("noop")
+      .option("checkpointLocation", tmpDir("ml-las-ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    val e3 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.processAllAvailable() finally q.stop()
+    }
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
+    assert(rootCause(e3).getMessage == rootCause(e1).getMessage)
     val e2 = intercept[Exception] {
       spark.read.format("las").option("copc.maxlevel", "x").load(lasDir).count()
     }

@@ -537,32 +537,41 @@ class OpsSpec extends SparkTestBase {
   test("takedown locate prunes to candidate cells via parquet footer id stats") {
     // clustered-id layout: cell c holds exactly ids [25c, 25c+24], so the
     // per-file footer min/max id stats (written for free by every parquet
-    // write) must prune the locate scan to a STRICT subset of cells
-    val dir = java.nio.file.Files.createTempDirectory("graft-takedown-stats")
-    try {
-      val path = dir.toString
-      spark.range(0, 100)
-        .select($"id", ($"id" % 5).cast("double").as("payload"),
-          ($"id" / 25).cast("long").as("cell"))
-        .write.partitionBy("cell").mode("overwrite").parquet(path)
-      val rm = Seq(30L, 31L).toDF("id").select($"id".as("__rm_id"))
-      val cand = Clustering.takedownCandidateCells(spark, path, rm)
-      assert(cand.contains(Seq(1L)),
-        s"expected locate candidates [1] on a clustered-id corpus, got $cand")
-      // a removal id outside every file's range prunes the locate to zero
-      val none = Clustering.takedownCandidateCells(spark, path,
-        Seq(1000L).toDF("id").select($"id".as("__rm_id")))
-      assert(none.contains(Seq.empty[Long]), s"got $none")
-      // the value contract holds through the pruned locate path
-      val affected = Clustering.deleteFromCellLayout(spark, path,
-        Seq(30L, 31L).toDF("id"))
-      assert(affected == Seq(1L))
-      val ids = spark.read.parquet(path).select("id").as[Long].collect().toSet
-      assert(!ids(30L) && !ids(31L) && ids.size == 98)
-      // a no-match removal set affects nothing
-      assert(Clustering.deleteFromCellLayout(spark, path,
-        Seq(1000L).toDF("id")).isEmpty)
-    } finally Fs.deleteRecursively(dir)
+    // write) must prune the locate scan to a STRICT subset of cells.
+    // Written once as one file per cell and once as one file per id (25
+    // files per cell), so the pooled footer read runs over many files.
+    for (partitions <- Seq(1, 100)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-takedown-stats")
+      try {
+        val path = dir.toString
+        spark.range(0, 100, 1, partitions)
+          .select($"id", ($"id" % 5).cast("double").as("payload"),
+            ($"id" / 25).cast("long").as("cell"))
+          .write.partitionBy("cell").mode("overwrite").parquet(path)
+        if (partitions > 1) (0 to 3).foreach { c =>
+          val files = dir.resolve(s"cell=$c").toFile.listFiles()
+            .count(_.getName.endsWith(".parquet"))
+          assert(files >= 20, s"cell=$c holds $files files")
+        }
+        val rm = Seq(30L, 31L).toDF("id").select($"id".as("__rm_id"))
+        val cand = Clustering.takedownCandidateCells(spark, path, rm)
+        assert(cand.contains(Seq(1L)),
+          s"expected locate candidates [1] on a clustered-id corpus, got $cand")
+        // a removal id outside every file's range prunes the locate to zero
+        val none = Clustering.takedownCandidateCells(spark, path,
+          Seq(1000L).toDF("id").select($"id".as("__rm_id")))
+        assert(none.contains(Seq.empty[Long]), s"got $none")
+        // the value contract holds through the pruned locate path
+        val affected = Clustering.deleteFromCellLayout(spark, path,
+          Seq(30L, 31L).toDF("id"))
+        assert(affected == Seq(1L))
+        val ids = spark.read.parquet(path).select("id").as[Long].collect().toSet
+        assert(!ids(30L) && !ids(31L) && ids.size == 98)
+        // a no-match removal set affects nothing
+        assert(Clustering.deleteFromCellLayout(spark, path,
+          Seq(1000L).toDF("id")).isEmpty)
+      } finally Fs.deleteRecursively(dir)
+    }
   }
 
   test("quantization codebook saves and loads bit-identically") {

@@ -27,21 +27,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  // The extensions class is set HERE, on the first session of the JVM,
-  // because spark.sql.extensions is a static conf consumed only when the
-  // SparkContext is created — the production deployment shape. The
-  // config-path test asserts a fresh newSession() resolves the injected
-  // functions without any registerAll call.
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.hadoop.fs.file.impl",
-      classOf[graft.hadoop.NoForkLocalFileSystem].getName)
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-      classOf[graft.hadoop.NoForkLocalFs].getName)
-    .getOrCreate()
+  // The production session, on 4 cores. The config-path test asserts a
+  // fresh newSession() resolves the extensions' injected functions
+  // without any registerAll call.
+  lazy val session: SparkSession = Session.start(4)
 }
