@@ -347,20 +347,42 @@ class CopcSpec extends SparkTestBase {
       spark.read.format("las").option("copc.maxlevel", "1").load(lasDir).count()
     }
     assert(e1.getMessage.contains("octree index"))
-    // the stream checks the same rule and fails with the same message
-    val q = spark.readStream
-      .schema(spark.read.las(lasDir).schema)
-      .format("las").option("copc.maxlevel", "1").load(lasDir)
+    // a stream checks the same rule and fails with the same message: on
+    // the files present at start, and on a file that arrives later
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
+    def previewStream(dir: String, tag: String) = spark.readStream
+      .schema(spark.read.las(dir).schema)
+      .format("las").option("copc.maxlevel", "1").load(dir)
       .writeStream.format("noop")
-      .option("checkpointLocation", tmpDir("ml-las-ckpt"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", tmpDir(tag))
       .start()
+    val q = previewStream(lasDir, "ml-las-ckpt")
     val e3 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       try q.processAllAvailable() finally q.stop()
     }
-    def rootCause(t: Throwable): Throwable =
-      if (t.getCause == null || t.getCause == t) t else rootCause(t.getCause)
     assert(rootCause(e3).getMessage == rootCause(e1).getMessage)
+    val arrivals = tmpDir("ml-arrivals")
+    fmt6Points(500).coalesce(1).writeCopc(arrivals, Map("scale" -> "0.01"))
+    val q2 = previewStream(arrivals, "ml-arrivals-ckpt")
+    val e4 = try {
+      q2.processAllAvailable()
+      // staged, then moved in atomically, so the stream never lists a
+      // half-copied file
+      val las = new java.io.File(lasDir).listFiles().filter(_.getName.endsWith(".las")).head
+      val staged = java.nio.file.Paths.get(tmpDir("ml-stage"), las.getName)
+      Files.copy(las.toPath, staged)
+      Files.move(staged, java.nio.file.Paths.get(arrivals, las.getName),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+    } finally q2.stop()
+    val e5 = intercept[Exception] {
+      spark.read.format("las").option("copc.maxlevel", "1").load(arrivals).count()
+    }
+    assert(rootCause(e5).getMessage.contains("octree index"))
+    assert(rootCause(e4).getMessage == rootCause(e5).getMessage)
     val e2 = intercept[Exception] {
       spark.read.format("las").option("copc.maxlevel", "x").load(lasDir).count()
     }
