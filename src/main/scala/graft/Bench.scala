@@ -358,12 +358,10 @@ object Bench {
             }.reduce(_ unionByName _), "lineitem")
           }
         } finally spark.conf.set(tsTypeKey, prevTsType)
-        val rows = spark.read.parquet(dir.resolve("documents.parquet").toString).count() +
-          spark.read.parquet(dir.resolve("embeddings.parquet").toString).count() +
-          (if (needEvents)
-            spark.read.parquet(dir.resolve("events.parquet").toString).count() else 0L) +
-          (if (needLineitem)
-            spark.read.parquet(dir.resolve("lineitem.parquet").toString).count() else 0L)
+        val rows = Tables.documents(spark, dir.toString).count() +
+          Tables.embeddings(spark, dir.toString).count() +
+          (if (needEvents) Tables.events(spark, dir.toString).count() else 0L) +
+          (if (needLineitem) Tables.lineitem(spark, dir.toString).count() else 0L)
         val genSec = (System.nanoTime() - tGen) / 1e9
         val pErrs = scala.collection.mutable.LinkedHashMap[String, String]()
         // untimed: build the probe dir's memoized IVF quantizer (ss04's

@@ -1,17 +1,25 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * Each call is a plain parquet scan: Catalyst pushes filters and prunes
-  * columns into the scan, so callers can compose freely without caching.
+  * Each call is a plain parquet scan with its schema taken from the
+  * file's footer: Catalyst pushes filters and prunes columns into the
+  * scan, so callers can compose freely without caching.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `name`'s parquet with its schema read from the footer on the driver
+    * ([[org.apache.spark.sql.graftglue.Bridge.parquetSchema]]): the schema
+    * Spark would infer, without the one-task inference job a schema-less
+    * `spark.read.parquet` runs on every call. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Bridge.parquetSchema(spark, path)).parquet(path)
+  }
 
   /** The events parquet's `ts` physical unit has varied across driver
     * generations: INT64 TIMESTAMP(NANOS) — which Spark 4 cannot infer
@@ -20,7 +28,7 @@ object Tables {
     * Guessing wrong is silent and catastrophic: a NANOS-era reader
     * applied to a MICROS file divides microseconds by 1000 and every
     * event lands in 1970 at millisecond resolution. So the loaders sniff
-    * the unit ONCE per directory from the file footer ([[eventsTsIsMicros]])
+    * the unit from the file footer on every load ([[eventsTsIsMicros]])
     * and normalize to a microsecond TimestampType either way; every
     * consumer — batch or stream — sees one schema regardless of
     * generation.
@@ -36,43 +44,33 @@ object Tables {
     StructField("props", StringType)))
 
   /** True when the events file under `dir` stores ts as TIMESTAMP(MICROS):
-    * schema inference then yields a timestamp type (TimestampNTZType for
+    * the footer schema then yields a timestamp type (TimestampNTZType for
     * the driver's isAdjustedToUTC=false files, TimestampType were they
-    * UTC-adjusted). For the legacy TIMESTAMP(NANOS) layout inference
-    * throws `PARQUET_TYPE_ILLEGAL` instead. One footer read per directory
-    * per JVM (a driver-side metadata op — the data dirs are immutable). */
-  def eventsTsIsMicros(s: SparkSession, dir: String): Boolean = {
-    val path = s"$dir/events.parquet"
-    Option(tsUnitCache.get(path)).map(_.booleanValue).getOrElse {
-      // Only the EXPECTED inference failure (the NANOS layout's
-      // PARQUET_TYPE_ILLEGAL) selects the legacy path; anything else —
-      // missing file, transient FS error — propagates instead of being
-      // cached as "legacy" and silently mis-timing every later read.
-      val isMicros =
-        try s.read.parquet(path).schema("ts").dataType match {
-          case TimestampType | TimestampNTZType => true
-          // Any other inferred type (e.g. a future generation writing
-          // unannotated plain INT64 → LongType) means the unit is UNKNOWN:
-          // fail loudly rather than guess a conversion factor and silently
-          // mis-time every event.
-          case other => throw new IllegalStateException(
-            s"events.parquet at $path: ts inferred as $other — expected a " +
-            "timestamp type (MICROS layout) or the NANOS inference failure; " +
-            "refusing to guess the epoch unit")
-        } catch {
-          // Only the EXACT known failure mode of the NANOS layout selects
-          // the legacy div-1000 path; an unrelated AnalysisException whose
-          // message merely mentions parquet must propagate.
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getCondition == "PARQUET_TYPE_ILLEGAL" => false
-        }
-      tsUnitCache.put(path, java.lang.Boolean.valueOf(isMicros))
-      isMicros
+    * UTC-adjusted). For the legacy TIMESTAMP(NANOS) layout the conversion
+    * throws `PARQUET_TYPE_ILLEGAL` instead. One driver-side footer read,
+    * no Spark job. */
+  def eventsTsIsMicros(s: SparkSession, dir: String): Boolean =
+    // Only the EXPECTED conversion failure (the NANOS layout's
+    // PARQUET_TYPE_ILLEGAL) selects the legacy path; anything else —
+    // missing file, transient FS error — propagates instead of silently
+    // mis-timing every read.
+    try Bridge.parquetSchema(s, s"$dir/events.parquet")("ts").dataType match {
+      case TimestampType | TimestampNTZType => true
+      // Any other type (e.g. a future generation writing unannotated
+      // plain INT64 → LongType) means the unit is UNKNOWN: fail loudly
+      // rather than guess a conversion factor and silently mis-time
+      // every event.
+      case other => throw new IllegalStateException(
+        s"events.parquet under $dir: ts reads as $other — expected a " +
+        "timestamp type (MICROS layout) or the NANOS conversion failure; " +
+        "refusing to guess the epoch unit")
+    } catch {
+      // Only the EXACT known failure mode of the NANOS layout selects
+      // the legacy div-1000 path; an unrelated AnalysisException whose
+      // message merely mentions parquet must propagate.
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "PARQUET_TYPE_ILLEGAL" => false
     }
-  }
-
-  private val tsUnitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   /** Converts the raw int64 `ts` column to a microsecond TimestampType:
     * identity reinterpretation for MICROS files, a truncating div 1000
@@ -98,14 +96,6 @@ object Tables {
     tsRawToMicros(
       s.read.schema(eventsSchema).parquet(s"$d/events.parquet"),
       eventsTsIsMicros(s, d))
-  /** Documents schema, for consumers that cannot infer (file streams). */
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 

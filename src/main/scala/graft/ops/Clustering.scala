@@ -242,16 +242,18 @@ object Clustering {
     // would reject any future row landing there (the append/serve
     // pattern). Such a cell keeps its coarse centroid as its single
     // fine centroid instead — a k1-row anti-join, all data-side. The
-    // fitted table is checkpointed ONCE before the fallback derivation
-    // (both union branches read it; an un-pinned plan would recompute
-    // the final n-row join per branch), and the union itself stays a
-    // cheap lazy view over the pinned blocks.
+    // fitted table is checkpointed before the fallback derivation (both
+    // union branches read it; an un-pinned plan would recompute the
+    // final n-row join per branch), and the union is checkpointed once
+    // more, so every probe collect and fine-join reads ≤ k1·k2 pinned
+    // rows instead of re-running the anti-join and distinct per query.
     val fitted = fine.localCheckpoint(eager = true)
     val coarseDf = coarseModel.toDF("coarse", "centroid")
     val fallback = coarseDf
       .join(fitted.select(col("coarse")).distinct(), Seq("coarse"), "left_anti")
       .select(col("coarse"), lit(0).as("fine"), col("centroid"))
-    TwoLevelModel(coarseModel, fitted.unionByName(fallback), k2, trusted = true)
+    TwoLevelModel(coarseModel,
+      fitted.unionByName(fallback).localCheckpoint(eager = true), k2, trusted = true)
   }
 
   /** Composite cell assignment against a [[TwoLevelModel]]: coarse via

@@ -158,6 +158,7 @@ object Sketches {
     * bucket summary — a tiny single partition by construction. */
   private def cumHistogram(vals: DataFrame): DataFrame = {
     val hist = vals.groupBy("b").agg(count(lit(1)).as("cnt"))
+    // unpartitioned windows, bounded: one row per occupied bucket, not per value
     val wc = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wn = Window.partitionBy().rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     hist

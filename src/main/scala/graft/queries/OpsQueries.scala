@@ -516,6 +516,7 @@ object OpsQueries {
     val rest = e.filter($"vec_id" =!= 0)
       .select($"vec_id", Similarity.cosine(
         transform($"embedding", _.cast("double")), q).as("sim"))
+    // both unpartitioned windows rank ≤ 10 rows (after a limit(10))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy($"sim".desc, $"vec_id")
     val exact = rest.sort($"sim".desc, $"vec_id").limit(10)
@@ -782,6 +783,7 @@ object OpsQueries {
     val rest = e.filter($"vec_id" =!= 0)
       .select($"vec_id", Similarity.cosine(
         transform($"embedding", _.cast("double")), q).as("sim"))
+    // both unpartitioned windows rank ≤ 10 rows (after a limit(10))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy($"sim".desc, $"vec_id")
     val exact = rest.sort($"sim".desc, $"vec_id").limit(10)

@@ -32,7 +32,7 @@ object EventStreams {
     * file-source path must be a directory, so glob-filter to the one
     * table file). A file stream cannot infer its schema, so `ts` is read
     * as the raw int64 and converted per the ts-unit sniff
-    * ([[graft.Tables.eventsTsIsMicros]], one batch footer read); the
+    * ([[graft.Tables.eventsTsIsMicros]], one driver-side footer read); the
     * returned stream always carries `ts` as a microsecond TimestampType,
     * same as [[graft.Tables.events]]. */
   def readEventStream(spark: SparkSession, sfDir: String): DataFrame =

@@ -59,10 +59,13 @@ object StreamingDedup {
     * before it carry hit=false the batch rule would flip. */
   final class ContractViolation(msg: String) extends IllegalStateException(msg)
 
-  /** The documents table as a file stream (explicit schema — file
-    * sources cannot infer). */
+  /** The documents table as a file stream. File sources cannot infer,
+    * so the schema is the batch loaders' own: read from the table's
+    * footer ([[org.apache.spark.sql.graftglue.Bridge.parquetSchema]]). */
   def readDocumentStream(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream.schema(graft.Tables.documentsSchema)
+    spark.readStream
+      .schema(org.apache.spark.sql.graftglue.Bridge.parquetSchema(
+        spark, s"$sfDir/documents.parquet"))
       .option("pathGlobFilter", "documents.parquet")
       .parquet(sfDir)
 

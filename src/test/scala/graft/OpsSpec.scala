@@ -283,6 +283,18 @@ class OpsSpec extends SparkTestBase {
     assert(err2.getMessage.contains("without fine centroids"))
   }
 
+  test("a fitted two-level model's fine table plans as one checkpointed relation") {
+    // the fit materializes fitted ∪ coverage fallback once, so a probe
+    // collect or fine-join reads pinned rows instead of re-running the
+    // fallback's anti-join and distinct on every query
+    val pts = spark.range(40).select($"id",
+        array(($"id" % 11).cast("double"), ($"id" % 5).cast("double")).as("v"))
+      .localCheckpoint(true)
+    val model = Clustering.kmeansTwoLevel(pts, "id", "v", dim = 2, k1 = 4, k2 = 3, iters = 2)
+    val plan = model.fine.queryExecution.optimizedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], plan.treeString)
+  }
+
   test("two-level IVF top-k equals the driver-side reference ladder") {
     val pts = spark.range(1, 80).select($"id",
         array(($"id" % 13).cast("double"), ($"id" % 7).cast("double"),
