@@ -6,8 +6,8 @@
 
 DIR is a checkout of each side (its own perfbench/ and sources). Both
 sides are built first, then each pair runs `perfbench/run.py` once per
-side with the same seed: the parent first on odd seeds, the change first
-on even seeds. Every run appends one JSON line to --out:
+side with the same seed, for the `run_seconds` that BENCHMARK.json fixes:
+the parent first on odd seeds, the change first on even seeds. Every run appends one JSON line to --out:
 
     {"workload", "seed", "side", "position", "trace", "elapsed_s", "rc", "result"}
 
@@ -75,12 +75,12 @@ def main():
     ap.add_argument("--pairs", required=True, type=int)
     ap.add_argument("--out", required=True)
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     args = ap.parse_args()
     sides = {"parent": os.path.abspath(args.parent), "change": os.path.abspath(args.change)}
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
     for d in sides.values():
         build(d)
     rows = []
@@ -88,7 +88,7 @@ def main():
         order = ("parent", "change") if seed % 2 else ("change", "parent")
         for pos, side in enumerate(order):
             rc, elapsed, result = run_once(sides[side], args.workload, seed,
-                                           args.seconds, args.trace)
+                                           seconds, args.trace)
             row = {"workload": args.workload, "seed": seed, "side": side,
                    "position": pos, "trace": args.trace, "elapsed_s": elapsed,
                    "rc": rc, "result": result}
