@@ -261,9 +261,7 @@ object Bench {
         import org.apache.spark.sql.functions._
         val scale = 10
         val tGen = System.nanoTime()
-        val dir = java.nio.file.Files.createTempDirectory("graft_sf1_probe")
-        Runtime.getRuntime.addShutdownHook(
-          new Thread(() => graft.Fs.deleteRecursively(dir)))
+        val dir = graft.Fs.jvmTempDir("graft_sf1_probe")
         // one flat file named <table>.parquet — the driver's table
         // layout, which the batch reader AND the streaming source's
         // pathGlobFilter both expect — with SMALL row groups (512 KiB):

@@ -55,6 +55,17 @@ object Fs {
       else None
     } catch { case _: Exception => None }
   }
+  /** A fresh directory under `java.io.tmpdir`, deleted at JVM exit — for
+    * artifacts that live as long as the session (served layouts, saved
+    * models, the sf1 probe corpus). Disk-backed, NOT [[fastTempBase]]: a
+    * long-lived artifact squatting on tmpfs would eat the headroom the
+    * streaming checkpoints re-check per query. */
+  def jvmTempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(dir)))
+    dir
+  }
+
   /** Best-effort recursive delete (children before parents); quiet on
     * races — a vanished temp/checkpoint dir is never worth failing a
     * query or a bench run over. */

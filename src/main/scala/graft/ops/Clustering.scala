@@ -398,13 +398,7 @@ object Clustering {
   def ivfTopKTwoLevel(df: DataFrame, idCol: String, vecCol: String,
       model: TwoLevelModel, queryVec: Seq[Double], k: Int,
       nProbe: Int, topCoarse: Int = 1): DataFrame = {
-    // same up-front rejection as [[assignCellsTwoLevel]] (free for
-    // trusted models): a deficient hand-built model whose PROBED coarse
-    // cell lacks fine rows would contribute zero probes and silently
-    // drop that cell's rows from the candidate set — wrong top-k
-    // instead of a loud error
-    requireCoverage(model)
-    val probes = twoLevelProbes(model, queryVec, nProbe, topCoarse)
+    val probes = twoLevelProbeCells(model, queryVec, nProbe, topCoarse)
     val coarseProbes = probes.map(p => (p / model.k2).toInt).distinct
     val q = array(queryVec.map(lit): _*)
     val pts = df.select(col(idCol).as("id"),
@@ -420,21 +414,6 @@ object Clustering {
       .limit(k)
   }
 
-  /** Public surface of [[twoLevelProbes]] for custom served payloads:
-    * a layout that stores something other than float embeddings (ss17's
-    * int8-quantized cells rank by integer dot product) still prunes by
-    * the SAME multiprobe composite-cell set, it just cannot reuse
-    * [[ivfTopKServedTwoLevel]]'s cosine re-rank. */
-  def twoLevelProbeCells(model: TwoLevelModel, queryVec: Seq[Double],
-      nProbe: Int, topCoarse: Int): Seq[Long] = {
-    // same up-front rejection as [[ivfTopKTwoLevel]] (free for trusted
-    // models): a deficient model whose probed coarse cell has no fine
-    // rows contributes zero probes and a custom served payload would
-    // silently return a wrong top-k instead of a loud error
-    requireCoverage(model)
-    twoLevelProbes(model, queryVec, nProbe, topCoarse)
-  }
-
   /** The probed COMPOSITE cells of a [[TwoLevelModel]] for a query
     * vector (the IMI-shaped multiprobe ladder shared by the direct and
     * served two-level probe paths, and restated by the ss13/ss14/ss15
@@ -443,9 +422,18 @@ object Clustering {
     * its `nProbe` nearest fine centroids from ONE ≤ topCoarse·k2-row
     * collect of the probed cells' slice of the fine table — never the
     * table itself, so the probe stays driver-bounded at any model
-    * size. Ties resolve low everywhere. */
-  private def twoLevelProbes(model: TwoLevelModel, queryVec: Seq[Double],
+    * size. Ties resolve low everywhere. Public for custom served
+    * payloads: a layout that stores something other than float
+    * embeddings (ss17's int8-quantized cells rank by integer dot
+    * product) still prunes by the SAME multiprobe composite-cell set.
+    *
+    * Rejects a deficient model up front, like [[assignCellsTwoLevel]]
+    * (free for trusted models): a probed coarse cell without fine rows
+    * would contribute zero probes and every caller would return a
+    * silently wrong top-k instead of a loud error. */
+  def twoLevelProbeCells(model: TwoLevelModel, queryVec: Seq[Double],
       nProbe: Int, topCoarse: Int): Seq[Long] = {
+    requireCoverage(model)
     require(nProbe > 0 && topCoarse > 0,
       s"two-level probe needs nProbe, topCoarse > 0, got $nProbe/$topCoarse")
     val coarseCells = model.coarse
@@ -466,6 +454,20 @@ object Clustering {
     }.toSeq
   }
 
+  /** The one `cell=` layout writer behind [[writePartitionedByCell]],
+    * [[writePartitionedByCellTwoLevel]] and [[writeQuantizedByCellTwoLevel]]:
+    * select (id, `payload`, the `__v` double cast of `vecCol`),
+    * materialize it (same inlining guard as kmeans), `assign` the cell
+    * from `__v`, drop `__v` and write partitioned by cell. */
+  private def writeByCell(df: DataFrame, idCol: String, vecCol: String,
+      payload: Column, path: String, mode: String)(
+      assign: DataFrame => DataFrame): Unit =
+    assign(df.select(col(idCol).as("id"), payload,
+          transform(col(vecCol), _.cast("double")).as("__v"))
+        .localCheckpoint(eager = true))
+      .drop("__v")
+      .write.partitionBy("cell").mode(mode).parquet(path)
+
   /** Persist the corpus partitioned by its COMPOSITE two-level cell —
     * the serving layout for the rung-4 index ([[writePartitionedByCell]]'s
     * convention at the hierarchical model): a query's probed composite
@@ -477,13 +479,8 @@ object Clustering {
   def writePartitionedByCellTwoLevel(df: DataFrame, idCol: String,
       vecCol: String, model: TwoLevelModel, path: String,
       mode: String = "overwrite"): Unit =
-    assignCellsTwoLevel(
-      df.select(col(idCol).as("id"), col(vecCol).as("embedding"),
-          transform(col(vecCol), _.cast("double")).as("__v"))
-        .localCheckpoint(eager = true), // same inlining guard as kmeans
-      "id", "__v", model)
-      .drop("__v")
-      .write.partitionBy("cell").mode(mode).parquet(path)
+    writeByCell(df, idCol, vecCol, col(vecCol).as("embedding"), path, mode)(
+      assignCellsTwoLevel(_, "id", "__v", model))
 
   /** The QUANTIZED serving layout of the rung-4 index (ss17/ss18):
     * the corpus lands as ONLY (id, int8 q, composite cell) — the float
@@ -501,14 +498,9 @@ object Clustering {
   def writeQuantizedByCellTwoLevel(df: DataFrame, idCol: String,
       vecCol: String, model: TwoLevelModel, lo: Seq[Double],
       span: Seq[Double], path: String, mode: String = "overwrite"): Unit =
-    assignCellsTwoLevel(
-      df.select(col(idCol).as("id"),
-          Similarity.quantizeInt8(col(vecCol), lo, span).as("q"),
-          transform(col(vecCol), _.cast("double")).as("__v"))
-        .localCheckpoint(eager = true), // same inlining guard as kmeans
-      "id", "__v", model)
-      .drop("__v")
-      .write.partitionBy("cell").mode(mode).parquet(path)
+    writeByCell(df, idCol, vecCol,
+        Similarity.quantizeInt8(col(vecCol), lo, span).as("q"), path, mode)(
+      assignCellsTwoLevel(_, "id", "__v", model))
 
   /** ANN top-k against a [[writePartitionedByCellTwoLevel]] layout: the
     * same multiprobe ladder as [[ivfTopKTwoLevel]], with the probed
@@ -519,11 +511,16 @@ object Clustering {
     * queries from at 100 TB. */
   def ivfTopKServedTwoLevel(spark: org.apache.spark.sql.SparkSession,
       path: String, model: TwoLevelModel, queryVec: Seq[Double], k: Int,
-      nProbe: Int, topCoarse: Int = 1): DataFrame = {
-    // the served path owes the same loud rejection of a deficient model
-    // as the direct path — free for trusted (fit/load-time) models
-    requireCoverage(model)
-    val probes = twoLevelProbes(model, queryVec, nProbe, topCoarse)
+      nProbe: Int, topCoarse: Int = 1): DataFrame =
+    servedTopK(spark, path, twoLevelProbeCells(model, queryVec, nProbe, topCoarse),
+      queryVec, k)
+
+  /** The served re-rank behind [[ivfTopKServed]] and
+    * [[ivfTopKServedTwoLevel]]: read the layout, keep the `probes` cells
+    * (a partition filter, so only their directories are listed and
+    * read), rank by exact cosine to `queryVec`, ties to the lowest id. */
+  private def servedTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+      probes: Seq[Any], queryVec: Seq[Double], k: Int): DataFrame = {
     val q = array(queryVec.map(lit): _*)
     spark.read.parquet(path)
       .filter(col("cell").isin(probes: _*))
@@ -537,44 +534,27 @@ object Clustering {
     * for ANN at scale: a query's probe set becomes a partition-pruning
     * predicate, so the scan lists and reads ONLY the nProbe cell
     * directories out of k, never the full corpus. Pair with
-    * [[ivfTopKServed]]. */
+    * [[ivfTopKServed]]. `mode = "append"` grows a served layout with a
+    * NEW batch of vectors assigned by the SAME (persisted, train-once)
+    * model, without refitting or rewriting the existing cells: appended
+    * files land inside the matching `cell=` directories, so partition
+    * pruning and [[ivfTopKServed]] see one seamless index (ss12). At
+    * 100 TB this is the ingest shape — an index rebuild per batch would
+    * re-shuffle the whole corpus, while the append touches only the new
+    * rows. */
   def writePartitionedByCell(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Int, Seq[Double])], path: String): Unit =
-    writePartitionedByCell(df, idCol, vecCol, centroids, path, "overwrite")
-
-  /** [[writePartitionedByCell]] with an explicit save mode — pass
-    * `"append"` to grow a served layout with a NEW batch of vectors
-    * assigned by the SAME (persisted, train-once) model, without
-    * refitting or rewriting the existing cells: appended files land
-    * inside the matching `cell=` directories, so partition pruning and
-    * [[ivfTopKServed]] see one seamless index (ss12). At 100 TB this is
-    * the ingest shape — an index rebuild per batch would re-shuffle the
-    * whole corpus, while the append touches only the new rows. */
-  def writePartitionedByCell(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Int, Seq[Double])], path: String, mode: String): Unit =
-    assignCells(
-      df.select(col(idCol).as("id"), col(vecCol).as("embedding"),
-          transform(col(vecCol), _.cast("double")).as("__v"))
-        .localCheckpoint(eager = true), // same inlining guard as kmeans
-      "id", "__v", centroids)
-      .drop("__v")
-      .write.partitionBy("cell").mode(mode).parquet(path)
+      centroids: Seq[(Int, Seq[Double])], path: String,
+      mode: String = "overwrite"): Unit =
+    writeByCell(df, idCol, vecCol, col(vecCol).as("embedding"), path, mode)(
+      assignCells(_, "id", "__v", centroids))
 
   /** ANN top-k against a [[writePartitionedByCell]] layout: the cell
     * filter prunes partitions at planning time (PartitionFilters on the
     * scan), then the probed cells re-rank by exact cosine. */
   def ivfTopKServed(spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: Seq[(Int, Seq[Double])], queryVec: Seq[Double], k: Int,
-      nProbe: Int): DataFrame = {
-    val probes = probeCells(centroids, queryVec, nProbe)
-    val q = array(queryVec.map(lit): _*)
-    spark.read.parquet(path)
-      .filter(col("cell").isin(probes: _*))
-      .select(col("id"),
-        Similarity.cosine(transform(col("embedding"), _.cast("double")), q).as("sim"))
-      .sort(col("sim").desc, col("id"))
-      .limit(k)
-  }
+      nProbe: Int): DataFrame =
+    servedTopK(spark, path, probeCells(centroids, queryVec, nProbe), queryVec, k)
 
   /** TAKEDOWN: remove a set of ids from a `cell=`-partitioned serving
     * layout ([[writePartitionedByCell]], [[writePartitionedByCellTwoLevel]],

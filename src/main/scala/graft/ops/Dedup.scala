@@ -307,18 +307,6 @@ object Dedup extends org.apache.spark.internal.Logging {
       .filter(col("j") >= threshold)
   }
 
-  /** Connected components over an undirected pair graph (id_a, id_b) —
-    * the dedup decision step: every document in a near-dup cluster maps
-    * to the cluster's minimal id as representative.
-    *
-    * Iterative min-label propagation with pointer jumping: each round
-    * pulls labels across edges AND through the current label table
-    * (label(id) := label(label(id))), so path lengths halve per round and
-    * convergence is O(log n) even for chain-shaped clusters — a 2^20-long
-    * path converges within the default 20 rounds. One edge join + one
-    * label self-join + one hash-agg shuffle per round; throws instead of
-    * returning silently-split components if the cap is ever hit.
-    */
   /** Driver-side edge budget for [[connectedComponents]]' local path:
     * up to this many (undirected) edges the component labeling runs as
     * one collect + union-find on the driver — bounded state (16 bytes an
@@ -332,6 +320,18 @@ object Dedup extends org.apache.spark.internal.Logging {
     * (dd07/dd08/tx08) that the driver labels in microseconds. */
   final val LocalCcMaxEdges: Long = 1L << 22
 
+  /** Connected components over an undirected pair graph (id_a, id_b) —
+    * the dedup decision step: every document in a near-dup cluster maps
+    * to the cluster's minimal id as representative.
+    *
+    * Iterative min-label propagation with pointer jumping: each round
+    * pulls labels across edges AND through the current label table
+    * (label(id) := label(label(id))), so path lengths halve per round and
+    * convergence is O(log n) even for chain-shaped clusters — a 2^20-long
+    * path converges within the default 20 rounds. One edge join + one
+    * label self-join + one hash-agg shuffle per round; throws instead of
+    * returning silently-split components if the cap is ever hit.
+    */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20): DataFrame =
     connectedComponents(pairs, maxIterations, LocalCcMaxEdges)
 
@@ -669,26 +669,6 @@ object Dedup extends org.apache.spark.internal.Logging {
       .filter(col("c") >= threshold)
   }
 
-  /** SemDeDup-style semantic dedup (cluster-then-prune, the shape of
-    * Abbas et al. 2023): vectors are assigned to a coarse k-means cell
-    * ([[Clustering.assignCell]] against a pre-trained deterministic
-    * model), and WITHIN each cell every vector with a
-    * cosine-≥-threshold neighbor of smaller id is marked dropped (the
-    * minimal-id representative of each semantic near-dup set survives —
-    * the same survivor rule as the exact/MinHash families, and
-    * order-free: membership depends only on the set, never on
-    * evaluation order). Returns `(id, cell, dropped)` for every input
-    * row.
-    *
-    * Scale shape: the all-pairs term is confined to one cell — ONE
-    * shuffle on the cell key, then a per-cell self-join. With k sized so
-    * cells hold ~n/k vectors, the quadratic work is n²/k spread over k
-    * groups (this is the entire point of SemDeDup over dd06's global
-    * all-pairs); a skew-degenerate giant cell is handled the same way
-    * as any hot join key — split it with a salted sub-bucket on the
-    * SAME pattern as [[graft.ops.Joins.saltedJoin]], at the cost of the
-    * near-dup sets spanning sub-buckets (SemDeDup accepts this recall
-    * loss by design: its dedup is per-cluster, not global). */
   /** [[semanticDedup]] against a TWO-LEVEL quantizer
     * ([[Clustering.TwoLevelModel]]): same cluster-then-prune rule, but
     * the cell is the composite coarse·k2+fine id — the quantizer shape
@@ -710,6 +690,26 @@ object Dedup extends org.apache.spark.internal.Logging {
         coalesce(col("dropped"), lit(false)).as("dropped"))
   }
 
+  /** SemDeDup-style semantic dedup (cluster-then-prune, the shape of
+    * Abbas et al. 2023): vectors are assigned to a coarse k-means cell
+    * ([[Clustering.assignCell]] against a pre-trained deterministic
+    * model), and WITHIN each cell every vector with a
+    * cosine-≥-threshold neighbor of smaller id is marked dropped (the
+    * minimal-id representative of each semantic near-dup set survives —
+    * the same survivor rule as the exact/MinHash families, and
+    * order-free: membership depends only on the set, never on
+    * evaluation order). Returns `(id, cell, dropped)` for every input
+    * row.
+    *
+    * Scale shape: the all-pairs term is confined to one cell — ONE
+    * shuffle on the cell key, then a per-cell self-join. With k sized so
+    * cells hold ~n/k vectors, the quadratic work is n²/k spread over k
+    * groups (this is the entire point of SemDeDup over dd06's global
+    * all-pairs); a skew-degenerate giant cell is handled the same way
+    * as any hot join key — split it with a salted sub-bucket on the
+    * SAME pattern as [[graft.ops.Joins.saltedJoin]], at the cost of the
+    * near-dup sets spanning sub-buckets (SemDeDup accepts this recall
+    * loss by design: its dedup is per-cluster, not global). */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Int, Seq[Double])], threshold: Double): DataFrame = {
     val pts = cellPoints(df, idCol, vecCol, centroids)

@@ -102,27 +102,15 @@ class PointCloudStreamingWrite(
     // listStatus rather than globStatus: Hadoop's globber filters
     // client-side anyway (no cost difference), and a literal startsWith
     // cannot be derailed by glob metacharacters in the sink directory
-    // name. The tokenless `epoch-<e>-part-` prefix is the pre-token
-    // naming; sweeping it is only safe if THIS query is the sole writer
-    // the directory has ever had — which the class contract above does
-    // NOT require — so it is opt-in (`sweepLegacyEpochFiles=true`,
-    // for a sink dir known to hold a single pre-upgrade query's
-    // leftovers). Default: token-scoped only, preserving the "can never
-    // delete another run's committed data" guarantee.
+    // name. Token-scoped only: a file without this query's token (another
+    // query's, or any tokenless name) is never swept, preserving the
+    // "can never delete another run's committed data" guarantee.
     val tokenPrefix = s"epoch-$epochId-q$token-"
-    val legacyPrefix = s"epoch-$epochId-part-"
-    // lowercase key: `options` comes from CaseInsensitiveStringMap.asScala
-    // (see the toBatch/toStreaming comment above) — a camelCase lookup
-    // here would NEVER match and silently disable the opt-in
-    val sweepLegacy =
-      options.getOrElse("sweeplegacyepochfiles", "false").toBoolean
     val stale = Option(f.listStatus(new Path(path),
       new org.apache.hadoop.fs.PathFilter {
         override def accept(p: Path): Boolean = {
           val n = p.getName
-          kind.extensions.exists(n.endsWith) &&
-            (n.startsWith(tokenPrefix) ||
-              (sweepLegacy && n.startsWith(legacyPrefix)))
+          kind.extensions.exists(n.endsWith) && n.startsWith(tokenPrefix)
         }
       })).getOrElse(Array.empty)
     stale.foreach { st =>

@@ -159,6 +159,16 @@ object OpsQueries {
     * composite arithmetic (cell = coarse·k2 + fine) is load-bearing. */
   private final val Dd16Fine = 3
 
+  /** dd16's hierarchical model, trained once per dataset dir — same
+    * train-once convention as [[ivfModel]] (a deployment fits the
+    * quantizer once and serves it; refitting per query would benchmark
+    * index construction, not the dedup). */
+  private val twoLevelModel = oncePerDataset { (s, d) =>
+    Clustering.kmeansTwoLevel(
+      Tables.embeddings(s, d).filter($"vec_id" =!= 0),
+      "vec_id", "embedding", 64, Ss04Cells, Dd16Fine, Ss04Iters)
+  }
+
   /** dd16: semantic dedup through the TWO-LEVEL quantizer — the fourth
     * escalation rung ([[graft.ops.Clustering.kmeansTwoLevel]]) graded
     * against a full oracle restatement: the shared coarse k-means CTEs
@@ -170,18 +180,6 @@ object OpsQueries {
     * cell drop rule all agree with an independent engine bit for bit —
     * the strongest evidence the >broadcast-budget path computes what the
     * flat path would. */
-  /** dd16's hierarchical model, trained once per dataset dir — same
-    * train-once convention as [[ivfModel]] (a deployment fits the
-    * quantizer once and serves it; refitting per query would benchmark
-    * index construction, not the dedup). */
-  private val twoLevelModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Clustering.TwoLevelModel]()
-  private def twoLevelModel(s: SparkSession, d: String): Clustering.TwoLevelModel =
-    twoLevelModels.computeIfAbsent(d,
-      _ => Clustering.kmeansTwoLevel(
-        Tables.embeddings(s, d).filter($"vec_id" =!= 0),
-        "vec_id", "embedding", 64, Ss04Cells, Dd16Fine, Ss04Iters))
-
   private val dd16: Q = (s, d) => {
     val df = Tables.embeddings(s, d).filter($"vec_id" =!= 0)
     Dedup.semanticDedupTwoLevel(df, "vec_id", "embedding",
@@ -191,6 +189,26 @@ object OpsQueries {
         sum($"dropped".cast("long")).as("dropped"),
         coalesce(sum(when($"dropped", $"id")), lit(0L)).as("dropped_id_sum"))
       .sort($"cell")
+  }
+
+  /** The persisted old-slice two-level model, fitted/saved once per
+    * dataset dir — dd17's assignment story and ss16's served-append
+    * layout both load THIS artifact (train once, serve forever). */
+  private[queries] val twoLevelSavedPath = oncePerDataset { (s, d) =>
+    val p = graft.Fs.jvmTempDir("graft_twolevel_model").resolve("model").toString
+    val fitted = Clustering.kmeansTwoLevel(
+      Tables.embeddings(s, d).filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1),
+      "vec_id", "embedding", 64, Ss04Cells, Dd16Fine, Ss04Iters)
+    Clustering.saveTwoLevel(s, fitted, p)
+    // round-trip pin (ss11's contract at the two-level model):
+    // deterministic Lloyd + 1e-6 rounding + parquet's exact double
+    // round-trip make save→load EXACTLY the fitted model
+    val loaded = Clustering.loadTwoLevel(s, p)
+    require(loaded.coarse == fitted.coarse && loaded.k2 == fitted.k2,
+      "loaded two-level coarse model drifted from the fitted one")
+    require(Clustering.fineSeq(loaded) == Clustering.fineSeq(fitted),
+      "loaded two-level fine table drifted from the fitted one")
+    p
   }
 
   /** dd17: the PERSISTED two-level quantizer — the save-load-append
@@ -208,31 +226,6 @@ object OpsQueries {
     * two-level fit over the old slice, the fallback, and the union
     * assignment bit for bit, so a refit sneaking into the append path
     * or a drifted persisted model breaks the hash. */
-  private val twoLevelSaved =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** The persisted old-slice two-level model, fitted/saved once per
-    * dataset dir — dd17's assignment story and ss16's served-append
-    * layout both load THIS artifact (train once, serve forever). */
-  private[queries] def twoLevelSavedPath(s: SparkSession, d: String): String =
-    twoLevelSaved.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_twolevel_model")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val p = dir.resolve("model").toString
-      val fitted = Clustering.kmeansTwoLevel(
-        Tables.embeddings(s, d).filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1),
-        "vec_id", "embedding", 64, Ss04Cells, Dd16Fine, Ss04Iters)
-      Clustering.saveTwoLevel(s, fitted, p)
-      // round-trip pin (ss11's contract at the two-level model):
-      // deterministic Lloyd + 1e-6 rounding + parquet's exact double
-      // round-trip make save→load EXACTLY the fitted model
-      val loaded = Clustering.loadTwoLevel(s, p)
-      require(loaded.coarse == fitted.coarse && loaded.k2 == fitted.k2,
-        "loaded two-level coarse model drifted from the fitted one")
-      require(Clustering.fineSeq(loaded) == Clustering.fineSeq(fitted),
-        "loaded two-level fine table drifted from the fitted one")
-      p
-    })
   private val dd17: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
     val path = twoLevelSavedPath(s, d)
@@ -256,6 +249,18 @@ object OpsQueries {
   private[queries] final val Dd18Mod = 37
   private[queries] final val Dd18Res = 5
 
+  private val takedownLayout = oncePerDataset { (s, d) =>
+    val e = Tables.embeddings(s, d)
+    val lp = graft.Fs.jvmTempDir("graft_takedown").resolve("layout").toString
+    Clustering.writePartitionedByCellTwoLevel(
+      e.filter($"vec_id" =!= 0), "vec_id", "embedding", twoLevelModel(s, d), lp)
+    val removals = e
+      .filter($"vec_id" =!= 0 && $"vec_id" % Dd18Mod === Dd18Res)
+      .select($"vec_id".as("id"))
+    Clustering.deleteFromCellLayout(s, lp, removals)
+    lp
+  }
+
   /** dd18: TAKEDOWN from a served layout without refit — the deletion
     * story a training-data lake legally needs (copyright/PII removal):
     * the rung-4 composite-cell layout is built once from the corpus
@@ -274,28 +279,12 @@ object OpsQueries {
     * rows, left a removed id behind, or lost an untouched neighbor
     * cannot hash-match). The oracle re-derives the full two-level refit
     * + multiprobe ladder and restates the takedown as an anti-join. */
-  private val takedownLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val dd18: Q = (s, d) => {
-    val e = Tables.embeddings(s, d)
     val model = twoLevelModel(s, d)
-    val path = takedownLayouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_takedown")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val lp = dir.resolve("layout").toString
-      Clustering.writePartitionedByCellTwoLevel(
-        e.filter($"vec_id" =!= 0), "vec_id", "embedding", model, lp)
-      val removals = e
-        .filter($"vec_id" =!= 0 && $"vec_id" % Dd18Mod === Dd18Res)
-        .select($"vec_id".as("id"))
-      Clustering.deleteFromCellLayout(s, lp, removals)
-      lp
-    })
+    val path = takedownLayout(s, d)
     val qv = queryVec(s, d)
-    val served = Clustering.ivfTopKServedTwoLevel(s, path, model, qv, 5,
-        nProbe = Ss13Probe, topCoarse = Ss13Coarse)
-      .select(lit("serve").as("part"), $"id".as("a"), round($"sim", 4).as("b"))
+    val served = serveRows(Clustering.ivfTopKServedTwoLevel(s, path, model, qv, 5,
+        nProbe = Ss13Probe, topCoarse = Ss13Coarse))
     val census = s.read.parquet(path)
       .groupBy($"cell")
       .agg(count(lit(1)).as("n"), sum($"id").as("ids"))
@@ -426,6 +415,26 @@ object OpsQueries {
   private[queries] final val Ss04Iters = 2
   private[queries] final val Ss04Probe = 2
 
+  /** The ss-family query vector (vec_id 0), collected ONCE per dataset
+    * dir — the same train-once convention as [[ivfModel]]: every ss
+    * entry probes the same benchmark query row, and re-collecting it
+    * per entry paid one fixed driver job apiece (the r14 review's
+    * ss-family bench-noise term). The vector is immutable model-scale
+    * state (64 doubles), exactly like the centroids it probes. */
+  private[queries] val queryVec = oncePerDataset { (s, d) =>
+    Tables.embeddings(s, d).filter($"vec_id" === 0)
+      .select(transform($"embedding", _.cast("double")))
+      .collect().head.getSeq[Double](0)
+  }
+
+  /** The ss04/ss07 coarse quantizer, trained once per dataset dir — ONE
+    * definition so the direct and served paths can never fit diverging
+    * models against the shared oracle. */
+  private val ivfModel = oncePerDataset { (s, d) =>
+    Clustering.kmeans(Tables.embeddings(s, d).filter($"vec_id" =!= 0),
+      "vec_id", "embedding", 64, Ss04Cells, Ss04Iters)
+  }
+
   /** ss04: IVF ANN top-5 — deterministic distributed Lloyd k-means as
     * the coarse quantizer (init = lowest-id vectors, arg-min fold
     * assignment, 1e-6-rounded means), probing the 2 nearest cells. Every
@@ -433,35 +442,19 @@ object OpsQueries {
     * fit + probe. The trained centroids are memoized per data dir: an
     * IVF index is built once and served for many queries — retraining
     * per query would benchmark index construction, not search. */
-  /** The ss-family query vector (vec_id 0), collected ONCE per dataset
-    * dir — the same train-once convention as [[ivfModel]]: every ss
-    * entry probes the same benchmark query row, and re-collecting it
-    * per entry paid one fixed driver job apiece (the r14 review's
-    * ss-family bench-noise term). The vector is immutable model-scale
-    * state (64 doubles), exactly like the centroids it probes. */
-  private val queryVecs =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
-  private[queries] def queryVec(s: SparkSession, d: String): Seq[Double] =
-    queryVecs.computeIfAbsent(d,
-      _ => Tables.embeddings(s, d).filter($"vec_id" === 0)
-        .select(transform($"embedding", _.cast("double")))
-        .collect().head.getSeq[Double](0))
-
-  private val kmeansModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Seq[Double])]]()
-  /** The ss04/ss07 coarse quantizer, trained once per dataset dir — ONE
-    * definition so the direct and served paths can never fit diverging
-    * models against the shared oracle. */
-  private def ivfModel(s: SparkSession, d: String): Seq[(Int, Seq[Double])] =
-    kmeansModels.computeIfAbsent(d,
-      _ => Clustering.kmeans(Tables.embeddings(s, d).filter($"vec_id" =!= 0),
-        "vec_id", "embedding", 64, Ss04Cells, Ss04Iters))
   private val ss04: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
     val qv = queryVec(s, d)
     Clustering.ivfTopK(e.filter($"vec_id" =!= 0), "vec_id", "embedding",
         ivfModel(s, d), qv, 5, nProbe = Ss04Probe)
       .select($"id".as("vec_id"), round($"sim", 4).as("sim"))
+  }
+
+  private val servedLayout = oncePerDataset { (s, d) =>
+    val dir = graft.Fs.jvmTempDir("graft_ivf_served").toString
+    Clustering.writePartitionedByCell(Tables.embeddings(s, d).filter($"vec_id" =!= 0),
+      "vec_id", "embedding", ivfModel(s, d), dir)
+    dir
   }
 
   /** ss07: the SERVED IVF path — the corpus persisted partitioned by its
@@ -473,30 +466,12 @@ object OpsQueries {
     * and re-rank as ss04, so the results (and the oracle) are identical;
     * what this entry adds is the pruned-scan plan, pinned by OpsSpec's
     * PartitionFilters assertion. The layout is built once per dataset
-    * (an index is written once and served for many queries) into a
-    * temp dir cleaned up on JVM exit. Like jn01's bucketed tables, the
-    * cache assumes the dataset dir is IMMUTABLE while the session lives
-    * (the driver's one-JVM-per-workdir shape): regenerating the parquet
-    * under a live JVM would serve stale cells — restart the session (or
-    * clear the map) after rewriting a dataset. */
-  private val servedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * ([[oncePerDataset]]: an index is written once and served for many
+    * queries) into a temp dir cleaned up on JVM exit. */
   private val ss07: Q = (s, d) => {
-    val e = Tables.embeddings(s, d)
     val qv = queryVec(s, d)
     val centroids = ivfModel(s, d)
-    // disk-backed temp, NOT Fs.fastTempBase: the layout lives until JVM
-    // exit, and a long-lived artifact squatting on tmpfs would eat the
-    // headroom the streaming checkpoints re-check per query
-    val path = servedLayouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_served")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      Clustering.writePartitionedByCell(
-        e.filter($"vec_id" =!= 0), "vec_id", "embedding", centroids, dir.toString)
-      dir.toString
-    })
-    Clustering.ivfTopKServed(s, path, centroids, qv, 5, nProbe = Ss04Probe)
+    Clustering.ivfTopKServed(s, servedLayout(s, d), centroids, qv, 5, nProbe = Ss04Probe)
       .select($"id".as("vec_id"), round($"sim", 4).as("sim"))
   }
 
@@ -605,6 +580,12 @@ object OpsQueries {
       .select($"id".as("vec_id"), round($"sim", 4).as("sim"))
   }
 
+  private val savedModel = oncePerDataset { (s, d) =>
+    val p = graft.Fs.jvmTempDir("graft_ivf_model").resolve("centroids").toString
+    Clustering.saveCentroids(s, ivfModel(s, d), p)
+    p
+  }
+
   /** ss11: the PERSISTED IVF model — a served deployment trains the
     * quantizer once, writes it next to the cell-partitioned layout, and
     * every query process LOADS it ([[graft.ops.Clustering.saveCentroids]]
@@ -617,18 +598,8 @@ object OpsQueries {
     * make that checkable with zero tolerance), and ss04's refit oracle
     * on the result — a loaded model that drifted from the refit breaks
     * the hash, not just a vibe. */
-  private val savedModels =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val ss11: Q = (s, d) => {
-    val path = savedModels.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_model")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val p = dir.resolve("centroids").toString
-      Clustering.saveCentroids(s, ivfModel(s, d), p)
-      p
-    })
-    val loaded = Clustering.loadCentroids(s, path)
+    val loaded = Clustering.loadCentroids(s, savedModel(s, d))
     require(loaded == ivfModel(s, d),
       "loaded IVF centroids drifted from the fitted model")
     val e = Tables.embeddings(s, d)
@@ -636,6 +607,28 @@ object OpsQueries {
     Clustering.ivfTopK(e.filter($"vec_id" =!= 0), "vec_id", "embedding",
         loaded, qv, 5, nProbe = Ss04Probe)
       .select($"id".as("vec_id"), round($"sim", 4).as("sim"))
+  }
+
+  private val appendLayout = oncePerDataset { (s, d) =>
+    val e = Tables.embeddings(s, d)
+    val oldSlice = e.filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1)
+    val dir = graft.Fs.jvmTempDir("graft_ivf_append")
+    val mp = dir.resolve("centroids").toString
+    val lp = dir.resolve("layout").toString
+    val fitted = Clustering.kmeans(oldSlice, "vec_id", "embedding",
+      64, Ss04Cells, Ss04Iters)
+    Clustering.saveCentroids(s, fitted, mp)
+    // both writes go through the LOADED model — the layout must be
+    // the artifact a fresh serving process (which has only the file)
+    // would build, never the in-memory fit
+    val loaded = Clustering.loadCentroids(s, mp)
+    require(loaded == fitted,
+      "loaded IVF centroids drifted from the fitted model")
+    Clustering.writePartitionedByCell(
+      oldSlice, "vec_id", "embedding", loaded, lp)
+    Clustering.writePartitionedByCell(e.filter($"vec_id" =!= 0 && $"vec_id" % 5 === 1),
+      "vec_id", "embedding", loaded, lp, "append")
+    (mp, lp)
   }
 
   /** ss12: the APPEND path of the served-IVF story — the one thing
@@ -652,33 +645,8 @@ object OpsQueries {
     * drifted model, breaks the hash. At 100 TB this is the ingest
     * shape: per-batch index rebuilds re-shuffle the whole corpus, the
     * append touches only the new rows. */
-  private val appendLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private val ss12: Q = (s, d) => {
-    val e = Tables.embeddings(s, d)
-    val oldSlice = e.filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1)
-    val newBatch = e.filter($"vec_id" =!= 0 && $"vec_id" % 5 === 1)
-    val (modelPath, layoutPath) = appendLayouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val mp = dir.resolve("centroids").toString
-      val lp = dir.resolve("layout").toString
-      val fitted = Clustering.kmeans(oldSlice, "vec_id", "embedding",
-        64, Ss04Cells, Ss04Iters)
-      Clustering.saveCentroids(s, fitted, mp)
-      // both writes go through the LOADED model — the layout must be
-      // the artifact a fresh serving process (which has only the file)
-      // would build, never the in-memory fit
-      val loaded = Clustering.loadCentroids(s, mp)
-      require(loaded == fitted,
-        "loaded IVF centroids drifted from the fitted model")
-      Clustering.writePartitionedByCell(
-        oldSlice, "vec_id", "embedding", loaded, lp)
-      Clustering.writePartitionedByCell(
-        newBatch, "vec_id", "embedding", loaded, lp, "append")
-      (mp, lp)
-    })
+    val (modelPath, layoutPath) = appendLayout(s, d)
     val loaded = Clustering.loadCentroids(s, modelPath)
     val qv = queryVec(s, d)
     // two graded facts in one uniform (part, a, b) schema: the served
@@ -688,16 +656,8 @@ object OpsQueries {
     // non-vacuous: the query vector's neighbors are mostly old-slice
     // vectors, so a silently-empty append could hash-match a top-k-only
     // result; it cannot match the census.
-    val served = Clustering.ivfTopKServed(s, layoutPath, loaded, qv, 5,
-        nProbe = Ss04Probe)
-      .select(lit("serve").as("part"), $"id".as("a"), round($"sim", 4).as("b"))
-    val census = s.read.parquet(layoutPath)
-      .groupBy($"cell")
-      .agg(count(lit(1)).as("n"),
-        sum(when($"id" % 5 === 1, 1L).otherwise(0L)).as("nn"))
-      .select(concat(lit("cell_"), $"cell").as("part"),
-        $"n".as("a"), $"nn".cast("double").as("b"))
-    served.unionByName(census).sort($"part", $"a")
+    serveRows(Clustering.ivfTopKServed(s, layoutPath, loaded, qv, 5, nProbe = Ss04Probe))
+      .unionByName(appendedCensus(s, layoutPath)).sort($"part", $"a")
   }
 
   /** ss13/ss14/ss15/ss16's probe budget: descend the [[Ss13Coarse]]
@@ -733,6 +693,13 @@ object OpsQueries {
       .select($"id".as("vec_id"), round($"sim", 4).as("sim"))
   }
 
+  private val twoLevelLayout = oncePerDataset { (s, d) =>
+    val dir = graft.Fs.jvmTempDir("graft_twolevel_served").toString
+    Clustering.writePartitionedByCellTwoLevel(Tables.embeddings(s, d).filter($"vec_id" =!= 0),
+      "vec_id", "embedding", twoLevelModel(s, d), dir)
+    dir
+  }
+
   /** ss14: the SERVED two-level layout — ss07's partition-pruned
     * serving convention at the rung-4 model: the corpus persists
     * partitioned by its COMPOSITE cell
@@ -745,21 +712,10 @@ object OpsQueries {
     * shape). Same model, probes and re-rank as ss13, so the oracle is
     * shared; what this entry adds is the pruned-scan plan, pinned by
     * OpsSpec's PartitionFilters assertion. */
-  private val twoLevelLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val ss14: Q = (s, d) => {
-    val e = Tables.embeddings(s, d)
     val qv = queryVec(s, d)
     val model = twoLevelModel(s, d)
-    val path = twoLevelLayouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_twolevel_served")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      Clustering.writePartitionedByCellTwoLevel(
-        e.filter($"vec_id" =!= 0), "vec_id", "embedding", model, dir.toString)
-      dir.toString
-    })
-    Clustering.ivfTopKServedTwoLevel(s, path, model, qv, 5,
+    Clustering.ivfTopKServedTwoLevel(s, twoLevelLayout(s, d), model, qv, 5,
         nProbe = Ss13Probe, topCoarse = Ss13Coarse)
       .select($"id".as("vec_id"), round($"sim", 4).as("sim"))
   }
@@ -804,6 +760,25 @@ object OpsQueries {
           .as("hits_at_10"))
   }
 
+  /** ss16/ss19's shared APPENDED (fragmented) layout: the old slice
+    * written through the LOADED persisted model, the new batch appended
+    * — built once per dataset dir, so the compaction entry compacts the
+    * exact layout the append entry grades. */
+  private val twoLevelAppendLayout = oncePerDataset { (s, d) =>
+    val e = Tables.embeddings(s, d)
+    val loaded = Clustering.loadTwoLevel(s, twoLevelSavedPath(s, d))
+    val lp = graft.Fs.jvmTempDir("graft_twolevel_append").resolve("layout").toString
+    // both writes go through the LOADED model — the layout must be
+    // what a fresh serving process (which has only the file) builds
+    Clustering.writePartitionedByCellTwoLevel(
+      e.filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1),
+      "vec_id", "embedding", loaded, lp)
+    Clustering.writePartitionedByCellTwoLevel(
+      e.filter($"vec_id" =!= 0 && $"vec_id" % 5 === 1),
+      "vec_id", "embedding", loaded, lp, mode = "append")
+    lp
+  }
+
   /** ss16: the APPEND path of the SERVED two-level layout — ss12's
     * train-once-append story at the rung-4 index: the hierarchical
     * model fits on the OLD slice only and persists (dd17's saved
@@ -821,48 +796,37 @@ object OpsQueries {
     * oracle re-fits on the old slice, applies the coverage fallback,
     * assigns the union through the trained model, and restates the
     * multiprobe ladder. */
-  private val twoLevelAppendLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** ss16/ss19's shared APPENDED (fragmented) layout: the old slice
-    * written through the LOADED persisted model, the new batch appended
-    * — built once per dataset dir, so the compaction entry compacts the
-    * exact layout the append entry grades. */
-  private def twoLevelAppendLayout(s: SparkSession, d: String): String =
-    twoLevelAppendLayouts.computeIfAbsent(d, { _ =>
-      val e = Tables.embeddings(s, d)
-      val loaded = Clustering.loadTwoLevel(s, twoLevelSavedPath(s, d))
-      val dir = java.nio.file.Files.createTempDirectory("graft_twolevel_append")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val lp = dir.resolve("layout").toString
-      // both writes go through the LOADED model — the layout must be
-      // what a fresh serving process (which has only the file) builds
-      Clustering.writePartitionedByCellTwoLevel(
-        e.filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1),
-        "vec_id", "embedding", loaded, lp)
-      Clustering.writePartitionedByCellTwoLevel(
-        e.filter($"vec_id" =!= 0 && $"vec_id" % 5 === 1),
-        "vec_id", "embedding", loaded, lp, mode = "append")
-      lp
-    })
   private val ss16: Q = (s, d) => {
     val qv = queryVec(s, d)
     val loaded = Clustering.loadTwoLevel(s, twoLevelSavedPath(s, d))
     val path = twoLevelAppendLayout(s, d)
-    val served = Clustering.ivfTopKServedTwoLevel(s, path, loaded, qv, 5,
-        nProbe = Ss13Probe, topCoarse = Ss13Coarse)
-      .select(lit("serve").as("part"), $"id".as("a"), round($"sim", 4).as("b"))
-    val census = s.read.parquet(path)
-      .groupBy($"cell")
-      .agg(count(lit(1)).as("n"),
-        sum(when($"id" % 5 === 1, 1L).otherwise(0L)).as("nn"))
-      .select(concat(lit("cell_"), $"cell").as("part"),
-        $"n".as("a"), $"nn".cast("double").as("b"))
-    served.unionByName(census).sort($"part", $"a")
+    twoLevelServeAndCensus(s, path, loaded, qv)
   }
 
   /** ss17's result size (quantized served top-k). */
   private final val Ss17K = 10
+
+  private val quantizedTwoLevel = oncePerDataset { (s, d) =>
+    val e = Tables.embeddings(s, d)
+    val dir = graft.Fs.jvmTempDir("graft_twolevel_quant")
+    val lp = dir.resolve("layout").toString
+    val bp = dir.resolve("bounds").toString
+    // the codebook PERSISTS beside the layout (ss11's discipline): the
+    // floats never land in the index, so a fresh serving process must
+    // decode through the saved bounds, never a refit — save→load is
+    // required bit-for-bit every graded run. The fit sees the CORPUS
+    // ONLY: queries arrive later at a real server and may clamp — the
+    // query row must never leak into the stored decode key
+    val (blo, bspan) = Similarity.quantizationBounds(
+      e.filter($"vec_id" =!= 0), "embedding", 64)
+    Similarity.saveQuantization(s, blo, bspan, bp)
+    val (llo, lspan) = Similarity.loadQuantization(s, bp)
+    require(llo == blo && lspan == bspan,
+      "loaded quantization bounds drifted from the fitted ones")
+    Clustering.writeQuantizedByCellTwoLevel(e.filter($"vec_id" =!= 0),
+      "vec_id", "embedding", twoLevelModel(s, d), llo, lspan, lp)
+    (lp, bp)
+  }
 
   /** ss17: the int8-QUANTIZED rung-4 served layout — the two levers a
     * 100 TB embedding store pulls at once: 4× smaller at rest (ss09's
@@ -888,52 +852,43 @@ object OpsQueries {
     * corpus-only bounds fit, the
     * quantization arithmetic, the full two-level refit, the multiprobe
     * ladder and the integer ranking. */
-  private val quantizedTwoLevel =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private val ss17: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
     val model = twoLevelModel(s, d)
-    val (path, boundsPath) = quantizedTwoLevel.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_twolevel_quant")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val lp = dir.resolve("layout").toString
-      val bp = dir.resolve("bounds").toString
-      // the codebook PERSISTS beside the layout (ss11's discipline): the
-      // floats never land in the index, so a fresh serving process must
-      // decode through the saved bounds, never a refit — save→load is
-      // required bit-for-bit every graded run. The fit sees the CORPUS
-      // ONLY: queries arrive later at a real server and may clamp — the
-      // query row must never leak into the stored decode key
-      val (blo, bspan) = Similarity.quantizationBounds(
-        e.filter($"vec_id" =!= 0), "embedding", 64)
-      Similarity.saveQuantization(s, blo, bspan, bp)
-      val (llo, lspan) = Similarity.loadQuantization(s, bp)
-      require(llo == blo && lspan == bspan,
-        "loaded quantization bounds drifted from the fitted ones")
-      Clustering.writeQuantizedByCellTwoLevel(
-        e.filter($"vec_id" =!= 0), "vec_id", "embedding", model, llo, lspan, lp)
-      (lp, bp)
-    })
+    val (path, boundsPath) = quantizedTwoLevel(s, d)
     // every query process decodes through the LOADED codebook — the
     // artifact a fresh server would hold, never the in-memory fit
     val (lo, span) = Similarity.loadQuantization(s, boundsPath)
     val qv = queryVec(s, d)
-    val probes = Clustering.twoLevelProbeCells(model, qv, Ss13Probe, Ss13Coarse)
-    val qq = e.filter($"vec_id" === 0)
-      .select(Similarity.quantizeInt8($"embedding", lo, span).as("qq"))
-    val scored = s.read.parquet(path)
-      .filter($"cell".isin(probes: _*))
-      .crossJoin(broadcast(qq))
-      .select($"id", Similarity.intDot($"q", $"qq").as("qscore"))
-      .sort($"qscore".desc, $"id")
-      .limit(Ss17K)
+    val scored = int8ProbedTopK(s, e, path, model, lo, span, qv)
     val exact = Similarity.bruteForceTopK(
         e.filter($"vec_id" =!= 0), "vec_id", "embedding", qv, Ss17K)
       .select($"id".as("eid"))
     scored.join(exact, $"id" === $"eid", "left")
       .select($"id".as("vec_id"), $"qscore", $"eid".isNotNull.as("in_exact10"))
       .sort($"qscore".desc, $"vec_id")
+  }
+
+  private val quantizedAppendLayout = oncePerDataset { (s, d) =>
+    val e = Tables.embeddings(s, d)
+    val loaded = Clustering.loadTwoLevel(s, twoLevelSavedPath(s, d))
+    val oldSlice = e.filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1)
+    val dir = graft.Fs.jvmTempDir("graft_quant_append")
+    val lp = dir.resolve("layout").toString
+    val bp = dir.resolve("bounds").toString
+    // the codebook fits on the OLD slice only and persists — the
+    // append batch arrives after the index is built, exactly like a
+    // real ingest, and must flow through the LOADED artifact
+    val (blo, bspan) = Similarity.quantizationBounds(oldSlice, "embedding", 64)
+    Similarity.saveQuantization(s, blo, bspan, bp)
+    val (llo, lspan) = Similarity.loadQuantization(s, bp)
+    require(llo == blo && lspan == bspan,
+      "loaded quantization bounds drifted from the fitted ones")
+    Clustering.writeQuantizedByCellTwoLevel(
+      oldSlice, "vec_id", "embedding", loaded, llo, lspan, lp)
+    Clustering.writeQuantizedByCellTwoLevel(e.filter($"vec_id" =!= 0 && $"vec_id" % 5 === 1),
+      "vec_id", "embedding", loaded, llo, lspan, lp, mode = "append")
+    (lp, bp)
   }
 
   /** ss18: APPEND to the QUANTIZED rung-4 layout through the LOADED
@@ -959,57 +914,28 @@ object OpsQueries {
     * clamp arithmetic, the old-slice two-level refit with coverage
     * fallback, the union assignment, the multiprobe ladder and the
     * integer ranking. */
-  private val quantizedAppendLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private val ss18: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
     val loaded = Clustering.loadTwoLevel(s, twoLevelSavedPath(s, d))
-    val oldSlice = e.filter($"vec_id" =!= 0 && $"vec_id" % 5 =!= 1)
     val newBatch = e.filter($"vec_id" =!= 0 && $"vec_id" % 5 === 1)
-    val (path, boundsPath) = quantizedAppendLayouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_quant_append")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val lp = dir.resolve("layout").toString
-      val bp = dir.resolve("bounds").toString
-      // the codebook fits on the OLD slice only and persists — the
-      // append batch arrives after the index is built, exactly like a
-      // real ingest, and must flow through the LOADED artifact
-      val (blo, bspan) = Similarity.quantizationBounds(oldSlice, "embedding", 64)
-      Similarity.saveQuantization(s, blo, bspan, bp)
-      val (llo, lspan) = Similarity.loadQuantization(s, bp)
-      require(llo == blo && lspan == bspan,
-        "loaded quantization bounds drifted from the fitted ones")
-      Clustering.writeQuantizedByCellTwoLevel(
-        oldSlice, "vec_id", "embedding", loaded, llo, lspan, lp)
-      Clustering.writeQuantizedByCellTwoLevel(
-        newBatch, "vec_id", "embedding", loaded, llo, lspan, lp, mode = "append")
-      (lp, bp)
-    })
+    val (path, boundsPath) = quantizedAppendLayout(s, d)
     val (lo, span) = Similarity.loadQuantization(s, boundsPath)
     val qv = queryVec(s, d)
-    val probes = Clustering.twoLevelProbeCells(loaded, qv, Ss13Probe, Ss13Coarse)
-    val qq = e.filter($"vec_id" === 0)
-      .select(Similarity.quantizeInt8($"embedding", lo, span).as("qq"))
-    val served = s.read.parquet(path)
-      .filter($"cell".isin(probes: _*))
-      .crossJoin(broadcast(qq))
-      .select($"id", Similarity.intDot($"q", $"qq").as("qscore"))
-      .sort($"qscore".desc, $"id")
-      .limit(Ss17K)
+    val served = int8ProbedTopK(s, e, path, loaded, lo, span, qv)
       .select(lit("serve").as("part"), $"id".as("a"), $"qscore".cast("double").as("b"))
-    val census = s.read.parquet(path)
-      .groupBy($"cell")
-      .agg(count(lit(1)).as("n"),
-        sum(when($"id" % 5 === 1, 1L).otherwise(0L)).as("nn"))
-      .select(concat(lit("cell_"), $"cell").as("part"),
-        $"n".as("a"), $"nn".cast("double").as("b"))
+    val census = appendedCensus(s, path)
     val clamp = newBatch
       .select(Similarity.clampedDims($"embedding", lo, span).as("nc"))
       .agg(coalesce(sum($"nc".cast("long")), lit(0L)).as("a"),
         coalesce(sum(when($"nc" > 0, 1.0).otherwise(0.0)), lit(0.0)).as("b"))
       .select(lit("clamp").as("part"), $"a", $"b")
     served.unionByName(census).unionByName(clamp).sort($"part", $"a")
+  }
+
+  private val compactedLayout = oncePerDataset { (s, d) =>
+    val dst = graft.Fs.jvmTempDir("graft_twolevel_compact").resolve("compact").toString
+    Clustering.compactCellLayout(s, twoLevelAppendLayout(s, d), dst)
+    dst
   }
 
   /** ss19: COMPACTION of an appended serving layout — the embedding
@@ -1026,29 +952,53 @@ object OpsQueries {
     * graded with ss16's oracle text verbatim, so compaction must be
     * value-invisible row for row (OpsSpec additionally pins the
     * one-file-per-cell shape and that pruning still fires). */
-  private val compactedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val ss19: Q = (s, d) => {
     val qv = queryVec(s, d)
     val loaded = Clustering.loadTwoLevel(s, twoLevelSavedPath(s, d))
-    val path = compactedLayouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_twolevel_compact")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val dst = dir.resolve("compact").toString
-      Clustering.compactCellLayout(s, twoLevelAppendLayout(s, d), dst)
-      dst
-    })
-    val served = Clustering.ivfTopKServedTwoLevel(s, path, loaded, qv, 5,
-        nProbe = Ss13Probe, topCoarse = Ss13Coarse)
-      .select(lit("serve").as("part"), $"id".as("a"), round($"sim", 4).as("b"))
-    val census = s.read.parquet(path)
+    val path = compactedLayout(s, d)
+    twoLevelServeAndCensus(s, path, loaded, qv)
+  }
+
+  /** A served top-k as the uniform (part, a, b) rows of the served-layout
+    * entries: part 'serve', a = id, b = similarity rounded to 4 places. */
+  private def serveRows(topK: DataFrame): DataFrame =
+    topK.select(lit("serve").as("part"), $"id".as("a"), round($"sim", 4).as("b"))
+
+  /** ss16/ss19/st12's graded answer over an appended two-level layout:
+    * ss13's multiprobe serve plus the [[appendedCensus]]. */
+  private[queries] def twoLevelServeAndCensus(s: SparkSession, path: String,
+      model: Clustering.TwoLevelModel, qv: Seq[Double]): DataFrame =
+    serveRows(Clustering.ivfTopKServedTwoLevel(s, path, model, qv, 5,
+        nProbe = Ss13Probe, topCoarse = Ss13Coarse))
+      .unionByName(appendedCensus(s, path)).sort($"part", $"a")
+
+  /** The per-cell census of an appended `cell=` layout in the same
+    * (part, a, b) schema: part 'cell_N', a = members, b = how many of
+    * them are appended-batch rows (id % 5 = 1). */
+  private def appendedCensus(s: SparkSession, path: String): DataFrame =
+    s.read.parquet(path)
       .groupBy($"cell")
       .agg(count(lit(1)).as("n"),
         sum(when($"id" % 5 === 1, 1L).otherwise(0L)).as("nn"))
       .select(concat(lit("cell_"), $"cell").as("part"),
         $"n".as("a"), $"nn".cast("double").as("b"))
-    served.unionByName(census).sort($"part", $"a")
+
+  /** ss17/ss18's serve over an int8 `cell=` layout: the multiprobe
+    * composite cells prune the scan, the query row (vec_id 0 of `e`)
+    * quantizes through the loaded bounds, and the probed rows rank by
+    * exact integer dot product, ties to the lowest id — (id, qscore). */
+  private def int8ProbedTopK(s: SparkSession, e: DataFrame, path: String,
+      model: Clustering.TwoLevelModel, lo: Seq[Double], span: Seq[Double],
+      qv: Seq[Double]): DataFrame = {
+    val probes = Clustering.twoLevelProbeCells(model, qv, Ss13Probe, Ss13Coarse)
+    val qq = e.filter($"vec_id" === 0)
+      .select(Similarity.quantizeInt8($"embedding", lo, span).as("qq"))
+    s.read.parquet(path)
+      .filter($"cell".isin(probes: _*))
+      .crossJoin(broadcast(qq))
+      .select($"id", Similarity.intDot($"q", $"qq").as("qscore"))
+      .sort($"qscore".desc, $"id")
+      .limit(Ss17K)
   }
 
   /** ss06: batched k-NN join — vectors 1..20 each find their top-3
@@ -1504,18 +1454,6 @@ object OpsQueries {
       .sort($"doc_id")
   }
 
-  /** mm06: REAL audio decode through the batch seam — each document gets
-    * a hand-laid canonical RIFF/PCM16 WAV (mono; sample count, rate and
-    * every sample value derived from doc_id via
-    * [[graft.ops.Multimodal.toneSample]]), and
-    * [[graft.ops.Multimodal.audioBatchDecode]] parses it back with the
-    * JDK's own WAV reader (`AudioSystem.getAudioInputStream`), emitting
-    * rate/channels/frame count and exact integer sample statistics
-    * (sum of |sample|, peak). PCM is lossless and every value integer,
-    * so the oracle restates the output as pure arithmetic in doc_id —
-    * any drift in the RIFF layout, the JDK parse, or the sample loop
-    * breaks the hash. Partition-local (encode map → batched decode),
-    * no shuffle; doc_id < 300 bounds the fixture cost, not the operator. */
   /** mm09's frame width (samples per analysis frame). */
   private[queries] final val Mm09FrameLen = 25
 
@@ -1535,6 +1473,18 @@ object OpsQueries {
       .sort($"doc_id", $"frame")
   }
 
+  /** mm06: REAL audio decode through the batch seam — each document gets
+    * a hand-laid canonical RIFF/PCM16 WAV (mono; sample count, rate and
+    * every sample value derived from doc_id via
+    * [[graft.ops.Multimodal.toneSample]]), and
+    * [[graft.ops.Multimodal.audioBatchDecode]] parses it back with the
+    * JDK's own WAV reader (`AudioSystem.getAudioInputStream`), emitting
+    * rate/channels/frame count and exact integer sample statistics
+    * (sum of |sample|, peak). PCM is lossless and every value integer,
+    * so the oracle restates the output as pure arithmetic in doc_id —
+    * any drift in the RIFF layout, the JDK parse, or the sample loop
+    * breaks the hash. Partition-local (encode map → batched decode),
+    * no shuffle; doc_id < 300 bounds the fixture cost, not the operator. */
   private val mm06: Q = (s, d) => {
     val docs = Tables.documents(s, d).filter($"doc_id" < 300).select($"doc_id")
     val packed = Multimodal.encodeToneWavs(docs, "doc_id")
@@ -1836,14 +1786,14 @@ object OpsQueries {
        |SELECT id_a, id_b, ROUND(j, 4) AS j FROM verified
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** dd07: connected components over the verified pair graph via a
-    * recursive transitive-closure CTE; rep = min reachable id. */
   /** dd09: cross-set (new ≥ 250 vs old < 250) LSH screening. */
   private val dd09Oracle: String =
     s"""WITH ${minhashCtes(0.8, "a.id >= 250 AND b.id < 250")}
        |SELECT id_a AS new_id, id_b AS old_id, ROUND(j, 4) AS j FROM verified
        |ORDER BY new_id, old_id""".stripMargin
 
+  /** dd07: connected components over the verified pair graph via a
+    * recursive transitive-closure CTE; rep = min reachable id. */
   private val dd07Oracle: String =
     s"""WITH RECURSIVE ${minhashCtes(0.8)},
        |edges AS (
@@ -2113,11 +2063,6 @@ object OpsQueries {
        |ORDER BY ${sqlCosine("e.embedding", "q.qv", 64)} DESC, vec_id
        |LIMIT 5""".stripMargin
 
-  /** ss04's oracle re-runs the ENTIRE deterministic k-means fit
-    * (init = lowest-id vectors, arg-min fold assignment, 1e-6-rounded
-    * means, Ss04Iters Lloyd iterations) and then the nProbe-cell cosine
-    * re-rank — every fold in the same sequential order as the Spark
-    * kernels, so the fitted cells agree bit for bit. */
   /** Squared-distance restatement shared by the k-means oracle CTEs. */
   private def sqlSqd(v: String, c: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
@@ -2249,6 +2194,11 @@ object OpsQueries {
        |af AS (${assignCte(s"l$Ss04Iters", afSrc)})$atfCte""".stripMargin
   }
 
+  /** ss04's oracle re-runs the ENTIRE deterministic k-means fit
+    * (init = lowest-id vectors, arg-min fold assignment, 1e-6-rounded
+    * means, Ss04Iters Lloyd iterations) and then the nProbe-cell cosine
+    * re-rank — every fold in the same sequential order as the Spark
+    * kernels, so the fitted cells agree bit for bit. */
   private val ss04Oracle: String =
     s"""WITH $kmeansOracleCtes,
        |pc AS (SELECT cell FROM c$Ss04Iters, q ORDER BY ${sqlSqd("qv", "c")}, cell LIMIT $Ss04Probe)

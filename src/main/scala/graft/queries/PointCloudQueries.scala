@@ -827,6 +827,15 @@ object PointCloudQueries {
       .sort($"channel")
   }
 
+  /** pc28/pc29's shared layout: the format-7 frame as a three-file COPC
+    * corpus (disjoint voxel-key ranges, octree-keyed chunks, info VLR +
+    * hierarchy EVLR per file). Built once per dataset dir. */
+  private def copcLayout(s: SparkSession, d: String): String =
+    layoutOnce("pc28b", d) { out =>
+      layeredPointFrame(s, d).writeCopc(out,
+        Map("scale" -> "0.001", "copc.nodepoints" -> "4096", "copc.files" -> "3"))
+    }
+
   /** pc28: COPC SPATIAL PRUNING graded end-to-end, BOTH tiers — the
     * format-7 frame written through `writeCopc` with `copc.files = 3`
     * (range-partitioned on the voxel key into three spatially DISJOINT
@@ -841,15 +850,6 @@ object PointCloudQueries {
     * chunks, pruned file-first then chunk-level, with the record
     * predicate exacting the residue. The layout is build-once (the
     * GRADED operation is the pruned read). */
-  /** pc28/pc29's shared layout: the format-7 frame as a three-file COPC
-    * corpus (disjoint voxel-key ranges, octree-keyed chunks, info VLR +
-    * hierarchy EVLR per file). Built once per dataset dir. */
-  private def copcLayout(s: SparkSession, d: String): String =
-    layoutOnce("pc28b", d) { out =>
-      layeredPointFrame(s, d).writeCopc(out,
-        Map("scale" -> "0.001", "copc.nodepoints" -> "4096", "copc.files" -> "3"))
-    }
-
   private val pc28: Q = (s, d) => {
     val dir = copcLayout(s, d)
     s.read.las(dir)
@@ -912,6 +912,17 @@ object PointCloudQueries {
     l
   }
 
+  /** pc30/pc33's shared LOD layout (build-once) and its leaf level. */
+  private def lodLayout(s: SparkSession, d: String): (String, Int) = {
+    val leaf = lodLeafLevel(Tables.lineitem(s, d).count(), 4096L)
+    val dir = layoutOnce("pc30", d) { out =>
+      layeredPointFrame(s, d).writeCopc(out,
+        Map("scale" -> "0.001", "copc.nodepoints" -> "4096",
+          "copc.lod" -> "true", "copc.level" -> leaf.toString))
+    }
+    (dir, leaf)
+  }
+
   /** pc30: LOD PREVIEW READ — the approximate-scan rung of the COPC
     * family. `copc.lod = true` distributes points across octree levels
     * by a DETERMINISTIC integer hash of the raw coordinates
@@ -928,17 +939,6 @@ object PointCloudQueries {
     * is the storage-level "fast approximate answer" a 100-TB
     * interactive workload needs: no sampling operator, no second
     * dataset — the SAME file serves exact and preview reads. */
-  /** pc30/pc33's shared LOD layout (build-once) and its leaf level. */
-  private def lodLayout(s: SparkSession, d: String): (String, Int) = {
-    val leaf = lodLeafLevel(Tables.lineitem(s, d).count(), 4096L)
-    val dir = layoutOnce("pc30", d) { out =>
-      layeredPointFrame(s, d).writeCopc(out,
-        Map("scale" -> "0.001", "copc.nodepoints" -> "4096",
-          "copc.lod" -> "true", "copc.level" -> leaf.toString))
-    }
-    (dir, leaf)
-  }
-
   private val pc30: Q = (s, d) => {
     val (dir, leaf) = lodLayout(s, d)
     s.read.format("las")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.Clustering
 import graft.streaming.{AnnIngest, EventStreams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,8 +58,9 @@ object StreamingQueries {
     * `providerClass`, when set, selects the state-store backend for
     * THIS query (fixed into its fresh checkpoint at start, restored
     * after) — how st10 grades the RocksDB provider the 100 TB state
-    * story defers to, against the same oracle as the heap run. */
-  /** `noDataBatch = false` disables the trailing watermark-advancing
+    * story defers to, against the same oracle as the heap run.
+    *
+    * `noDataBatch = false` disables the trailing watermark-advancing
     * no-data micro-batch (`spark.sql.streaming.noDataMicroBatches.enabled`)
     * for THIS query. A no-data batch runs the full stateful plan (state
     * store load + commit per partition per operator) to let the advanced
@@ -406,6 +408,63 @@ object StreamingQueries {
     * every replayed epoch land as a duplicate. */
   private final val St12Token = "st12ingest"
 
+  private val st12Layout = oncePerDataset { (s, d) =>
+    val e = graft.Tables.embeddings(s, d)
+    val model = Clustering.loadTwoLevel(s, OpsQueries.twoLevelSavedPath(s, d))
+    val dir = graft.Fs.jvmTempDir("graft_st12")
+    val landing = dir.resolve("landing")
+    java.nio.file.Files.createDirectories(landing)
+    val layout = dir.resolve("layout").toString
+    // land one batch as ONE flat file the file source will pick up
+    def land(df: DataFrame, name: String): Unit = {
+      val tmp = dir.resolve(name + "_tmp")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = {
+        val st = java.nio.file.Files.list(tmp)
+        try st.filter(_.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get()
+        finally st.close()
+      }
+      java.nio.file.Files.move(part, landing.resolve(name + ".parquet"))
+      graft.Fs.deleteRecursively(tmp)
+    }
+    land(e.filter(col("vec_id") =!= 0 && col("vec_id") % 5 =!= 1), "batch0")
+    val lastDataEpoch = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val ingest: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      (b, ep) =>
+        // default-trigger streams may fire data-free batches; they must
+        // neither advance the replayed-epoch marker nor touch the layout
+        if (!b.isEmpty) {
+          lastDataEpoch.updateAndGet(m => math.max(m, ep))
+          AnnIngest.appendBatchIdempotent(b.toDF(), ep,
+            "vec_id", "embedding", model, layout, St12Token)
+        }
+    val ckpt = graft.Fs.fastTempBase
+      .map(base => java.nio.file.Files.createTempDirectory(base, "graft_ckpt_st12"))
+      .getOrElse(dir.resolve("ckpt"))
+    val q = s.readStream.schema(e.schema).parquet(landing.toString)
+      .writeStream.foreachBatch(ingest)
+      .option("checkpointLocation", ckpt.toString)
+      .start()
+    try {
+      q.processAllAvailable()
+      // the NEW batch lands while the query is live — continuous ingest
+      land(e.filter(col("vec_id") =!= 0 && col("vec_id") % 5 === 1), "batch1")
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      graft.Fs.deleteRecursively(ckpt)
+    }
+    // restart replay, graded: re-apply the final epoch with identical
+    // content — exactly what a checkpoint-restarted query does to an
+    // uncommitted epoch; the census below catches any duplication
+    AnnIngest.appendBatchIdempotent(
+      s.read.schema(e.schema)
+        .parquet(landing.resolve("batch1.parquet").toString),
+      lastDataEpoch.get(), "vec_id", "embedding", model, layout, St12Token)
+    layout
+  }
+
   /** st12: STREAMING INGEST INTO A SERVED ANN LAYOUT — the st×ss
     * composition a LIVE embedding index runs: embedding batches LAND as
     * files (the second batch arrives while the query is running — the
@@ -424,80 +483,10 @@ object StreamingQueries {
     * layout must equal the batch append's: multiprobe serve over the
     * union + per-cell census with appended counts), same oracle text —
     * one contract, batch and streaming ingest both held to it. */
-  private val st12Layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val st12: Q = (s, d) => {
-    import graft.ops.Clustering
-    val e = graft.Tables.embeddings(s, d)
     val model = Clustering.loadTwoLevel(s, OpsQueries.twoLevelSavedPath(s, d))
-    val path = st12Layouts.computeIfAbsent(d, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_st12")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.Fs.deleteRecursively(dir)))
-      val landing = dir.resolve("landing")
-      java.nio.file.Files.createDirectories(landing)
-      val layout = dir.resolve("layout").toString
-      // land one batch as ONE flat file the file source will pick up
-      def land(df: DataFrame, name: String): Unit = {
-        val tmp = dir.resolve(name + "_tmp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = {
-          val st = java.nio.file.Files.list(tmp)
-          try st.filter(_.getFileName.toString.endsWith(".parquet"))
-            .findFirst().get()
-          finally st.close()
-        }
-        java.nio.file.Files.move(part, landing.resolve(name + ".parquet"))
-        graft.Fs.deleteRecursively(tmp)
-      }
-      land(e.filter(col("vec_id") =!= 0 && col("vec_id") % 5 =!= 1), "batch0")
-      val lastDataEpoch = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val ingest: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, ep) =>
-          // default-trigger streams may fire data-free batches; they must
-          // neither advance the replayed-epoch marker nor touch the layout
-          if (!b.isEmpty) {
-            lastDataEpoch.updateAndGet(m => math.max(m, ep))
-            AnnIngest.appendBatchIdempotent(b.toDF(), ep,
-              "vec_id", "embedding", model, layout, St12Token)
-          }
-      val ckpt = graft.Fs.fastTempBase
-        .map(base => java.nio.file.Files.createTempDirectory(base, "graft_ckpt_st12"))
-        .getOrElse(dir.resolve("ckpt"))
-      val q = s.readStream.schema(e.schema).parquet(landing.toString)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try {
-        q.processAllAvailable()
-        // the NEW batch lands while the query is live — continuous ingest
-        land(e.filter(col("vec_id") =!= 0 && col("vec_id") % 5 === 1), "batch1")
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.Fs.deleteRecursively(ckpt)
-      }
-      // restart replay, graded: re-apply the final epoch with identical
-      // content — exactly what a checkpoint-restarted query does to an
-      // uncommitted epoch; the census below catches any duplication
-      AnnIngest.appendBatchIdempotent(
-        s.read.schema(e.schema)
-          .parquet(landing.resolve("batch1.parquet").toString),
-        lastDataEpoch.get(), "vec_id", "embedding", model, layout, St12Token)
-      layout
-    })
-    val qv = OpsQueries.queryVec(s, d)
-    val served = Clustering.ivfTopKServedTwoLevel(s, path, model, qv, 5,
-        nProbe = OpsQueries.Ss13Probe, topCoarse = OpsQueries.Ss13Coarse)
-      .select(lit("serve").as("part"), col("id").as("a"),
-        round(col("sim"), 4).as("b"))
-    val census = s.read.parquet(path)
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("id") % 5 === 1, 1L).otherwise(0L)).as("nn"))
-      .select(concat(lit("cell_"), col("cell")).as("part"),
-        col("n").as("a"), col("nn").cast("double").as("b"))
-    served.unionByName(census).sort(col("part"), col("a"))
+    val path = st12Layout(s, d)
+    OpsQueries.twoLevelServeAndCensus(s, path, model, OpsQueries.queryVec(s, d))
   }
 
   val queries: Map[String, Q] = Map(

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.Clustering
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming ingest into a SERVED ANN layout — the st×ss composition a
   * live embedding index needs: micro-batches of landing vectors are
@@ -40,20 +39,14 @@ object AnnIngest {
       queryToken.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
       s"queryToken must be a filename-safe stable token, got '$queryToken'")
     require(epochId >= 0, s"epochId must be non-negative, got $epochId")
-    val spark = batch.sparkSession
-    val assigned = Clustering.assignCellsTwoLevel(
-      batch.select(col(idCol).as("id"), col(vecCol).as("embedding"),
-          transform(col(vecCol), _.cast("double")).as("__v"))
-        .localCheckpoint(eager = true), // same inlining guard as kmeans
-      "id", "__v", model).drop("__v")
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = batch.sparkSession.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     // stage under a dot-prefixed dir INSIDE the layout (same filesystem,
     // so the promotion below is a metadata rename; readers ignore hidden
     // dirs, so a crash mid-stage never corrupts a serve)
     val stage = new Path(root, s".graft-stage-$queryToken-$epochId")
-    assigned.write.partitionBy("cell").mode("overwrite").parquet(stage.toString)
+    Clustering.writePartitionedByCellTwoLevel(batch, idCol, vecCol, model, stage.toString)
     // the replay rule, step 1: remove every file this (token, epoch)
     // pair landed in a previous attempt — the batch content is the
     // checkpoint's replayed offsets, but its FILE SPLIT need not be

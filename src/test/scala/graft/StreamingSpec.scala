@@ -239,35 +239,30 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("sweepLegacyEpochFiles opt-in reaches the sink through the real option path") {
-    // the option travels user .option() → CaseInsensitiveStringMap
-    // (lowercased keys) → commit-time lookup: plant a pre-upgrade
-    // tokenless epoch-0 leftover, run ONE epoch with the opt-in, and the
-    // leftover must be gone — this fails if the lookup key case drifts
+  test("a foreign tokenless epoch file survives a real streaming commit") {
+    // the commit sweep is token-scoped: plant a tokenless epoch-0 file
+    // (no query's token), run ONE epoch through the real sink, and the
+    // file must still be there
     import graft.pointcloud.syntax._
     import org.apache.spark.sql.functions._
-    def run(sweep: Boolean): Boolean = {
-      val in = java.nio.file.Files.createTempDirectory("graft-sweepin").toString
-      val out = java.nio.file.Files.createTempDirectory("graft-sweepout").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sweepckpt").toString
-      spark.range(10).select(
-          $"id".cast("int").as("x"), lit(0).cast("int").as("y"),
-          lit(0).cast("int").as("z"), lit(0).cast("short").as("intensity"),
-          lit(1).cast("byte").as("flags"), lit(0).cast("byte").as("classification"),
-          lit(0).cast("byte").as("angle"), lit(0).cast("byte").as("user"),
-          lit(0).cast("short").as("source"))
-        .coalesce(1).writeLas(in)
-      val legacy = java.nio.file.Paths.get(out, "epoch-0-part-00000-3.las")
-      java.nio.file.Files.write(legacy, Array[Byte](1, 2, 3))
-      val w = spark.readStream.format("las").load(in).drop("fid", "pid")
-        .writeStreamPointCloud("las", out)
-        .option("checkpointLocation", ckpt).outputMode("append")
-      val q = (if (sweep) w.option("sweepLegacyEpochFiles", "true") else w).start()
-      try q.processAllAvailable() finally q.stop()
-      java.nio.file.Files.exists(legacy)
-    }
-    assert(!run(sweep = true), "opt-in set: the legacy leftover must be swept")
-    assert(run(sweep = false), "no opt-in: a foreign tokenless file must survive")
+    val in = java.nio.file.Files.createTempDirectory("graft-sweepin").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-sweepout").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sweepckpt").toString
+    spark.range(10).select(
+        $"id".cast("int").as("x"), lit(0).cast("int").as("y"),
+        lit(0).cast("int").as("z"), lit(0).cast("short").as("intensity"),
+        lit(1).cast("byte").as("flags"), lit(0).cast("byte").as("classification"),
+        lit(0).cast("byte").as("angle"), lit(0).cast("byte").as("user"),
+        lit(0).cast("short").as("source"))
+      .coalesce(1).writeLas(in)
+    val foreign = java.nio.file.Paths.get(out, "epoch-0-part-00000-3.las")
+    java.nio.file.Files.write(foreign, Array[Byte](1, 2, 3))
+    val q = spark.readStream.format("las").load(in).drop("fid", "pid")
+      .writeStreamPointCloud("las", out)
+      .option("checkpointLocation", ckpt).outputMode("append")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(java.nio.file.Files.exists(foreign), "a foreign tokenless file must survive")
   }
 
   test("epoch replay: committed census is invariant under any leftover subset") {

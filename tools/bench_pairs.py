@@ -13,8 +13,21 @@ the parent first on odd seeds, the change first on even seeds. Every run appends
 
 where `result` is the run's last stdout line (null when it printed none).
 At the end it prints, per end-to-end metric of BENCHMARK.json, the parent
-and change medians, the parent's quartiles and how many pairs the change
-won (in the metric's better direction).
+and change medians, the parent's quartiles, how many pairs the change
+won (in the metric's better direction) and a verdict against the metric's
+`bound` (a fraction of the parent's median):
+
+    worse       the change's median is worse than the parent's by more
+                than the bound;
+    unresolved  the parent's quartile spread over its median is wider than
+                the bound, unless every change run beats every parent run;
+    ok          otherwise.
+
+To re-summarize recorded runs without running anything:
+
+    python3 -c "import sys, json; sys.path.insert(0, 'tools'); import bench_pairs; \
+        bench_pairs.summarize([json.loads(l) for l in open('plans/rNN/runs.jsonl')], \
+        json.load(open('BENCHMARK.json'))['end_to_end'])"
 """
 import argparse
 import json
@@ -47,24 +60,41 @@ def run_once(side_dir, workload, seed, seconds, trace):
     return p.returncode, elapsed, result
 
 
+def verdict(ps, cs, lower, bound):
+    """`worse`, `unresolved` or `ok` for one metric's parent and change runs."""
+    p_med, c_med = statistics.median(ps), statistics.median(cs)
+    worse_by = (c_med - p_med) if lower else (p_med - c_med)
+    if worse_by > bound * abs(p_med):
+        return "worse"
+    q = statistics.quantiles(ps, n=4) if len(ps) > 1 else [ps[0]] * 3
+    beats_all = min(ps) > max(cs) if lower else max(ps) < min(cs)
+    if q[2] - q[0] > bound * abs(p_med) and not beats_all:
+        return "unresolved"
+    return "ok"
+
+
 def summarize(rows, metrics):
-    pairs = {}
+    by_workload = {}
     for r in rows:
         if r["result"]:
+            pairs = by_workload.setdefault(r["workload"], {})
             pairs.setdefault(r["seed"], {})[r["side"]] = r["result"]["metrics"]
-    both = [v for v in pairs.values() if "parent" in v and "change" in v]
-    print(f"{len(both)} complete pairs")
-    print(f"{'metric':22s} {'parent':>12s} {'change':>12s} {'parent q1-q3':>25s} wins")
-    for m in metrics:
-        name, lower = m["name"], m["better"] == "lower"
-        ps = [p["parent"][name]["value"] for p in both if name in p["parent"]]
-        cs = [p["change"][name]["value"] for p in both if name in p["change"]]
-        if not ps or len(ps) != len(cs):
-            continue
-        wins = sum((c < p) if lower else (c > p) for p, c in zip(ps, cs))
-        q = statistics.quantiles(ps, n=4) if len(ps) > 1 else [ps[0]] * 3
-        print(f"{name:22s} {statistics.median(ps):12.4g} {statistics.median(cs):12.4g} "
-              f"{q[0]:12.4g}-{q[2]:<12.4g} {wins}/{len(ps)}")
+    for workload, pairs in by_workload.items():
+        both = [v for v in pairs.values() if "parent" in v and "change" in v]
+        print(f"{workload}: {len(both)} complete pairs")
+        print(f"{'metric':22s} {'parent':>12s} {'change':>12s} {'parent q1-q3':>25s} "
+              f"{'wins':>6s} verdict")
+        for m in metrics:
+            name, lower = m["name"], m["better"] == "lower"
+            ps = [p["parent"][name]["value"] for p in both if name in p["parent"]]
+            cs = [p["change"][name]["value"] for p in both if name in p["change"]]
+            if not ps or len(ps) != len(cs):
+                continue
+            wins = sum((c < p) if lower else (c > p) for p, c in zip(ps, cs))
+            q = statistics.quantiles(ps, n=4) if len(ps) > 1 else [ps[0]] * 3
+            print(f"{name:22s} {statistics.median(ps):12.4g} {statistics.median(cs):12.4g} "
+                  f"{q[0]:12.4g}-{q[2]:<12.4g} {f'{wins}/{len(ps)}':>6s} "
+                  f"{verdict(ps, cs, lower, m['bound'])}")
 
 
 def main():
