@@ -60,13 +60,17 @@ def run_once(side_dir, workload, seed, seconds, trace):
     return p.returncode, elapsed, result
 
 
+def quartiles(xs):
+    return statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+
+
 def verdict(ps, cs, lower, bound):
     """`worse`, `unresolved` or `ok` for one metric's parent and change runs."""
     p_med, c_med = statistics.median(ps), statistics.median(cs)
     worse_by = (c_med - p_med) if lower else (p_med - c_med)
     if worse_by > bound * abs(p_med):
         return "worse"
-    q = statistics.quantiles(ps, n=4) if len(ps) > 1 else [ps[0]] * 3
+    q = quartiles(ps)
     beats_all = min(ps) > max(cs) if lower else max(ps) < min(cs)
     if q[2] - q[0] > bound * abs(p_med) and not beats_all:
         return "unresolved"
@@ -91,7 +95,7 @@ def summarize(rows, metrics):
             if not ps or len(ps) != len(cs):
                 continue
             wins = sum((c < p) if lower else (c > p) for p, c in zip(ps, cs))
-            q = statistics.quantiles(ps, n=4) if len(ps) > 1 else [ps[0]] * 3
+            q = quartiles(ps)
             print(f"{name:22s} {statistics.median(ps):12.4g} {statistics.median(cs):12.4g} "
                   f"{q[0]:12.4g}-{q[2]:<12.4g} {f'{wins}/{len(ps)}':>6s} "
                   f"{verdict(ps, cs, lower, m['bound'])}")
