@@ -36,14 +36,16 @@ class PointCloudScanBuilder(
   private var readSchema: StructType = tableSchema
   private var pushedAggRow: Option[(StructType, Array[Array[Any]])] = None
   /** Explicit subscriptions (`bbox` + `timerange` read options, see
-    * [[BboxOption]] / [[TimeRangeOption]]): synthesized filters seeded
-    * into BOTH pushdown layers so the declared region binds even when
-    * the query carries no WHERE — the batch twin of the streaming
-    * source's only pushdown channel (DSv2 micro-batch planning never
-    * calls pushFilters). */
+    * [[SubscriptionOption]]): synthesized filters seeded into BOTH
+    * pushdown layers so the declared region binds even when the query
+    * carries no WHERE — the batch twin of the streaming source's only
+    * pushdown channel (DSv2 micro-batch planning never calls
+    * pushFilters). */
   private val bboxFilters: Array[SourceFilter] =
-    BboxOption.filters(kind, tableSchema, options) ++
-      TimeRangeOption.filters(kind, tableSchema, options)
+    SubscriptionOption.filters(kind, tableSchema, options)
+  /** `copc.maxlevel`, parsed once here so a malformed value fails the
+    * query instead of degrading; the scan and its stream receive it. */
+  private val copcMaxLevel: Int = CopcPrune.maxLevelOption(options)
   private var skipFilters: Array[SourceFilter] = bboxFilters
   private var recordFilters: Array[SourceFilter] = bboxFilters
   private var limit: Int = -1
@@ -89,9 +91,6 @@ class PointCloudScanBuilder(
     else { limit = l; true }
   }
 
-  private def sectionMayMatch(sf: SectionWithFid, filters: Array[SourceFilter]): Boolean =
-    SectionSkip.mayMatch(sf, filters)
-
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     computeAggregation(aggregation).isDefined
 
@@ -115,7 +114,7 @@ class PointCloudScanBuilder(
     if (recordFilters.nonEmpty) return None
     // likewise a declared copc.maxlevel preview reads a SUBSET of each
     // file's chunks — header counts/extents describe the full file
-    if (CopcPrune.maxLevelOption(options) >= 0) return None
+    if (copcMaxLevel >= 0) return None
     if (kind == FormatKind.Xyz) return None // no header to answer from
     if (resolved.sections.isEmpty) return None
     val groupByFid = agg.groupByExpressions.toSeq match {
@@ -197,22 +196,33 @@ class PointCloudScanBuilder(
     case None =>
       val pruned =
         if (skipFilters.isEmpty) resolved
-        else resolved.copy(sections =
-          resolved.sections.filter(sectionMayMatch(_, skipFilters)))
+        else resolved.copy(sections = resolved.sections.filter(sf =>
+          SectionSkip.mayMatch(SectionSkip.sectionRange(sf), skipFilters)))
       new PointCloudScan(kind, pruned, readSchema, tableSchema, options, provider,
-        recordFilters, limit, skipFilters)
+        recordFilters, limit, skipFilters, copcMaxLevel)
   }
 }
 
-/** Conservative can-this-section-match check in the raw-int domain:
-  * LAS header bbox bounds x/y/z; fid is a per-section constant; pid
-  * spans [0, count). Returns false only when provably empty — shared by
-  * the builder's planning-time skip and the scan's runtime (join-driven)
-  * skip. */
+/** The one range test of the connector's two skip levels: can a region
+  * whose columns span `range` hold a record matching `filters`? `range`
+  * maps a column to its `(lo, hi)` in the exposed raw domain, or None
+  * when the region does not bound it. Returns false only when provably
+  * empty. The builder's file skip, the scan's runtime (join-driven) fid
+  * skip and the stream planner test a section over [[sectionRange]];
+  * [[CopcPrune.keepMask]] tests each COPC chunk over its octree node's
+  * bounds. */
 private[connector] object SectionSkip {
-  def mayMatch(sf: SectionWithFid, filters: Array[SourceFilter]): Boolean = {
-    if (sf.section.count == 0) return true // degenerate; keep (costs nothing)
-    def axisRange(col: String): Option[(Double, Double)] = col match {
+  type Range = String => Option[(Double, Double)]
+
+  /** A section's bounds: LAS header bbox for x/y/z; fid is a per-section
+    * constant; pid spans [0, count); COPC's info VLR carries the file's
+    * gpstime span (world-domain doubles, the exposed `time` domain), so
+    * a time-sliced read of a lidar lake skips whole files exactly like
+    * the bbox skip. A zero-count section bounds nothing (it is kept; it
+    * costs nothing). */
+  def sectionRange(sf: SectionWithFid): Range = col =>
+    if (sf.section.count == 0) None
+    else col match {
       case PointCloudUtil.FidCol => Some((sf.fid.toDouble, sf.fid.toDouble))
       case PointCloudUtil.PidCol => Some((0.0, (sf.section.count - 1).toDouble))
       case "x" | "y" | "z" => sf.lasStats.map { st =>
@@ -220,30 +230,27 @@ private[connector] object SectionSkip {
         (Math.round((st.pMin(a) - st.offset(a)) / st.scale(a)).toDouble,
           Math.round((st.pMax(a) - st.offset(a)) / st.scale(a)).toDouble)
       }
-      // temporal file skip: COPC's info VLR carries the file's gpstime
-      // span (world-domain doubles, same domain as the exposed `time`
-      // column) — a time-sliced read of a lidar lake skips whole files
-      // here, before any split is cut, exactly like the bbox skip above
-      case "time" => sf.laz.flatMap(lz => Option(lz.gpsRange))
-        .map(r => (r(0), r(1)))
+      case "time" => sf.laz.flatMap(lz => Option(lz.gpsRange)).map(r => (r(0), r(1)))
       case _ => None
     }
+
+  def mayMatch(range: Range, filters: Array[SourceFilter]): Boolean = {
     def num(v: Any): Option[Double] = v match {
       case n: Number => Some(n.doubleValue())
       case _ => None
     }
     def one(f: SourceFilter): Boolean = f match {
-      case FGt(c, v)  => (axisRange(c), num(v)) match {
+      case FGt(c, v)  => (range(c), num(v)) match {
         case (Some((_, hi)), Some(x)) => hi > x;  case _ => true }
-      case FGe(c, v)  => (axisRange(c), num(v)) match {
+      case FGe(c, v)  => (range(c), num(v)) match {
         case (Some((_, hi)), Some(x)) => hi >= x; case _ => true }
-      case FLt(c, v)  => (axisRange(c), num(v)) match {
+      case FLt(c, v)  => (range(c), num(v)) match {
         case (Some((lo, _)), Some(x)) => lo < x;  case _ => true }
-      case FLe(c, v)  => (axisRange(c), num(v)) match {
+      case FLe(c, v)  => (range(c), num(v)) match {
         case (Some((lo, _)), Some(x)) => lo <= x; case _ => true }
-      case FEq(c, v)  => (axisRange(c), num(v)) match {
+      case FEq(c, v)  => (range(c), num(v)) match {
         case (Some((lo, hi)), Some(x)) => lo <= x && x <= hi; case _ => true }
-      case FIn(c, vs) => axisRange(c) match {
+      case FIn(c, vs) => range(c) match {
         // runtime join filters arrive as In(fid, matched values)
         case Some((lo, hi)) =>
           vs.exists(v => num(v).forall(x => lo <= x && x <= hi))
@@ -298,14 +305,14 @@ class PointCloudScan(
       * keep record filters residual (Spark re-evaluates them exactly),
       * but the PLANNER may still use every conjunct conservatively for
       * COPC chunk skipping, exactly like the header file skip does. */
-    planFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    planFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+    /** The `copc.maxlevel` preview bound (−1 = unset), parsed by the
+      * builder. */
+    copcMaxLevel: Int = -1)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering {
 
-  /** `copc.maxlevel`, parsed ONCE at scan construction so a malformed
-    * value fails the query instead of degrading; and a declared preview
-    * over a source that cannot honor it (any non-COPC file) is rejected
-    * outright. */
-  private val copcMaxLevel: Int = CopcPrune.maxLevelOption(options)
+  // a declared preview over a source that cannot honor it (any non-COPC
+  // file) is rejected outright
   if (copcMaxLevel >= 0) resolved.sections.foreach(CopcPrune.requirePreviewHonorable)
 
   /** Sections surviving runtime (join-driven) filtering; starts as the
@@ -325,7 +332,7 @@ class PointCloudScan(
     else Array.empty
 
   override def filter(filters: Array[SourceFilter]): Unit = {
-    sections = sections.filter(SectionSkip.mayMatch(_, filters))
+    sections = sections.filter(sf => SectionSkip.mayMatch(SectionSkip.sectionRange(sf), filters))
   }
 
   /** Streaming ingest: new files in the directory become micro-batches
@@ -339,7 +346,7 @@ class PointCloudScan(
     // too — this scan (with its pushedFilters) is what Spark plans from;
     // the full conjunct set rides along for COPC planning-time pruning
     new PointCloudMicroBatchStream(kind, provider, schema, tableSchema, options,
-      checkpointLocation, pushedFilters, planFilters)
+      checkpointLocation, pushedFilters, planFilters, copcMaxLevel)
   }
 
   /** Header-derived stats (exact row counts, on-disk bytes) so Catalyst
@@ -361,9 +368,9 @@ class PointCloudScan(
         // construction require above); it contributes 0 rows, it must
         // not crash stats estimation
         sf.laz.fold(0L) { lz =>
-          (0 until lz.numChunks).iterator
-            .filter(i => lz.chunkLevels(i) < 0 || lz.chunkLevels(i) <= copcMaxLevel)
-            .map(lz.chunkPoints(_)).sum
+          val keep = CopcPrune.keepMask(lz, Array.empty, copcMaxLevel)
+          lz.chunkPoints.indices.iterator
+            .filter(i => keep == null || keep(i)).map(lz.chunkPoints(_)).sum
         }
       }.sum
     private val rows =
@@ -485,248 +492,143 @@ case class LazPartition(
   }
 }
 
-/** Explicit spatial subscription: the `bbox` read option,
+/** Explicit subscriptions: the `bbox` read option,
   * `"xlo,xhi,ylo,yhi,zlo,zhi"` in the exposed-schema coordinate domain
-  * (raw integers for LAS, stored values for PLY; `*` leaves a side
-  * unbounded). Spark's DSv2 STREAMING planner never pushes predicates
-  * into a micro-batch source (the stream's scan is built before the
-  * optimizer sees any WHERE), so a consumer that should only ingest a
-  * region must DECLARE it — the same way a Kafka reader declares its
-  * subscription. The declared box is EXACT at the record level: it
-  * compiles to the same [[RecordPredicate]] the claimed-pushdown path
-  * uses (readers skip non-matching records before decode; LAZ readers
-  * apply it to decoded chunk records), and at planning time it drives
-  * header file-skip and COPC chunk pruning. The batch scan honors the
-  * option identically, so one option value means one result set in
-  * both modes. XYZ is rejected (text records have no reader-side
-  * predicate surface — a silently over-delivering subscription would
-  * be worse than an error). */
-private[graft] object BboxOption {
+  * (raw integers for LAS, stored values for PLY), and the `timerange`
+  * read option, `"lo,hi"` in the exposed `time` (gpstime) domain; `*`
+  * leaves a side unbounded. Spark's DSv2 STREAMING planner never pushes
+  * predicates into a micro-batch source (the stream's scan is built
+  * before the optimizer sees any WHERE), so a consumer that should only
+  * ingest a region or a time window must DECLARE it — the same way a
+  * Kafka reader declares its subscription. A batch `WHERE` gets the same
+  * planning effects automatically (pc31). The declared bounds are EXACT
+  * at the record level: they compile to the same [[RecordPredicate]] the
+  * claimed-pushdown path uses (readers skip non-matching records before
+  * decode; LAZ readers apply it to decoded chunk records), and at
+  * planning they drive the header file skip, the COPC gps-range file
+  * skip and COPC chunk pruning ([[SectionSkip]]). The batch scan honors
+  * the options identically, so one option value means one result set in
+  * both modes. XYZ sources, and tables without the bound columns, are
+  * rejected: a silently over-delivering subscription is worse than an
+  * error. */
+private[graft] object SubscriptionOption {
   def filters(kind: FormatKind, tableSchema: StructType,
       options: CaseInsensitiveStringMap): Array[SourceFilter] =
-    Option(options.get("bbox")) match {
+    parse(kind, tableSchema, options, "bbox", Seq("x", "y", "z"), integralFirst = true) ++
+      parse(kind, tableSchema, options, "timerange", Seq("time"), integralFirst = false)
+
+  /** One option's filters: a `lo,hi` pair per column of `cols`. With
+    * `integralFirst`, a bound that parses as a Long stays integral (Long
+    * columns only push integral literals, and the raw-int LAS domain
+    * compares exactly); every other bound parses as a double. */
+  private def parse(kind: FormatKind, tableSchema: StructType,
+      options: CaseInsensitiveStringMap, name: String, cols: Seq[String],
+      integralFirst: Boolean): Array[SourceFilter] =
+    Option(options.get(name)) match {
       case None => Array.empty
       case Some(raw) =>
         require(kind != FormatKind.Xyz,
-          "bbox is not supported for xyz sources: text records have no " +
-            "reader-side predicate surface, so the declared box could not " +
+          s"$name is not supported for xyz sources: text records have no " +
+            "reader-side predicate surface, so the declared bounds could not " +
             "be honored exactly")
         val parts = raw.split(",", -1).map(_.trim)
-        require(parts.length == 6,
-          s"bbox must be 'xlo,xhi,ylo,yhi,zlo,zhi' (exposed-schema " +
-            s"coordinate domain, '*' for an unbounded side), got '$raw'")
-        val dims = Array("x", "y", "z")
+        require(parts.length == 2 * cols.length,
+          s"$name must be '${cols.map(c => s"${c}lo,${c}hi").mkString(",")}' " +
+            s"(exposed-schema domain, '*' for an unbounded side), got '$raw'")
+        // NaN/Infinity parse as doubles but make every comparison false
+        // — a subscription that silently matches nothing, the exact
+        // failure mode these options exist to surface as an error
+        def bound(tok: String, side: String, c: String): Option[Any] =
+          if (tok == "*") None
+          else Some((if (integralFirst) tok.toLongOption else None)
+            .map(java.lang.Long.valueOf).getOrElse {
+              val d = try tok.toDouble catch {
+                case _: NumberFormatException => throw new IllegalArgumentException(
+                  s"$name $side bound for $c is not a number: '$tok'")
+              }
+              require(java.lang.Double.isFinite(d),
+                s"$name $side bound for $c is not finite: '$tok'")
+              java.lang.Double.valueOf(d)
+            })
+        // exact for Longs and doubles alike (a double round-trip would
+        // wave through inverted Long bounds past 2^53)
+        def big(v: Any): BigDecimal = v match {
+          case x: java.lang.Long => BigDecimal(x.longValue)
+          case x: java.lang.Double => BigDecimal(x.doubleValue)
+        }
         val out = Array.newBuilder[SourceFilter]
-        var a = 0
-        while (a < 3) {
-          // integer bounds stay integral (the raw-int LAS domain feeds
-          // COPC box narrowing, which only reads integral literals);
-          // fractional bounds parse as doubles for float PLY coords
-          def bound(tok: String, side: String): Option[Any] =
-            if (tok == "*") None
-            else Some(
-              try java.lang.Long.valueOf(tok.toLong)
-              catch {
-                case _: NumberFormatException =>
-                  val d = try tok.toDouble catch {
-                    case _: NumberFormatException =>
-                      throw new IllegalArgumentException(
-                        s"bbox $side bound for ${dims(a)} is not a number: '$tok'")
-                  }
-                  // NaN/Infinity parse as doubles but make every
-                  // comparison false — a subscription that silently
-                  // matches nothing, the exact failure mode this option
-                  // exists to surface as an error
-                  require(java.lang.Double.isFinite(d),
-                    s"bbox $side bound for ${dims(a)} is not finite: '$tok'")
-                  java.lang.Double.valueOf(d)
-              })
-          val lo = bound(parts(2 * a), "lower")
-          val hi = bound(parts(2 * a + 1), "upper")
-          for (l <- lo; h <- hi) {
-            // exact in the Long domain (a double round-trip would wave
-            // through inverted bounds past 2^53); mixed types compare
-            // via BigDecimal, exact for both
-            val inverted = (l, h) match {
-              case (a1: java.lang.Long, b1: java.lang.Long) => a1 > b1
-              case _ =>
-                def big(v: Any) = v match {
-                  case x: java.lang.Long => BigDecimal(x.longValue)
-                  case x: java.lang.Double => BigDecimal(x.doubleValue)
-                }
-                big(l) > big(h)
-            }
-            require(!inverted, s"bbox ${dims(a)} bounds are inverted: $l > $h")
-          }
-          lo.foreach(v => out += FGe(dims(a), v))
-          hi.foreach(v => out += FLe(dims(a), v))
-          a += 1
+        cols.zipWithIndex.foreach { case (c, a) =>
+          val lo = bound(parts(2 * a), "lower", c)
+          val hi = bound(parts(2 * a + 1), "upper", c)
+          for (l <- lo; h <- hi)
+            require(big(l) <= big(h), s"$name $c bounds are inverted: $l > $h")
+          lo.foreach(v => out += FGe(c, v))
+          hi.foreach(v => out += FLe(c, v))
         }
         val fs = out.result()
+        require(fs.nonEmpty, s"$name '$raw' binds nothing; drop the option instead")
         fs.foreach { f =>
           require(RecordPredicate.pushable(f, tableSchema),
-            s"bbox bound $f is not evaluable against this table's schema " +
-              "(x/y/z must exist as numeric primitive columns)")
+            s"$name bound $f is not evaluable against this table's schema " +
+              s"(${cols.mkString("/")} must exist as numeric primitive columns)")
         }
         fs
     }
 }
 
-/** Explicit TEMPORAL subscription: the `timerange` read option,
-  * `"lo,hi"` in the exposed `time` (gpstime) domain, `*` for an
-  * unbounded side — the temporal twin of [[BboxOption]] and, like it,
-  * THE pushdown channel for streaming reads (Spark never pushes
-  * predicates into a micro-batch source; a batch `WHERE time BETWEEN`
-  * gets the same planning effects automatically — pc31). The declared
-  * range is EXACT at the record level (same [[RecordPredicate]] path),
-  * and at planning it drives the COPC gps-range whole-file skip
-  * ([[SectionSkip]] reading `LazInfo.gpsRange`). Rejected when the
-  * table has no pushable `time` column — a silently over-delivering
-  * subscription is worse than an error (the bbox precedent). */
-private[graft] object TimeRangeOption {
-  def filters(kind: FormatKind, tableSchema: StructType,
-      options: CaseInsensitiveStringMap): Array[SourceFilter] =
-    Option(options.get("timerange")) match {
-      case None => Array.empty
-      case Some(raw) =>
-        require(kind != FormatKind.Xyz,
-          "timerange is not supported for xyz sources: text records have " +
-            "no reader-side predicate surface, so the declared range could " +
-            "not be honored exactly")
-        val parts = raw.split(",", -1).map(_.trim)
-        require(parts.length == 2,
-          s"timerange must be 'lo,hi' (gpstime domain, '*' for an " +
-            s"unbounded side), got '$raw'")
-        def bound(tok: String, side: String): Option[Double] =
-          if (tok == "*") None
-          else {
-            val d = try tok.toDouble catch {
-              case _: NumberFormatException =>
-                throw new IllegalArgumentException(
-                  s"timerange $side bound is not a number: '$tok'")
-            }
-            // NaN parses but never compares true — a subscription that
-            // silently matches nothing must be an error
-            require(java.lang.Double.isFinite(d),
-              s"timerange $side bound is not finite: '$tok'")
-            Some(d)
-          }
-        val lo = bound(parts(0), "lower")
-        val hi = bound(parts(1), "upper")
-        require(lo.nonEmpty || hi.nonEmpty,
-          s"timerange '$raw' binds nothing; drop the option instead")
-        for (l <- lo; h <- hi)
-          require(l <= h, s"timerange bounds are inverted: $l > $h")
-        val fs: Array[SourceFilter] =
-          (lo.map(v => FGe("time", java.lang.Double.valueOf(v))).toSeq ++
-            hi.map(v => FLe("time", java.lang.Double.valueOf(v)))).toArray
-        fs.foreach { f =>
-          require(RecordPredicate.pushable(f, tableSchema),
-            s"timerange bound $f is not evaluable against this table's " +
-              "schema (a numeric 'time' column must exist)")
-        }
-        fs
-    }
-}
-
-/** Chunk-level spatial pruning over a COPC file's octree bounds: the
-  * planner drops whole LAZ chunks whose node cube cannot intersect the
-  * pushed x/y/z box — row-group-stats pruning for point clouds, decided
-  * on the driver before any split is cut. One level below
-  * [[SectionSkip]] (whole-file skip on header bounds), one level above
-  * [[RecordPredicate]] (exact per-record evaluation on decoded bytes);
-  * all three see the same pushed conjuncts, so a chunk survives pruning
-  * iff its bounds admit at least one possibly-matching record. */
+/** Chunk-level pruning over a COPC file's octree: the planner drops
+  * whole LAZ chunks whose node bounds cannot hold a matching record —
+  * row-group-stats pruning for point clouds, decided on the driver
+  * before any split is cut. One level below the file skip, one level
+  * above [[RecordPredicate]] (exact per-record evaluation on decoded
+  * bytes); both skip levels ask [[SectionSkip.mayMatch]], so a chunk
+  * survives iff its bounds admit at least one possibly-matching
+  * record. */
 private[graft] object CopcPrune {
 
-  /** Per-dim raw intervals [xlo,xhi,ylo,yhi,zlo,zhi] implied by the
-    * pushed conjuncts, or null when no x/y/z bound exists. Only
-    * top-level conjuncts (and nested Ands) narrow; Or and non-numeric
-    * shapes are ignored — conservative by construction. */
-  def queryBox(filters: Array[SourceFilter]): Array[Long] = {
-    val box = Array(Long.MinValue, Long.MaxValue, Long.MinValue, Long.MaxValue,
-      Long.MinValue, Long.MaxValue)
-    var any = false
-    def dim(c: String): Int = c match {
-      case "x" => 0; case "y" => 1; case "z" => 2; case _ => -1
-    }
-    def num(v: Any): Option[Long] = v match {
-      case n: java.lang.Integer => Some(n.longValue)
-      case n: java.lang.Long => Some(n.longValue)
-      case n: java.lang.Short => Some(n.longValue)
-      case n: java.lang.Byte => Some(n.longValue)
-      case _ => None
-    }
-    def lo(d: Int, v: Long): Unit = { box(2 * d) = math.max(box(2 * d), v); any = true }
-    def hi(d: Int, v: Long): Unit = { box(2 * d + 1) = math.min(box(2 * d + 1), v); any = true }
-    def one(f: SourceFilter): Unit = f match {
-      case FGt(c, v) if dim(c) >= 0 => num(v).foreach(x => lo(dim(c), x + 1))
-      case FGe(c, v) if dim(c) >= 0 => num(v).foreach(x => lo(dim(c), x))
-      case FLt(c, v) if dim(c) >= 0 => num(v).foreach(x => hi(dim(c), x - 1))
-      case FLe(c, v) if dim(c) >= 0 => num(v).foreach(x => hi(dim(c), x))
-      case FEq(c, v) if dim(c) >= 0 => num(v).foreach { x => lo(dim(c), x); hi(dim(c), x) }
-      case FIn(c, vs) if dim(c) >= 0 && vs.nonEmpty =>
-        val xs = vs.flatMap(num(_))
-        if (xs.length == vs.length) { lo(dim(c), xs.min); hi(dim(c), xs.max) }
-      case FAnd(l, r) => one(l); one(r)
-      case _ => // Or / unknown: no narrowing
-    }
-    filters.foreach(one)
-    if (any) box else null
-  }
-
-  /** Keep mask over `lz`'s chunks, or null when pruning cannot apply
-    * (no bounds in the file, or no x/y/z constraint in the query).
-    * Chunks without bounds are always kept. */
-  def keepMask(lz: graft.pointcloud.las.laz.LazInfo,
-      filters: Array[SourceFilter]): Array[Boolean] = {
-    if (lz.chunkRawBounds == null) return null
-    val box = queryBox(filters)
-    if (box == null) return null
-    Array.tabulate(lz.numChunks) { i =>
-      val b = lz.chunkRawBounds(i)
-      b == null ||
-        (b(1) >= box(0) && b(0) <= box(1) &&
-          b(3) >= box(2) && b(2) <= box(3) &&
-          b(5) >= box(4) && b(4) <= box(5))
-    }
-  }
-
-  /** [[keepMask]] combined with the `copc.maxlevel` coarse-preview
-    * bound (−1 = unset): over an LOD layout, keep only chunks whose
-    * octree node sits at level ≤ maxLevel. Unlike the bbox mask this
-    * CHANGES the result set (a declared approximate read), so it is
-    * only ever driven by the explicit read option. Chunks without a
-    * hierarchy entry (level −1) are kept — the option bounds octree
-    * NODES, and data outside the octree contract must not silently
-    * vanish. */
+  /** Keep mask over `lz`'s chunks, or null when nothing prunes (no
+    * bounds in the file or no filters, and no preview bound). A chunk is
+    * kept when [[SectionSkip.mayMatch]] admits `filters` over its raw
+    * x/y/z bounds (a chunk without bounds is kept) and, under a
+    * `copc.maxlevel` preview (`maxLevel` ≥ 0), its octree node sits at
+    * level ≤ maxLevel. Unlike the filters the level bound CHANGES the
+    * result set (a declared approximate read), so it is only ever driven
+    * by the explicit read option. Chunks without a hierarchy entry
+    * (level −1) are kept — the option bounds octree NODES, and data
+    * outside the octree contract must not silently vanish. */
   def keepMask(lz: graft.pointcloud.las.laz.LazInfo,
       filters: Array[SourceFilter], maxLevel: Int): Array[Boolean] = {
-    val boxKeep = keepMask(lz, filters)
-    if (maxLevel < 0 || lz.chunkLevels == null) return boxKeep
+    val bounded = lz.chunkRawBounds != null && filters.nonEmpty
+    val leveled = maxLevel >= 0 && lz.chunkLevels != null
+    if (!bounded && !leveled) return null
     Array.tabulate(lz.numChunks) { i =>
-      (boxKeep == null || boxKeep(i)) &&
-        (lz.chunkLevels(i) < 0 || lz.chunkLevels(i) <= maxLevel)
+      (!leveled || lz.chunkLevels(i) < 0 || lz.chunkLevels(i) <= maxLevel) &&
+        (!bounded || lz.chunkRawBounds(i) == null ||
+          SectionSkip.mayMatch(chunkRange(lz.chunkRawBounds(i)), filters))
     }
+  }
+
+  /** A chunk's raw `[xlo,xhi,ylo,yhi,zlo,zhi]` node bounds as a range. */
+  private def chunkRange(b: Array[Long]): SectionSkip.Range = {
+    case "x" => Some((b(0).toDouble, b(1).toDouble))
+    case "y" => Some((b(2).toDouble, b(3).toDouble))
+    case "z" => Some((b(4).toDouble, b(5).toDouble))
+    case _ => None
   }
 
   /** The `copc.maxlevel` read option (−1 when absent): the LOD
     * preview's declared depth bound. */
   def maxLevelOption(options: CaseInsensitiveStringMap): Int =
-    Option(options.get("copc.maxlevel")) match {
+    PointCloudUtil.intOption(k => Option(options.get(k)), "copc.maxLevel") match {
       case None => -1
-      case Some(s) =>
-        val v = try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"copc.maxLevel '$s' is not an integer")
-        }
+      case Some(v) =>
         require(v >= 0, s"copc.maxLevel must be >= 0, got $v")
         v
     }
 
   /** The one rule for a declared `copc.maxlevel` preview, checked by the
     * batch scan and the stream alike: a section with records but no COPC
-    * octree index cannot honor it, and the read fails (the [[BboxOption]]
+    * octree index cannot honor it, and the read fails (the [[SubscriptionOption]]
     * precedent: a silently over-delivering subscription, the FULL corpus
     * where ~1/8 was declared, is worse than an error). A zero-record
     * section honors any preview trivially (empty task files are normal

@@ -76,20 +76,21 @@ class PointCloudMicroBatchStream(
       * (pushedFilters is EMPTY there), but COPC chunk skipping may use
       * every conjunct conservatively since Spark re-evaluates residuals
       * exactly on whatever still decodes. */
-    planFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    planFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
+    /** The `copc.maxlevel` preview bound (−1 = unset), parsed by the scan
+      * builder: a malformed or un-honorable declaration must fail the
+      * query at start, not be swallowed by the per-file skip-unreadable
+      * catch below (which would run the stream forever delivering zero
+      * rows). */
+    copcMaxLevel: Int = -1)
   extends MicroBatchStream with SupportsTriggerAvailableNow with Logging {
 
   import PointCloudMicroBatchStream.FileListOffset
 
-  /** `copc.maxlevel`, parsed once at stream CONSTRUCTION: a malformed
-    * or un-honorable declaration must fail the query at start, not be
-    * swallowed by the per-file skip-unreadable catch below (which would
-    * run the stream forever delivering zero rows). */
-  private val copcMaxLevel: Int = CopcPrune.maxLevelOption(options)
   require(copcMaxLevel < 0 || kind == FormatKind.Las,
     s"copc.maxLevel is only honorable on COPC .laz sources, not ${kind.name}")
 
-  // NOTE on the `bbox` read option ([[BboxOption]]): it is THE pushdown
+  // NOTE on the `bbox` read option ([[SubscriptionOption]]): it is THE pushdown
   // channel for streaming reads — Spark never calls pushFilters for a
   // micro-batch source, so WHERE-derived filters never reach here. The
   // option's synthesized filters arrive through the normal parameters
@@ -126,15 +127,18 @@ class PointCloudMicroBatchStream(
   private val pendingSections =
     scala.collection.mutable.HashMap.empty[String, Seq[FileSection]]
 
+  private def intOption(name: String): Option[Int] =
+    PointCloudUtil.intOption(k => Option(options.get(k)), name)
+
   private val maxFilesPerTrigger: Option[Int] = {
-    val v = Option(options.get("maxfilespertrigger")).map(_.toInt)
+    val v = intOption("maxFilesPerTrigger")
     // 0 would admit nothing forever while the stream reports healthy
     require(v.forall(_ > 0), s"maxFilesPerTrigger must be positive, got ${v.get}")
     v
   }
 
   private val compactThreshold: Option[Int] = {
-    val v = Option(options.get("compactfilelistthreshold")).map(_.toInt)
+    val v = intOption("compactFileListThreshold")
     require(v.forall(_ > 0), s"compactFileListThreshold must be positive, got ${v.get}")
     v
   }
@@ -267,7 +271,7 @@ class PointCloudMicroBatchStream(
         val kept = fileSections
           .map(fs => SectionWithFid(fs.section, fid, fs.lasStats, fs.laz))
           .filter(sf => kind == FormatKind.Xyz || planFilters.isEmpty ||
-            SectionSkip.mayMatch(sf, planFilters))
+            SectionSkip.mayMatch(SectionSkip.sectionRange(sf), planFilters))
         // a declared preview over a file without a COPC octree index must
         // FAIL the stream — thrown as the marker the catch below re-throws
         // past the skip-unreadable path

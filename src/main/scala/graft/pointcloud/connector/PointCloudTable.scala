@@ -322,6 +322,20 @@ object PointCloudUtil {
       dataSchema.fields)
   }
 
+  /** Option `name` as an integer, when set. `lookup` is asked for the
+    * lower-cased name (the connector's option maps fold keys that way);
+    * a malformed value fails naming the option. */
+  def intOption(lookup: String => Option[String], name: String): Option[Int] =
+    lookup(name.toLowerCase(java.util.Locale.ROOT)).map(intValue(name, _))
+
+  /** `s` as an integer; a malformed value fails naming `name`, where the
+    * value came from. */
+  def intValue(name: String, s: String): Int =
+    try s.trim.toInt catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"$name '$s' is not an integer")
+    }
+
   /** Schema smuggled through options by the write/read sugar (DSv2's
     * path-based write calls inferSchema on a possibly-empty target). */
   def writeSchema(options: CaseInsensitiveStringMap): Option[StructType] =

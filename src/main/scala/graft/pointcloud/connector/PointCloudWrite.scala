@@ -155,14 +155,7 @@ case class PointCloudStreamingWriterFactory(
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     val tok = PointCloudStreamingWrite.queryToken(queryId)
     val base = Some(f"epoch-$epochId-q$tok-part-$partitionId%05d-$taskId")
-    kind match {
-      case FormatKind.Las =>
-        new LasDataWriter(path, schema, options, queryId, partitionId, taskId, base)
-      case FormatKind.Ply =>
-        new PlyDataWriter(path, schema, options, queryId, partitionId, taskId, base)
-      case FormatKind.Xyz =>
-        new XyzDataWriter(path, schema, options, queryId, partitionId, taskId, base)
-    }
+    WriterUtil.dataWriter(kind, path, schema, options, queryId, partitionId, taskId, base)
   }
 }
 
@@ -250,14 +243,8 @@ case class PointCloudWriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    def plain(base: Option[String]): DataWriter[InternalRow] = kind match {
-      case FormatKind.Las =>
-        new LasDataWriter(path, schema, options, queryId, partitionId, taskId, base)
-      case FormatKind.Ply =>
-        new PlyDataWriter(path, schema, options, queryId, partitionId, taskId, base)
-      case FormatKind.Xyz =>
-        new XyzDataWriter(path, schema, options, queryId, partitionId, taskId, base)
-    }
+    def plain(base: Option[String]): DataWriter[InternalRow] =
+      WriterUtil.dataWriter(kind, path, schema, options, queryId, partitionId, taskId, base)
     options.get("keycolumn") match {
       case Some(kc) =>
         require(!options.get("merge").contains("true"),
@@ -276,6 +263,18 @@ case class XyzPartMessage(path: String, count: Long) extends WriterCommitMessage
 case class KeyedPartsMessage(parts: Seq[WriterCommitMessage]) extends WriterCommitMessage
 
 private[pointcloud] object WriterUtil {
+  /** The `kind` task writer, for the batch and the streaming factory. */
+  def dataWriter(kind: FormatKind, path: String, schema: StructType,
+      options: Map[String, String], queryId: String, partitionId: Int, taskId: Long,
+      base: Option[String]): DataWriter[InternalRow] = kind match {
+    case FormatKind.Las =>
+      new LasDataWriter(path, schema, options, queryId, partitionId, taskId, base)
+    case FormatKind.Ply =>
+      new PlyDataWriter(path, schema, options, queryId, partitionId, taskId, base)
+    case FormatKind.Xyz =>
+      new XyzDataWriter(path, schema, options, queryId, partitionId, taskId, base)
+  }
+
   /** Shared `scale`/`offset` option parsing (one value broadcasts to
     * all three axes; short lists pad with the default). The COPC cube
     * derivation (`syntax.writeCopc`) MUST interpret these exactly as
@@ -290,6 +289,17 @@ private[pointcloud] object WriterUtil {
         if (parts.length == 1) Array.fill(3)(parts(0))
         else parts.take(3).padTo(3, default)
       case None => Array.fill(3)(default)
+    }
+
+  /** The `copc.level` option (the octree leaf level), when set: an
+    * integer in 0..[[graft.pointcloud.las.laz.Copc.MaxLevel]]. Shared by
+    * the writer and `syntax.writeCopc`, which derives its voxel sort from
+    * the same level. */
+  def copcLevel(lookup: String => Option[String]): Option[Int] =
+    PointCloudUtil.intOption(lookup, "copc.level").map { l =>
+      require(l >= 0 && l <= graft.pointcloud.las.laz.Copc.MaxLevel,
+        s"copc.level must be in 0..${graft.pointcloud.las.laz.Copc.MaxLevel}, got $l")
+      l
     }
 
   /** Default task-file base name. Append-mode jobs (the `__append`
@@ -414,8 +424,14 @@ class LasDataWriter(
 
   private val dataSchema = WriterUtil.dataFields(inputSchema, options)
 
-  private val format: Byte = options.get("lasformat").map(_.toByte)
-    .getOrElse(LasHeader.formatFromSchema(StructType(dataSchema.fields.filter(f =>
+  private def intOption(name: String): Option[Int] =
+    PointCloudUtil.intOption(options.get, name)
+
+  private val format: Byte = intOption("lasFormat").map { f =>
+    require(f >= 0 && f < LasHeader.schema.length,
+      s"lasFormat must be a LAS point format 0..${LasHeader.schema.length - 1}, got $f")
+    f.toByte
+  }.getOrElse(LasHeader.formatFromSchema(StructType(dataSchema.fields.filter(f =>
       LasHeader.schema.exists(_.fields.exists(g =>
         g.name == f.name && g.dataType == f.dataType))))))
 
@@ -477,19 +493,10 @@ class LasDataWriter(
     if (!compressLaz) Array.empty
     else options.get("laz.chunkplan") match {
       case Some(plan) =>
-        // require-style diagnostics, matching every other malformed-option
-        // case around this: a bare NumberFormatException with no option
-        // context would be unattributable in a driver log
         val entries = plan.split(',').map(_.trim)
         require(entries.nonEmpty && entries.forall(_.nonEmpty),
           s"laz.chunkPlan must be comma-separated point counts, got '$plan'")
-        entries.map { e =>
-          try e.toInt
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"laz.chunkPlan entry '$e' is not an integer (plan '$plan')")
-          }
-        }
+        entries.map(PointCloudUtil.intValue("laz.chunkPlan entry", _))
       case None => Array.empty
     }
   // `copc.cube` (= "cx,cy,cz,halfsize", the octree cube in WORLD
@@ -519,18 +526,7 @@ class LasDataWriter(
     }
   private val copc = copcCube != null
   private val copcLevel: Int =
-    if (!copc) 0
-    else {
-      val l = options.get("copc.level").map { s =>
-        try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"copc.level '$s' is not an integer")
-        }
-      }.getOrElse(0)
-      require(l >= 0 && l <= graft.pointcloud.las.laz.Copc.MaxLevel,
-        s"copc.level must be in 0..${graft.pointcloud.las.laz.Copc.MaxLevel}, got $l")
-      l
-    }
+    if (!copc) 0 else WriterUtil.copcLevel(options.get).getOrElse(0)
   // `copc.lod = true`: distribute points across octree LEVELS 0..copcLevel
   // by the deterministic hash of the raw coordinates (Copc.lodHash /
   // lodLevel) — the published-COPC shape where coarse levels hold a
@@ -547,12 +543,8 @@ class LasDataWriter(
   private val copcPageEntries: Int =
     if (!copc) 0
     else {
-      val pe = options.get("copc.pageentries").map { s =>
-        try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"copc.pageEntries '$s' is not an integer")
-        }
-      }.getOrElse(graft.pointcloud.las.laz.Copc.MaxEntries)
+      val pe = intOption("copc.pageEntries")
+        .getOrElse(graft.pointcloud.las.laz.Copc.MaxEntries)
       require(pe > 0, s"copc.pageEntries must be positive, got $pe")
       pe
     }
@@ -568,18 +560,12 @@ class LasDataWriter(
   private val lazChunkSize: Int =
     if (!compressLaz) 0
     else if (copc) {
-      val cap = options.get("copc.chunkcap").map { s =>
-        try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"copc.chunkCap '$s' is not an integer")
-        }
-      }.getOrElse(1 << 16)
+      val cap = intOption("copc.chunkCap").getOrElse(1 << 16)
       require(cap > 0, s"copc.chunkCap must be positive, got $cap")
       cap
     }
     else if (lazVariable) lazChunkPlan.max
-    else options.get("laz.chunksize").map(_.toInt)
-      .getOrElse(graft.pointcloud.las.laz.Laz.DefaultChunkSize)
+    else intOption("laz.chunkSize").getOrElse(graft.pointcloud.las.laz.Laz.DefaultChunkSize)
   if (compressLaz) {
     require(lazVariable || lazChunkSize > 0,
       s"laz.chunkSize must be positive, got $lazChunkSize")
@@ -618,16 +604,11 @@ class LasDataWriter(
     if (!copcSplittable) 0
     else {
       require(lazChunkSize > 0, s"chunk cap must be set before the overflow bound")
-      val ob = options.get("copc.overflowbuffer").map { s =>
-        try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"copc.overflowBuffer '$s' is not an integer")
-        }
       // the default must never fall below the cap itself: chunkcap may
       // legally reach 2^24, and a sub-cap default would abort the write
       // with a message about an option the user never set — the
       // require below exists to reject an EXPLICITLY too-small option
-      }.getOrElse(math.max(lazChunkSize.toLong,
+      val ob = intOption("copc.overflowBuffer").getOrElse(math.max(lazChunkSize.toLong,
         math.min(8L * lazChunkSize, 1L << 22)).toInt)
       require(ob >= lazChunkSize,
         s"copc.overflowBuffer must be >= the chunk cap $lazChunkSize, got $ob")
@@ -709,7 +690,6 @@ class LasDataWriter(
   private val copcSideAt: Array[Double] =
     if (copc) Array.tabulate(copcLevel + 1)(l => 2.0 * copcCube(3) / (1 << l))
     else null
-  private val copcSide: Double = if (copc) copcSideAt(copcLevel) else 0.0
   private val copcMin: Array[Double] =
     if (copc) Array.tabulate(3)(a => copcCube(a) - copcCube(3)) else null
   // boundary tolerance: fp assembly of the cube from a bbox pass can
@@ -1120,10 +1100,8 @@ class LasDataWriter(
     // chunk table serialized once: its length feeds the COPC EVLR offset
     val tableBytes: Array[Byte] =
       if (!compressLaz) Array.empty
-      else if (lazVariable)
-        graft.pointcloud.las.laz.Laz.chunkTableVariable(
-          chunkPointCounts.toSeq, chunkByteCounts.toSeq)
-      else graft.pointcloud.las.laz.Laz.chunkTable(chunkByteCounts.toSeq)
+      else graft.pointcloud.las.laz.LazFile.chunkTableBytes(chunkByteCounts.toSeq,
+        if (lazVariable) Some(chunkPointCounts.toSeq) else None)
     // COPC: info VLR leads the VLR block (published layout); the octree
     // hierarchy rides as one root EVLR page after the chunk table. All
     // offsets are absolute, so the fixed info-VLR length (54+160) lets

@@ -140,32 +140,29 @@ object Laz {
     // chunk count — handed to the parser so a corrupt table's declared
     // u32 count is rejected BEFORE the entry arrays are allocated
     val dataBytes = tableOffset - (header.pdrOffset.toLong + 8)
-    val (counts, points) =
-      if (variable) {
-        val (pts, bts) = LazFile.parseChunkTableVariable(tableBytes,
-          math.min(header.pdrCount, dataBytes))
+    lazy val needChunks =
+      if (header.pdrCount == 0) 0L
+      else (header.pdrCount - 1) / vlr.chunkSize + 1
+    val (counts, tablePoints) = LazFile.parseChunkTable(tableBytes,
+      math.min(if (variable) header.pdrCount else needChunks, dataBytes), variable)
+    val points = tablePoints match {
+      case Some(pts) =>
         pts.foreach(p => require(p > 0 && p <= (1 << 24),
           s"${header.location}: variable chunk of $p points exceeds the " +
             s"${1 << 24}-point reader bound"))
         require(pts.sum == header.pdrCount,
           s"${header.location}: variable chunk table counts ${pts.sum} points " +
             s"but the header declares ${header.pdrCount}")
-        (bts, pts)
-      } else {
-        val needChunks =
-          if (header.pdrCount == 0) 0L
-          else (header.pdrCount - 1) / vlr.chunkSize + 1
-        val bts = LazFile.parseChunkTable(tableBytes,
-          math.min(needChunks, dataBytes))
-        require(bts.length == needChunks,
-          s"${header.location}: ${bts.length} chunks for ${header.pdrCount} points " +
+        pts
+      case None =>
+        require(counts.length == needChunks,
+          s"${header.location}: ${counts.length} chunks for ${header.pdrCount} points " +
             s"at chunk size ${vlr.chunkSize} (expected $needChunks)")
-        val pts = Array.tabulate(bts.length) { i =>
-          if (i < bts.length - 1) vlr.chunkSize.toLong
-          else math.max(0L, header.pdrCount - vlr.chunkSize.toLong * (bts.length - 1))
+        Array.tabulate(counts.length) { i =>
+          if (i < counts.length - 1) vlr.chunkSize.toLong
+          else math.max(0L, header.pdrCount - vlr.chunkSize.toLong * (counts.length - 1))
         }
-        (bts, pts)
-      }
+    }
     counts.foreach(c => require(c > 0 && c <= Int.MaxValue - 8,
       s"${header.location}: chunk of $c compressed bytes outside the reader bound"))
     // decoded-buffer product bound (the ADVICE r13 gap): decodeChunk
@@ -205,16 +202,6 @@ object Laz {
     LazFile.vlrRecord(LazFile.vlrPayload(
       LazFile.LazVlr(LazFile.compressorFor(format), 0, chunkSize,
         LazFile.itemsFor(format, extraBytes))))
-
-  /** Serialized chunk table (written after the last chunk). */
-  def chunkTable(chunkByteCounts: Seq[Long]): Array[Byte] =
-    LazFile.chunkTableBytes(chunkByteCounts)
-
-  /** Serialized VARIABLE chunk table (VLR chunk size −1): per-chunk
-    * point counts interleaved with byte counts. */
-  def chunkTableVariable(pointCounts: Seq[Long],
-      byteCounts: Seq[Long]): Array[Byte] =
-    LazFile.chunkTableBytesVariable(pointCounts, byteCounts)
 
   /** The VLR chunk-size sentinel declaring variable chunking. */
   final val VariableChunkSize: Int = -1

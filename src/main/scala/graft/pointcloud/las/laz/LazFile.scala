@@ -14,7 +14,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * chunk is the independent split unit a record-aligned planner can
   * hand an executor.
   */
-private[las] object LazFile {
+private[graft] object LazFile {
 
   final val VlrUserId = "laszip encoded"
   final val VlrRecordId = 22204
@@ -198,15 +198,31 @@ private[las] object LazFile {
   /** Chunk table payload: u32 version (0), u32 chunk count, then the
     * per-chunk compressed byte counts delta-coded through an
     * [[IntegerCompressor]] (32 bits, 2 contexts, context 1, previous
-    * count as predictor — the published layout). */
-  def chunkTableBytes(chunkByteCounts: Seq[Long]): Array[Byte] = {
+    * count as predictor — the published layout). With `pointCounts`
+    * (VARIABLE chunking, VLR chunk size −1) each entry first codes the
+    * chunk's point count (context 0, previous count as predictor) — the
+    * published layout for spatially-indexed `.laz`, where chunk
+    * boundaries follow the data rather than a fixed stride. */
+  def chunkTableBytes(chunkByteCounts: Seq[Long],
+      pointCounts: Option[Seq[Long]] = None): Array[Byte] = {
+    pointCounts.foreach(pts => require(pts.length == chunkByteCounts.length,
+      s"${pts.length} point counts for ${chunkByteCounts.length} chunks"))
     val enc = new ArithmeticEncoder
     val ic = new IntegerCompressor(32, 2)
-    var prev = 0
-    chunkByteCounts.foreach { c =>
-      require(c <= Int.MaxValue, s"chunk of $c bytes exceeds the format's u32 count")
-      ic.compress(enc, prev, c.toInt, 1)
-      prev = c.toInt
+    val points = pointCounts.map(_.iterator)
+    var prevP = 0
+    var prevB = 0
+    chunkByteCounts.foreach { b =>
+      points.foreach { it =>
+        val p = it.next()
+        require(p > 0 && p <= Int.MaxValue,
+          s"chunk of $p points outside the format's u32 count")
+        ic.compress(enc, prevP, p.toInt, 0)
+        prevP = p.toInt
+      }
+      require(b <= Int.MaxValue, s"chunk of $b bytes exceeds the format's u32 count")
+      ic.compress(enc, prevB, b.toInt, 1)
+      prevB = b.toInt
     }
     enc.done()
     val coded = enc.result()
@@ -218,14 +234,16 @@ private[las] object LazFile {
     out
   }
 
-  /** Parse a chunk table payload → per-chunk compressed byte counts.
-    * `maxChunks` is the caller's independent bound on how many chunks the
-    * file can plausibly hold (each chunk carries ≥1 point and ≥1
-    * compressed byte, so the header's point count and the chunk-region
-    * byte length both bound it) — the declared u32 count is validated
-    * against it BEFORE the entry arrays are allocated, so a corrupt
-    * table cannot force a multi-gigabyte driver allocation. */
-  def parseChunkTable(bytes: Array[Byte], maxChunks: Long): Array[Long] = {
+  /** Parse a chunk table payload → (per-chunk compressed byte counts,
+    * per-chunk point counts when `variable`). `maxChunks` is the caller's
+    * independent bound on how many chunks the file can plausibly hold
+    * (each chunk carries ≥1 point and ≥1 compressed byte, so the header's
+    * point count and the chunk-region byte length both bound it) — the
+    * declared u32 count is validated against it BEFORE the entry arrays
+    * are allocated, so a corrupt table cannot force a multi-gigabyte
+    * driver allocation. */
+  def parseChunkTable(bytes: Array[Byte], maxChunks: Long,
+      variable: Boolean = false): (Array[Long], Option[Array[Long]]) = {
     require(bytes.length >= 8, s"chunk table too short: ${bytes.length} bytes")
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val version = buf.getInt(0)
@@ -236,76 +254,20 @@ private[las] object LazFile {
     val dec = new ArithmeticDecoder(bytes, 8, bytes.length)
     val ic = new IntegerCompressor(32, 2)
     val counts = new Array[Long](n)
-    var prev = 0
-    var i = 0
-    while (i < n) {
-      prev = ic.decompress(dec, prev, 1)
-      counts(i) = prev.toLong & 0xFFFFFFFFL
-      i += 1
-    }
-    counts
-  }
-
-  /** Chunk table payload for VARIABLE chunking (VLR chunk size −1):
-    * same u32 version/count header, but each entry interleaves the
-    * chunk's point count (context 0, previous count as predictor) with
-    * its compressed byte count (context 1) — the published layout for
-    * spatially-indexed `.laz`, where chunk boundaries follow the data
-    * rather than a fixed stride. */
-  def chunkTableBytesVariable(pointCounts: Seq[Long],
-      byteCounts: Seq[Long]): Array[Byte] = {
-    require(pointCounts.length == byteCounts.length,
-      s"${pointCounts.length} point counts for ${byteCounts.length} chunks")
-    val enc = new ArithmeticEncoder
-    val ic = new IntegerCompressor(32, 2)
-    var prevP = 0
-    var prevB = 0
-    pointCounts.lazyZip(byteCounts).foreach { (p, b) =>
-      require(p > 0 && p <= Int.MaxValue,
-        s"chunk of $p points outside the format's u32 count")
-      require(b <= Int.MaxValue, s"chunk of $b bytes exceeds the format's u32 count")
-      ic.compress(enc, prevP, p.toInt, 0)
-      ic.compress(enc, prevB, b.toInt, 1)
-      prevP = p.toInt
-      prevB = b.toInt
-    }
-    enc.done()
-    val coded = enc.result()
-    val out = new Array[Byte](8 + coded.length)
-    val buf = ByteBuffer.wrap(out).order(ByteOrder.LITTLE_ENDIAN)
-    buf.putInt(0) // version
-    buf.putInt(pointCounts.size)
-    System.arraycopy(coded, 0, out, 8, coded.length)
-    out
-  }
-
-  /** Parse a VARIABLE chunk table payload → (per-chunk point counts,
-    * per-chunk compressed byte counts). `maxChunks` as in
-    * [[parseChunkTable]]: validated before allocation. */
-  def parseChunkTableVariable(bytes: Array[Byte],
-      maxChunks: Long): (Array[Long], Array[Long]) = {
-    require(bytes.length >= 8, s"chunk table too short: ${bytes.length} bytes")
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val version = buf.getInt(0)
-    require(version == 0, s"unsupported chunk table version $version")
-    val n = buf.getInt(4)
-    require(n >= 0 && n <= maxChunks,
-      s"chunk table declares $n chunks, outside the plausible bound $maxChunks")
-    val dec = new ArithmeticDecoder(bytes, 8, bytes.length)
-    val ic = new IntegerCompressor(32, 2)
-    val points = new Array[Long](n)
-    val counts = new Array[Long](n)
+    val points = if (variable) Some(new Array[Long](n)) else None
     var prevP = 0
     var prevB = 0
     var i = 0
     while (i < n) {
-      prevP = ic.decompress(dec, prevP, 0)
+      points.foreach { pts =>
+        prevP = ic.decompress(dec, prevP, 0)
+        pts(i) = prevP.toLong & 0xFFFFFFFFL
+      }
       prevB = ic.decompress(dec, prevB, 1)
-      points(i) = prevP.toLong & 0xFFFFFFFFL
       counts(i) = prevB.toLong & 0xFFFFFFFFL
       i += 1
     }
-    (points, counts)
+    (counts, points)
   }
 
   /** Encode one chunk: raw first point, then coded points; returns the

@@ -335,28 +335,16 @@ object syntax {
       // tolerance; the pad keeps honest data clear of that boundary)
       val half = math.max(
         (0 until 3).map(a => (hi(a) - lo(a)) / 2).max * (1 + 1e-9) + 1e-9, 1e-6)
-      val target = opt("copc.nodepoints").map { s =>
-        try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"copc.nodePoints '$s' is not an integer")
-        }
-      }.getOrElse(16384)
+      val target = connector.PointCloudUtil.intOption(opt, "copc.nodePoints").getOrElse(16384)
       require(target > 0, s"copc.nodePoints must be positive, got $target")
       // an explicit copc.level wins (a caller wanting an oracle- or
       // interop-exact leaf level states it in integer arithmetic);
       // otherwise density-match: the smallest level whose 8^l leaves
       // average <= copc.nodepoints points
-      val level = opt("copc.level") match {
-        case Some(s) =>
-          val l = s.trim.toInt
-          require(l >= 0 && l <= graft.pointcloud.las.laz.Copc.MaxLevel,
-            s"copc.level must be in 0..${graft.pointcloud.las.laz.Copc.MaxLevel}, got $l")
-          l
-        case None =>
-          if (n <= target) 0
-          else math.min(graft.pointcloud.las.laz.Copc.MaxLevel,
-            math.ceil(math.log(n.toDouble / target) / math.log(8)).toInt)
-      }
+      val level = connector.WriterUtil.copcLevel(opt).getOrElse(
+        if (n <= target) 0
+        else math.min(graft.pointcloud.las.laz.Copc.MaxLevel,
+          math.ceil(math.log(n.toDouble / target) / math.log(8)).toInt))
       val nSide = 1 << level
       val side = 2 * half / nSide
       def k(c: String, a: Int) =
@@ -387,12 +375,8 @@ object syntax {
               floor((enc(c).cast("double") * sc(a) + off(a) - (ctr(a) - half)) / sideL)))
           Seq(lvl, kAt("x", 0), kAt("y", 1), kAt("z", 2))
         }
-      val arranged = opt("copc.files") match {
-        case Some(f) =>
-          val nf = try f.trim.toInt catch {
-            case _: NumberFormatException => throw new IllegalArgumentException(
-              s"copc.files '$f' is not an integer")
-          }
+      val arranged = connector.PointCloudUtil.intOption(opt, "copc.files") match {
+        case Some(nf) =>
           require(nf > 0, s"copc.files must be positive, got $nf")
           df.repartitionByRange(nf, key).sortWithinPartitions(sortCols: _*)
         case None => df.sortWithinPartitions(sortCols: _*)
@@ -446,7 +430,5 @@ object syntax {
         options: Map[String, String] = Map.empty): Unit = writeKeyed("las", path, keyCol, options)
     def writePlyKeyed(path: String, keyCol: String,
         options: Map[String, String] = Map.empty): Unit = writeKeyed("ply", path, keyCol, options)
-    def writeXyzKeyed(path: String, keyCol: String,
-        options: Map[String, String] = Map.empty): Unit = writeKeyed("xyz", path, keyCol, options)
   }
 }

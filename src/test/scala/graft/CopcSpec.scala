@@ -6,7 +6,7 @@ import graft.pointcloud.syntax._
 import graft.pointcloud.connector.{CopcPrune, LazPlanning}
 import graft.pointcloud.las.laz.{Copc, Laz}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{And, GreaterThanOrEqual, LessThanOrEqual}
+import org.apache.spark.sql.sources.{And, EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Or}
 
 /** COPC (cloud-optimized point cloud) tests: the octree-chunked writer,
   * the hierarchy round trip, and — the point of the format — CHUNK-LEVEL
@@ -92,7 +92,7 @@ class CopcSpec extends SparkTestBase {
     // x in [20000, 40000] — a 20% slice of the x range
     val filters: Array[org.apache.spark.sql.sources.Filter] = Array(
       And(GreaterThanOrEqual("x", 20000), LessThanOrEqual("x", 40000)))
-    val keep = CopcPrune.keepMask(info, filters)
+    val keep = CopcPrune.keepMask(info, filters, -1)
     assert(keep != null)
     assert(keep.exists(k => !k), "bbox must prune at least one chunk")
     assert(keep.exists(identity), "bbox must keep at least one chunk")
@@ -128,19 +128,127 @@ class CopcSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
-  test("queryBox narrows only over x/y/z conjuncts and stays conservative") {
-    val box = CopcPrune.queryBox(Array(
-      GreaterThanOrEqual("x", 10), LessThanOrEqual("x", 99),
-      org.apache.spark.sql.sources.EqualTo("z", 5),
-      org.apache.spark.sql.sources.GreaterThan("intensity", 3)))
-    assert(box != null)
-    assert(box(0) == 10L && box(1) == 99L)
-    assert(box(2) == Long.MinValue && box(3) == Long.MaxValue)
-    assert(box(4) == 5L && box(5) == 5L)
-    // Or cannot narrow; intensity alone gives no spatial bound
-    assert(CopcPrune.queryBox(Array(
-      org.apache.spark.sql.sources.Or(
-        GreaterThanOrEqual("x", 10), LessThanOrEqual("y", 5)))) == null)
+  test("keepMask narrows over x/y/z conjuncts, Or and In, and stays conservative") {
+    val dir = tmpDir("copc-mask")
+    fmt6Points(40000).coalesce(1)
+      .writeCopc(dir, Map("scale" -> "0.01", "copc.nodepoints" -> "2048"))
+    val (_, info, _) = lazInfoOf(dir)
+    val bounds = info.chunkRawBounds
+    def overlaps(i: Int, a: Int, lo: Long, hi: Long) =
+      bounds(i)(2 * a + 1) >= lo && bounds(i)(2 * a) <= hi
+    // conjuncts: x in [10000, 29999] and z == 5; intensity bounds no chunk
+    val conj = CopcPrune.keepMask(info, Array(
+      GreaterThanOrEqual("x", 10000), LessThanOrEqual("x", 29999),
+      EqualTo("z", 5), GreaterThan("intensity", 3)), -1)
+    assert(conj.toSeq == info.chunkRawBounds.indices.map(i =>
+      overlaps(i, 0, 10000, 29999) && overlaps(i, 2, 5, 5)))
+    assert(conj.exists(!_) && conj.exists(identity))
+    // a filter on no bounded column keeps every chunk
+    val none = CopcPrune.keepMask(info, Array(GreaterThan("intensity", 3)), -1)
+    assert(none == null || none.forall(identity))
+    // an Or of two disjoint x slices narrows to the chunks of either
+    // slice (the former box intersection could not narrow an Or)
+    val or = CopcPrune.keepMask(info, Array(Or(
+      LessThan("x", 10000), GreaterThanOrEqual("x", 90000))), -1)
+    assert(or.toSeq == info.chunkRawBounds.indices.map(i =>
+      overlaps(i, 0, Long.MinValue, 9999) || overlaps(i, 0, 90000, Long.MaxValue)))
+    assert(or.exists(!_))
+    // an In narrows to the chunks holding one of its values
+    val in = CopcPrune.keepMask(info, Array(In("x", Array(5, 95000))), -1)
+    assert(in.toSeq == info.chunkRawBounds.indices.map(i =>
+      overlaps(i, 0, 5, 5) || overlaps(i, 0, 95000, 95000)))
+    // a fractional literal bounds the integral column it compares with
+    val frac = CopcPrune.keepMask(info, Array(LessThan("x", 9999.5)), -1)
+    assert(frac.toSeq == info.chunkRawBounds.indices.map(i =>
+      overlaps(i, 0, Long.MinValue, 9999)))
+  }
+
+  test("chunk pruning never drops a matching record under random filter trees") {
+    val dir = tmpDir("copc-gen")
+    fmt6Points(40000).coalesce(1)
+      .writeCopc(dir, Map("scale" -> "0.01", "copc.nodepoints" -> "2048"))
+    val (_, info, _) = lazInfoOf(dir)
+    val cols = Seq("x", "y", "z", "intensity")
+    val unpruned = spark.read.las(dir)
+    // each record with its chunk: its file-absolute index (pid) against
+    // the chunk bases
+    val chunkBase = info.chunkPoints.scanLeft(0L)(_ + _)
+    def chunkOf(pid: Long) = java.util.Arrays.binarySearch(chunkBase, pid) match {
+      case i if i >= 0 => i
+      case i => -i - 2
+    }
+    val byChunk = unpruned.select(($"pid" +: cols.map(col)): _*).collect()
+      .groupBy(r => chunkOf(r.getLong(0)))
+      .map { case (c, rs) => c -> rs.map(r => cols.indices.map(i => r.getAs[Number](i + 1).doubleValue)) }
+    val rnd = new scala.util.Random(7)
+    val spans = Map("x" -> (0, 100000), "y" -> (0, 900), "z" -> (-30, 30),
+      "intensity" -> (0, 4096))
+    def literal(c: String): Any = {
+      val (lo, hi) = spans(c)
+      val v = lo - 10 + rnd.nextInt(hi - lo + 20)
+      if (rnd.nextBoolean()) Integer.valueOf(v) else java.lang.Double.valueOf(v + 0.5)
+    }
+    def leaf(): org.apache.spark.sql.sources.Filter = {
+      val c = cols(rnd.nextInt(cols.size))
+      rnd.nextInt(6) match {
+        case 0 => GreaterThan(c, literal(c)); case 1 => GreaterThanOrEqual(c, literal(c))
+        case 2 => LessThan(c, literal(c)); case 3 => LessThanOrEqual(c, literal(c))
+        case 4 => EqualTo(c, literal(c))
+        case _ => In(c, Array.fill(1 + rnd.nextInt(3))(literal(c)))
+      }
+    }
+    def tree(depth: Int): org.apache.spark.sql.sources.Filter =
+      if (depth == 0 || rnd.nextInt(3) == 0) leaf()
+      else if (rnd.nextBoolean()) And(tree(depth - 1), tree(depth - 1))
+      else Or(tree(depth - 1), tree(depth - 1))
+    def num(v: Any) = v.asInstanceOf[Number].doubleValue
+    def eval(f: org.apache.spark.sql.sources.Filter, rec: IndexedSeq[Double]): Boolean = (f: @unchecked) match {
+      case GreaterThan(c, v) => rec(cols.indexOf(c)) > num(v)
+      case GreaterThanOrEqual(c, v) => rec(cols.indexOf(c)) >= num(v)
+      case LessThan(c, v) => rec(cols.indexOf(c)) < num(v)
+      case LessThanOrEqual(c, v) => rec(cols.indexOf(c)) <= num(v)
+      case EqualTo(c, v) => rec(cols.indexOf(c)) == num(v)
+      case In(c, vs) => vs.exists(v => rec(cols.indexOf(c)) == num(v))
+      case And(l, r) => eval(l, rec) && eval(r, rec)
+      case Or(l, r) => eval(l, rec) || eval(r, rec)
+    }
+    def column(f: org.apache.spark.sql.sources.Filter): org.apache.spark.sql.Column = (f: @unchecked) match {
+      case GreaterThan(c, v) => col(c) > v
+      case GreaterThanOrEqual(c, v) => col(c) >= v
+      case LessThan(c, v) => col(c) < v
+      case LessThanOrEqual(c, v) => col(c) <= v
+      case EqualTo(c, v) => col(c) === v
+      case In(c, vs) => col(c).isin(vs.toIndexedSeq: _*)
+      case And(l, r) => column(l) && column(r)
+      case Or(l, r) => column(l) || column(r)
+    }
+    // the unpruned read, as a relation no pruning reaches
+    val flat = spark.createDataFrame(
+      java.util.Arrays.asList(unpruned.collect(): _*), unpruned.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    var pruning = 0
+    (1 to 200).foreach { i =>
+      val f = tree(3)
+      val keep = CopcPrune.keepMask(info, Array(f), -1)
+      if (keep != null && keep.exists(!_)) pruning += 1
+      if (keep != null) keep.indices.filterNot(keep).foreach { c =>
+        assert(!byChunk(c).exists(eval(f, _)), s"tree $i: $f pruned chunk $c holding a match")
+      }
+      // end to end on a sample: the pruned read equals a filter over the
+      // unpruned read
+      if (i % 20 == 0)
+        assert(rows(spark.read.las(dir).where(column(f))) == rows(flat.where(column(f))),
+          s"tree $i: $f")
+    }
+    assert(pruning >= 20, s"only $pruning of 200 trees pruned a chunk")
+    // an Or of two disjoint x slices plans fewer chunk splits
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    try {
+      val nFull = plannedSplits(spark.read.las(dir)).size
+      val slices = spark.read.las(dir).where($"x" < 10000 || $"x" >= 90000)
+      assert(plannedSplits(slices).size < nFull)
+      assert(rows(slices) == rows(flat.where($"x" < 10000 || $"x" >= 90000)))
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("a point outside the declared cube is rejected at write time") {

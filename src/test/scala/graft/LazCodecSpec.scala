@@ -433,7 +433,7 @@ class LazCodecSpec extends AnyFunSuite {
     // golden header fields: u32 version 0, u32 chunk count, little-endian
     assert(table(0) == 0 && table(1) == 0 && table(2) == 0 && table(3) == 0)
     assert((table(4) & 0xFF) == counts.size && table(5) == 0)
-    assert(LazFile.parseChunkTable(table, counts.length).toSeq == counts)
+    assert(LazFile.parseChunkTable(table, counts.length)._1.toSeq == counts)
 
     val vlr = LazFile.LazVlr(LazFile.CompressorChunked, 0, 50000, LazFile.itemsFor(1))
     val payload = LazFile.vlrPayload(vlr)
@@ -453,15 +453,15 @@ class LazCodecSpec extends AnyFunSuite {
   test("variable chunk table round-trips irregular point/byte counts") {
     val pts = Seq(700L, 1300L, 250L, 1L, 1L << 24)
     val bts = Seq(91234L, 5L, Int.MaxValue.toLong, 1L, 77L)
-    val (gotPts, gotBts) = LazFile.parseChunkTableVariable(
-      LazFile.chunkTableBytesVariable(pts, bts), pts.length)
+    val (gotBts, Some(gotPts)) = LazFile.parseChunkTable(
+      LazFile.chunkTableBytes(bts, Some(pts)), pts.length, variable = true)
     assert(gotPts.toSeq == pts)
     assert(gotBts.toSeq == bts)
     // the declared entry count is validated BEFORE allocation: a bound
     // below it must reject (the corrupt-table multi-GB allocation guard)
     val err = intercept[IllegalArgumentException] {
-      LazFile.parseChunkTableVariable(
-        LazFile.chunkTableBytesVariable(pts, bts), pts.length - 1)
+      LazFile.parseChunkTable(
+        LazFile.chunkTableBytes(bts, Some(pts)), pts.length - 1, variable = true)
     }
     assert(err.getMessage.contains("outside the plausible bound"))
     // a -1 chunk size in the VLR survives the u32 field round trip

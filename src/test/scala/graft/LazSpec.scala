@@ -361,10 +361,10 @@ class LazSpec extends SparkTestBase {
   }
 
   test("variable chunk table round-trips irregular point/byte counts") {
-    import graft.pointcloud.las.laz.Laz
+    import graft.pointcloud.las.laz.LazFile
     val pts = Seq(700L, 1300L, 250L, 1L, 16777216L)
     val bts = Seq(91234L, 5L, Int.MaxValue.toLong, 1L, 77L)
-    val table = Laz.chunkTableVariable(pts, bts)
+    val table = LazFile.chunkTableBytes(bts, Some(pts))
     // resolve-time shape: version 0, chunk count 5 in the uncompressed
     // prefix, then the interleaved IC-coded entries
     val buf = java.nio.ByteBuffer.wrap(table)

@@ -689,6 +689,30 @@ class PointCloudSpec extends SparkTestBase {
     assert(e2.getMessage.contains("major") || e2.getCause.getMessage.contains("major"))
   }
 
+  test("a malformed integer option fails naming the option") {
+    val dir = tmpDir("intopt")
+    samplePoints.coalesce(1).writeLas(dir)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    def failsNaming(name: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(messages(e).contains(s"$name 'abc' is not an integer"), messages(e))
+    }
+    failsNaming("lasFormat")(
+      samplePoints.coalesce(1).writeLas(tmpDir("intopt-fmt"), Map("lasformat" -> "abc")))
+    failsNaming("laz.chunkSize")(
+      samplePoints.coalesce(1).writeLaz(tmpDir("intopt-laz"), Map("laz.chunkSize" -> "abc")))
+    failsNaming("copc.level")(
+      samplePoints.coalesce(1).writeCopc(tmpDir("intopt-copc"), Map("copc.level" -> "abc")))
+    Seq("maxFilesPerTrigger", "compactFileListThreshold").foreach { name =>
+      failsNaming(name) {
+        val q = spark.readStream.schema(spark.read.las(dir).schema).format("las")
+          .option(name, "abc").load(dir).writeStream.format("noop").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+    }
+  }
+
   test("idColumns=false suppresses fid/pid synthesis") {
     val dir = tmpDir("noids")
     samplePoints.writeLas(dir)
