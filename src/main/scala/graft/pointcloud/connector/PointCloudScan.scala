@@ -235,8 +235,11 @@ private[connector] object SectionSkip {
     }
 
   def mayMatch(range: Range, filters: Array[SourceFilter]): Boolean = {
+    // a NaN literal bounds nothing: Spark orders NaN above every value
+    // (`time < NaN` holds for every non-NaN record), while a double
+    // comparison with NaN is always false
     def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
+      case n: Number if !java.lang.Double.isNaN(n.doubleValue()) => Some(n.doubleValue())
       case _ => None
     }
     def one(f: SourceFilter): Boolean = f match {
